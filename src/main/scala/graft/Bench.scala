@@ -1,6 +1,15 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** `s` as a JSON string literal: the paths the two printed lines
+    * embed may hold quotes, backslashes or control characters. */
+  private def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default 32: the contract's local[32] box. Measured at sf0.1/149
@@ -31,7 +40,7 @@ object Bench {
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val fullLine =
-      s"""{"metric":"total","unit":"sec","sf":"$sfDir","queries":$qs,"value":$total}"""
+      s"""{"metric":"total","unit":"sec","sf":${jsonString(sfDir)},"queries":$qs,"value":$total}"""
     println(fullLine)
     // r18 (VERDICT r17 #1): the full line is ~6 KB, so the driver's
     // 2000-char stdout tail has NEVER contained a parseable JSON line
@@ -49,8 +58,9 @@ object Bench {
         java.nio.file.Paths.get("/proc/loadavg"))).trim
         .split("\\s+").take(3).mkString("[", ",", "]")
       catch { case _: Exception => "[]" }
-    println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","n":${results.size},""" +
-      s""""value":$total,"loadavg":$loadavg,"results":"$resultsPath"}""")
+    println(s"""{"metric":"total","unit":"sec","sf":${jsonString(sfDir)},""" +
+      s""""n":${results.size},"value":$total,"loadavg":$loadavg,""" +
+      s""""results":${jsonString(resultsPath.toString)}}""")
     spark.stop()
   }
 }

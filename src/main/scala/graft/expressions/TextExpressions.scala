@@ -334,18 +334,25 @@ case class BigramStats(child: Expression) extends UnaryExpression {
   * CollapseProject re-inlined the single-use alias straight back into
   * the lambda; a kernel over the binary has no hex round-trip for the
   * optimizer to duplicate). Sum of ≤2³¹ bytes of ≤255 fits a long with
-  * no overflow caveat. */
+  * no overflow caveat. NULL for a zero-length BINARY, as the
+  * declarative form returned (its `sequence(0, -1)` degenerates to
+  * [0, -1] over an empty hex string). */
 case class BinaryByteSum(child: Expression) extends UnaryExpression {
 
   // input must be BINARY; the call site (TextExpressions) casts
   override def dataType: DataType = LongType
 
-  override def nullSafeEval(input: Any): Any =
-    TextKernels.byteSum(input.asInstanceOf[Array[Byte]])
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(input: Any): Any = {
+    val b = input.asInstanceOf[Array[Byte]]
+    if (b.length == 0) null else TextKernels.byteSum(b)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expressions.TextKernels.byteSum($c);")
+    nullSafeCodeGen(ctx, ev, c => s"""
+      if ($c.length == 0) ${ev.isNull} = true;
+      else ${ev.value} = graft.expressions.TextKernels.byteSum($c);""")
 
   override protected def withNewChildInternal(newChild: Expression): BinaryByteSum =
     copy(child = newChild)

@@ -251,31 +251,30 @@ object Streaming {
     }
   )
 
-  /** One chronological-chunk artifact per (session, tier): the chunk
-    * content is a deterministic function of the tier's events table
-    * (equal-width time ranges, fixed mtimes), so repeated invocations
-    * in one session — the spec's parity suite, KeyProbe repeats —
-    * reuse the first write instead of re-scanning and re-sharding the
-    * events table each time (r16, VERDICT r15 #7; the sharedGridMember
-    * pattern). Table + checkpoint state stays per-RUN fresh below —
-    * the replay itself is the thing the key grades. */
-  private val chunkCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Unit]
-
-  /** Body of q_stream_upsert (separate so the spec can reuse it). */
+  /** Body of q_stream_upsert (separate so the spec can reuse it).
+    *
+    * The chronological chunks are one artifact per (session, tier) in
+    * [[graft.Memo]]: their content is a deterministic function of the
+    * tier's events table (equal-width time ranges, fixed mtimes), so
+    * repeated invocations in one session — the spec's parity suite,
+    * KeyProbe repeats — reuse the first write instead of re-scanning
+    * and re-sharding the events table each time (r16, VERDICT r15 #7).
+    * Table + checkpoint state stays per-RUN fresh below — the replay
+    * itself is the thing the key grades. The root sits next to
+    * `Sources.roundtripRoot`, so the library has one write root. */
   def streamUpsertFixpoint(s: SparkSession, dir: String): DataFrame = {
     val tier = graft.sources.Sources.tierTag(dir)
-    val root = s"/root/repo/target/stream_upsert/$tier"
+    val root = new java.io.File(graft.sources.Sources.roundtripRoot)
+      .getParent + s"/stream_upsert/$tier"
     val chunks = s"$root/chunks"
-    chunkCache.getOrElseUpdate(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(s), dir), {
-        graft.streaming.UpsertSink.deleteRecursively(
-          java.nio.file.Paths.get(chunks))
-        graft.streaming.EventStreams.writeChronologicalChunks(
-          Tables.events(s, dir).select(col("event_id"), col("user_id"),
-            col("event_type"), col("ts"), col("value")),
-          n = 4, destDir = chunks)
-      })
+    graft.Memo.artifact(s, dir, "stream_chunks") {
+      graft.streaming.UpsertSink.deleteRecursively(
+        java.nio.file.Paths.get(chunks))
+      graft.streaming.EventStreams.writeChronologicalChunks(
+        Tables.events(s, dir).select(col("event_id"), col("user_id"),
+          col("event_type"), col("ts"), col("value")),
+        n = 4, destDir = chunks)
+    }
     // the replay's OWN state must never survive a run: a leftover
     // checkpoint would resume past the chunks and grade nothing
     graft.streaming.UpsertSink.deleteRecursively(

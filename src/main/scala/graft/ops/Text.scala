@@ -237,7 +237,10 @@ object Text {
     // replaces the former explode + groupBy(doc_id, g) +
     // groupBy(doc_id) — two corpus-bigram shuffles gone. Pairs key on
     // xxhash64 of the bigram byte slice (the q_dedup_near keying; a
-    // within-doc 64-bit collision is the accepted negligible trade),
+    // within-doc 64-bit collision is the accepted negligible trade:
+    // the birthday bound for a doc with k distinct bigrams is
+    // k(k-1)/2^65, 2.7e-14 at k = 1,000, and under 3e-8 summed over a
+    // million such docs; the oracle below keys on the exact string),
     // and the divisions run on the identical integer inputs
     // (law-pinned equal to the two-aggregation form in
     // TextExpressionsSpec). The null/short-doc drop is a CHEAP
@@ -1074,6 +1077,8 @@ object Text {
         |LEFT JOIN hits h ON s.bench_id = h.bench_id
         |ORDER BY s.bench_id""".stripMargin,
 
+    // exact-string bigram keys; the Spark side's xxhash64 keys agree
+    // unless a within-doc collision occurs (bound at the query above)
     "q_text_repetition" ->
       """WITH d AS (
         |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents

