@@ -171,13 +171,20 @@ final case class Ensemble(df: DataFrame) {
   /** bcdp's generic `apply` escape hatch (R14), kept declarative. */
   def transform(f: DataFrame => DataFrame): Ensemble = Ensemble(f(df))
 
-  /** bcdp's `to_netcdf` terminal (r12): export one grid file per
-    * member — NetCDF-3 classic, or NetCDF-4/HDF5 with `hdf5 = true` —
-    * distributed at the read side's granularity (one task ⇔ one
-    * member's file). See [[graft.sources.NetcdfSource.writeGrid]]. */
+  /** bcdp's `to_netcdf` terminal: export one grid file per member —
+    * NetCDF-3 classic, or NetCDF-4/HDF5 with `hdf5 = true` — through
+    * the DSv2 `netcdf` sink (staged per task, committed by the driver,
+    * one task ⇔ one member's file). The values become variable
+    * `varName`; a member tag becomes its file basename (a `.nc`/`.h5`
+    * suffix is replaced), and an existing member of the same name is
+    * replaced while the others stay. */
   def toNetcdf(destDir: String, varName: String = "value",
                hdf5: Boolean = false): Unit =
-    graft.sources.NetcdfSource.writeGrid(df, destDir, varName, hdf5)
+    df.select(col("dataset"), lit(varName).as("variable"), col("time"),
+        col("lat"), col("lon"), col("value"))
+      .write.format("netcdf")
+      .option("container", if (hdf5) "hdf5" else "classic")
+      .mode("append").save(destDir)
 }
 
 object Ensemble {
@@ -187,17 +194,6 @@ object Ensemble {
     Ensemble(members.map { case (name, path) =>
       spark.read.parquet(path).withColumn("dataset", lit(name))
     }.reduce(_ unionByName _))
-
-  /** bcdp `load_local` for NetCDF-3 classic ensembles: every file the
-    * glob matches becomes a member (dataset = file basename), loaded
-    * distributed via NetcdfSource.readClassic. Coordinate-variable
-    * names are overridable for archives using latitude/longitude. */
-  def loadNetcdf(spark: SparkSession, pathGlob: String, varName: String,
-                 latVar: String = "lat", lonVar: String = "lon",
-                 timeVar: String = "time"): Ensemble =
-    Ensemble(graft.sources.NetcdfSource
-      .readClassic(spark, pathGlob, varName, latVar, lonVar, timeVar)
-      .select(col("dataset"), col("time"), col("lat"), col("lon"), col("value")))
 
   /** bcdp `load_local` for a Zarr v2 store (r17) — one member per
     * store; `bounds` prunes non-intersecting chunk files from the
@@ -211,22 +207,29 @@ object Ensemble {
       .select(col("dataset"), col("time"), col("lat"), col("lon"),
         col("value")))
 
-  /** bcdp `load_local` for MIXED archives (r12): format auto-detected
-    * per file from the magic bytes — NetCDF-3 classic and NetCDF-4/
-    * HDF5 (incl. chunked/compressed; see [[graft.sources.Hdf5Classic]])
-    * members load side by side, the mid-migration state every real
-    * CMIP mirror is in. `bounds` (r13) pushes a coordinate hyperslab
-    * into the scan — the load-time form of [[Ensemble.subset]]: rows
-    * outside never materialize, and compressed HDF5 chunks that don't
-    * intersect are never inflated. */
+  /** bcdp `load_local` for grid-file ensembles: every file the glob
+    * matches becomes a member (dataset = file basename), read through
+    * the DSv2 `netcdf` format with the format auto-detected per file
+    * from the magic bytes — NetCDF-3 classic and NetCDF-4/HDF5 (incl.
+    * chunked/compressed; see [[graft.sources.Hdf5Classic]]) members
+    * load side by side, the mid-migration state every real CMIP mirror
+    * is in. Every member must carry `varName`. Coordinate-variable
+    * names are overridable for archives using latitude/longitude.
+    * `bounds` filters by [[graft.sources.NetcdfSource.GridBounds.predicate]],
+    * which the scan takes as pushed filters — the load-time form of
+    * [[Ensemble.subset]]: rows outside never materialize, and
+    * compressed HDF5 chunks that don't intersect are never inflated. */
   def loadGrid(spark: SparkSession, pathGlob: String, varName: String,
                latVar: String = "lat", lonVar: String = "lon",
                timeVar: String = "time",
                bounds: Option[graft.sources.NetcdfSource.GridBounds] = None)
-      : Ensemble =
-    Ensemble(graft.sources.NetcdfSource
-      .readGrid(spark, pathGlob, varName, latVar, lonVar, timeVar, bounds)
+      : Ensemble = {
+    val grid = spark.read.format("netcdf").option("vars", varName)
+      .option("latVar", latVar).option("lonVar", lonVar)
+      .option("timeVar", timeVar).load(pathGlob)
+    Ensemble(bounds.fold(grid)(b => grid.filter(b.predicate))
       .select(col("dataset"), col("time"), col("lat"), col("lon"), col("value")))
+  }
 
   /** bcdp `load_esgf`'s local form (r15): members discovered and
     * facet-pruned through the [[graft.sources.NcCatalog]] manifest

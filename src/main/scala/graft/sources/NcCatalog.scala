@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * ESGF client does AFTER the HTTP GET is here:
   *
   *  1. [[buildManifest]] — a DISTRIBUTED sweep over a grid archive
-  *     (one task per member, the binaryFile granularity every grid
-  *     reader in this codebase uses) parses each member's
+  *     (one task per member, the per-file granularity the DSv2
+  *     `netcdf` scan uses too) parses each member's
   *     self-describing header and records its envelope: data
   *     variables, lat/lon extents, CF-decoded time range, byte size.
   *     The manifest is plain JSONL — the durable catalog artifact a
@@ -142,7 +142,8 @@ object NcCatalog {
     * by the member; `bounds` prunes on envelope OVERLAP (a member
     * whose recorded lat/lon/time box cannot intersect the request is
     * never opened; time bounds exclude static members, matching
-    * [[NetcdfSource.GridBounds]]' null-time comparison semantics);
+    * [[NetcdfSource.GridBounds.predicate]]'s null-time comparison
+    * semantics), then the survivors' rows filter by that predicate;
     * `datasetPattern` is a Java regex over the member tag. */
   def select(spark: SparkSession, manifestDir: String,
              variable: Option[String] = None,
@@ -180,13 +181,7 @@ object NcCatalog {
     val filtered = Seq[DataFrame => DataFrame](
       df => variable.fold(df)(v => df.filter(col("variable") === v)),
       df => datasetPattern.fold(df)(p => df.filter(col("dataset").rlike(p))),
-      df => bounds.fold(df) { b =>
-        var c = col("lat") >= b.latMin && col("lat") <= b.latMax &&
-          col("lon") >= b.lonMin && col("lon") <= b.lonMax
-        b.timeMin.foreach(t => c = c && col("time") >= lit(t))
-        b.timeMax.foreach(t => c = c && col("time") <= lit(t))
-        df.filter(c)
-      }
+      df => bounds.fold(df)(b => df.filter(b.predicate))
     ).foldLeft(base)((df, f) => f(df))
     filtered
   }

@@ -1,35 +1,29 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 
-/** NetCDF ingestion (bcdp R1 analog).
+/** NetCDF/HDF5 grid-format helpers (bcdp R1 analog).
   *
   * The reference loads ensembles of gridded NetCDF files
-  * (`open_mfdataset` + filename-template metadata extraction). No
-  * NetCDF *library* ships in this offline container — but NetCDF-3
-  * CLASSIC is a small public binary spec, so round 2 ships a
-  * dependency-free parser ([[NetcdfClassic]]) and [[readClassic]], a
-  * REAL distributed loader: Spark's `binaryFile` source hands each
-  * task whole files (the per-file granularity NetCDF forces — a
-  * multi-TB ensemble is thousands of files, so parallelism comes from
-  * the file count, exactly like dask's per-file chunks in the
-  * reference), each task parses its file and emits long-form rows, and
-  * everything downstream (subset pushdown on the emitted frame,
-  * regrid, climatology) is ordinary engine code.
+  * (`open_mfdataset` + filename-template metadata extraction). The
+  * formats are parsed without a NetCDF library dependency: NetCDF-3
+  * classic by [[NetcdfClassic]] and NetCDF-4/HDF5 (magic `\x89HDF`) by
+  * [[Hdf5Classic]] — superblocks v0–v3, v1 and v2/OHDR object headers,
+  * symbol-table and compact-link groups, contiguous/compact/chunked
+  * layouts, and the standard filter pipeline (deflate via the JDK's
+  * `java.util.zip.Inflater`, shuffle, fletcher32, NBIT, SCALEOFFSET).
+  * Only szip (a genuinely native codec) rejects with a NAMED error.
   *
-  * NetCDF-4/HDF5 files (magic `\x89HDF`) load through the same
-  * pipeline via [[Hdf5Classic]] (r12): superblocks v0–v3, v1 and
-  * v2/OHDR object headers, symbol-table and compact-link groups,
-  * contiguous/compact/chunked layouts (v1 raw-data-chunk B-tree), and
-  * the standard compression pipeline — deflate via the JDK's built-in
-  * `java.util.zip.Inflater`, byte shuffle, fletcher32, per-chunk
-  * filter masks — all dependency-free, so ordinary compressed
-  * netCDF-4 archives load, and (r14) the NBIT and SCALEOFFSET
-  * bit-manipulation filters decode too (packed-integer sensor data,
-  * D-scaled floats). Only szip (a genuinely native codec) rejects
-  * with a NAMED error. [[readGrid]] auto-detects the format per
-  * file.
+  * Every grid read and write goes through the DataSourceV2 `netcdf`
+  * format ([[NetcdfV2]]): `spark.read.format("netcdf")` emits the long
+  * form with Catalyst-pushed hyperslab pruning, and
+  * `df.write.format("netcdf")` is the staged, driver-committed sink.
+  * This object holds what that source shares with the catalog and the
+  * Zarr store: CF time decoding, [[GridBounds]], the format-agnostic
+  * [[GridView]] over one parsed file, the fill mask, and the member
+  * encoder [[buildMemberBytes]].
   */
 object NetcdfSource {
 
@@ -84,35 +78,37 @@ object NetcdfSource {
     }
   }
 
-  /** Epoch-µs → Timestamp with full microsecond precision (floor
-    * semantics for pre-1970 instants — truncating division would shift
-    * negative epochs 1 ms late). */
-  private def microsToTimestamp(us: Long): java.sql.Timestamp = {
-    val ts = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-    ts.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-    ts
-  }
-
-  /** The two self-describing grid container formats behind ONE view:
-    * axis names of a variable, raw values, and an attribute lookup.
-    * NetCDF-3 names axes via dim ids; NetCDF-4/HDF5 via DIMENSION_LIST
-    * dimension scales (see [[Hdf5Classic]]). */
-  /** Coordinate-space hyperslab bounds for [[readGrid]] (r13): closed
-    * intervals on lat/lon and optional closed time endpoints. The
-    * bounded read produces EXACTLY the rows `readGrid(...).filter`
-    * would with the same predicates (time bounds drop null-time
-    * static-grid rows, matching SQL comparison-with-NULL semantics) —
-    * but on chunked/compressed HDF5 the non-intersecting chunks are
-    * pruned BEFORE decompression ([[Hdf5Classic.H5File.readSlab]]),
-    * the scan-level pushdown a 100-TB `subset(bounds)` needs. */
+  /** Coordinate-space hyperslab bounds: closed intervals on lat/lon
+    * and optional closed time endpoints. [[predicate]] is their ONE
+    * translation into a row filter; over `format("netcdf")` every atom
+    * is pushed into the scan, so on chunked/compressed HDF5 the
+    * non-intersecting chunks are pruned BEFORE decompression
+    * ([[Hdf5Classic.H5File.readSlab]]) — the scan-level pushdown a
+    * 100-TB `subset(bounds)` needs. */
   final case class GridBounds(
       latMin: Double = Double.NegativeInfinity,
       latMax: Double = Double.PositiveInfinity,
       lonMin: Double = Double.NegativeInfinity,
       lonMax: Double = Double.PositiveInfinity,
       timeMin: Option[java.sql.Timestamp] = None,
-      timeMax: Option[java.sql.Timestamp] = None)
+      timeMax: Option[java.sql.Timestamp] = None) {
+    /** All four lat/lon comparisons, infinite bounds included — a NaN
+      * coordinate fails `<= +Infinity` in Spark's NaN-greatest order, so
+      * ANY bounded read drops it — plus a comparison per SET time bound
+      * (which drops null-time static-grid rows, SQL comparison-with-NULL
+      * semantics). */
+    def predicate: Column = {
+      val latLon = col("lat") >= latMin && col("lat") <= latMax &&
+        col("lon") >= lonMin && col("lon") <= lonMax
+      (timeMin.map(col("time") >= lit(_)) ++ timeMax.map(col("time") <= lit(_)))
+        .foldLeft(latLon)(_ && _)
+    }
+  }
 
+  /** The two self-describing grid container formats behind ONE view:
+    * axis names of a variable, raw values, and an attribute lookup.
+    * NetCDF-3 names axes via dim ids; NetCDF-4/HDF5 via DIMENSION_LIST
+    * dimension scales (see [[Hdf5Classic]]). */
   private[sources] sealed trait GridView {
     /** Every dataset/variable name in the file (coordinates included) —
       * the DSv2 source's variable discovery walks this. */
@@ -175,214 +171,18 @@ object NetcdfSource {
       new ClassicView(NetcdfClassic.parse(bytes))
     else new Hdf5View(Hdf5Classic.parse(bytes)) // parse names bad magic
 
-  /** Shared long-form emitter: one file's (time,lat,lon) or (lat,lon)
-    * variable → GridRow iterator (row-major, records outermost).
-    *
-    * Applies the CF mask-and-scale conventions the reference applies
-    * by default (xarray `open_dataset(mask_and_scale=True)`): cells
-    * equal to `_FillValue` (or the legacy `missing_value`) are MISSING
-    * and emit NO row — the Spark-native representation of a masked
-    * cell, and what makes [[writeGrid]] → read a true inverse on
-    * sparse grids — and packed data unpacks as
-    * `raw * scale_factor + add_offset` (CMIP obs archives short-pack
-    * routinely). */
-  private def emitRows(g: GridView, path: String, varName: String,
-                       latVar: String, lonVar: String, timeVar: String,
-                       bounds: Option[GridBounds] = None): Iterator[GridRow] = {
-    val dimNames = g.dimsOf(varName)
-    val lats = g.read(latVar)
-    val lons = g.read(lonVar)
-    val ds = path.substring(path.lastIndexOf('/') + 1)
-    val scale = g.numAttr(varName, "scale_factor").getOrElse(1.0)
-    val offset = g.numAttr(varName, "add_offset").getOrElse(0.0)
-    val fill = g.numAttr(varName, "_FillValue")
-      .orElse(g.numAttr(varName, "missing_value"))
+  /** The CF missing-data mask of one variable (xarray
+    * `mask_and_scale=True`): `fill` is its `_FillValue`, else the
+    * legacy `missing_value`; a cell equal to it is MISSING and emits no
+    * row (a NaN fill matches NaN cells). `fill = None` means every cell
+    * is present — the aggregate reader's metadata-only regime. */
+  private[sources] final case class FillMask(fill: Option[Double]) {
     def present(raw: Double): Boolean =
       fill.forall(f => !(raw == f || (f.isNaN && raw.isNaN)))
-    // bounds=None keeps the ORIGINAL whole-variable path verbatim: no
-    // per-axis predicates (a NaN coordinate still emits — Java's
-    // NaN >= -Inf is false, so routing the default through the bounded
-    // predicates would silently drop it; r13 review find) and no
-    // full-cover gather copy on the hot default scan.
-    // With bounds SET, the per-row predicates below match what
-    // `readGrid(...).filter` computes on every input including NaN
-    // coordinates: Java `NaN >= lo && NaN <= hi` is false, and in
-    // Spark's NaN-greatest total order a NaN coordinate passes `>= lo`
-    // but fails `<= hi` for every non-NaN hi (+Infinity included) —
-    // both drop the row, so the equivalence law holds.
-    dimNames match {
-      case Seq(`timeVar`, `latVar`, `lonVar`) =>
-        val units = g.unitsOf(timeVar)
-          .getOrElse(throw new IllegalArgumentException(
-            s"time variable '$timeVar' has no units attribute"))
-        val (base, step) = cfTimeBase(units)
-        val times = g.read(timeVar).map(t =>
-          microsToTimestamp(base + math.round(t * step)))
-        bounds match {
-          case None =>
-            val data = g.read(varName)
-            for {
-              ti <- times.indices.iterator
-              li <- lats.indices
-              oi <- lons.indices
-              raw = data((ti * lats.length + li) * lons.length + oi)
-              if present(raw)
-            } yield GridRow(ds, varName, times(ti), lats(li), lons(oi),
-              raw * scale + offset)
-          case Some(b) =>
-            // in-bounds index set per axis, and its covering contiguous
-            // range: the slab read fetches the cover (exact for the
-            // monotonic axes every real grid has), the per-row
-            // predicate re-filters exactly, so non-monotonic axes stay
-            // CORRECT, just less pruned
-            def inLat(i: Int) = lats(i) >= b.latMin && lats(i) <= b.latMax
-            def inLon(i: Int) = lons(i) >= b.lonMin && lons(i) <= b.lonMax
-            def inT(i: Int) =
-              b.timeMin.forall(t => !times(i).before(t)) &&
-                b.timeMax.forall(t => !times(i).after(t))
-            val laIdx = lats.indices.filter(inLat)
-            val loIdx = lons.indices.filter(inLon)
-            val tIdx = times.indices.filter(inT)
-            if (tIdx.isEmpty || laIdx.isEmpty || loIdx.isEmpty)
-              return Iterator.empty
-            val (t0, t1) = (tIdx.min, tIdx.max)
-            val (a0, a1) = (laIdx.min, laIdx.max)
-            val (o0, o1) = (loIdx.min, loIdx.max)
-            val (nLa, nLo) = (a1 - a0 + 1, o1 - o0 + 1)
-            val data = g.readSlab(varName,
-              Seq(t0, a0, o0), Seq(t1 - t0 + 1, nLa, nLo),
-              Seq(times.length, lats.length, lons.length))
-            for {
-              ti <- (t0 to t1).iterator if inT(ti)
-              li <- a0 to a1 if inLat(li)
-              oi <- o0 to o1 if inLon(oi)
-              raw = data(((ti - t0) * nLa + (li - a0)) * nLo + (oi - o0))
-              if present(raw)
-            } yield GridRow(ds, varName, times(ti), lats(li), lons(oi),
-              raw * scale + offset)
-        }
-      case Seq(`latVar`, `lonVar`) =>
-        bounds match {
-          case None =>
-            val data = g.read(varName)
-            for {
-              li <- lats.indices.iterator
-              oi <- lons.indices
-              raw = data(li * lons.length + oi)
-              if present(raw)
-            } yield GridRow(ds, varName, null, lats(li), lons(oi),
-              raw * scale + offset)
-          case Some(b) =>
-            def inLat(i: Int) = lats(i) >= b.latMin && lats(i) <= b.latMax
-            def inLon(i: Int) = lons(i) >= b.lonMin && lons(i) <= b.lonMax
-            val laIdx = lats.indices.filter(inLat)
-            val loIdx = lons.indices.filter(inLon)
-            // a static (lat, lon) field has NULL time: a time bound
-            // drops every row, exactly like a SQL comparison with NULL
-            if (b.timeMin.nonEmpty || b.timeMax.nonEmpty ||
-                laIdx.isEmpty || loIdx.isEmpty)
-              return Iterator.empty
-            val (a0, a1) = (laIdx.min, laIdx.max)
-            val (o0, o1) = (loIdx.min, loIdx.max)
-            val (nLa, nLo) = (a1 - a0 + 1, o1 - o0 + 1)
-            val data = g.readSlab(varName, Seq(a0, o0), Seq(nLa, nLo),
-              Seq(lats.length, lons.length))
-            for {
-              li <- (a0 to a1).iterator if inLat(li)
-              oi <- o0 to o1 if inLon(oi)
-              raw = data((li - a0) * nLo + (oi - o0))
-              if present(raw)
-            } yield GridRow(ds, varName, null, lats(li), lons(oi),
-              raw * scale + offset)
-        }
-      case other => throw new IllegalArgumentException(
-        s"unsupported dim layout $other for '$varName' " +
-          s"(expected ($timeVar, $latVar, $lonVar) or ($latVar, $lonVar))")
-    }
   }
+  private[sources] def fillMask(g: GridView, v: String): FillMask =
+    FillMask(g.numAttr(v, "_FillValue").orElse(g.numAttr(v, "missing_value")))
 
-  /** Distributed grid-file ensemble → long-form DataFrame, format
-    * auto-detected PER FILE from the magic bytes (a mixed NetCDF-3 /
-    * NetCDF-4 archive — common mid-migration — loads in one call).
-    * Supports (time, lat, lon) and (lat, lon) variables; `dataset` is
-    * the file basename (compose with [[withPathFields]] for template
-    * fields). Parallelism comes from the file count, exactly like
-    * dask's per-file chunks in the reference.
-    *
-    * `bounds` (r13) pushes a coordinate hyperslab INTO the scan: rows
-    * outside it never materialize, and on chunked/compressed HDF5 the
-    * non-intersecting chunks are never even decompressed
-    * ([[Hdf5Classic.H5File.readSlab]]) — identical rows to
-    * `readGrid(...).filter(...)`, pinned by the NetcdfSpec pruning
-    * law, at a fraction of the scan work. */
-  def readGrid(spark: SparkSession, pathGlob: String, varName: String,
-               latVar: String = "lat", lonVar: String = "lon",
-               timeVar: String = "time",
-               bounds: Option[GridBounds] = None): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(pathGlob)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        emitRows(openGrid(bytes), path, varName, latVar, lonVar, timeVar,
-          bounds)
-      }
-      .toDF()
-  }
-
-  /** Multi-variable grid load (xarray `Dataset` fidelity: a real CMIP
-    * file carries several data variables on shared axes). Each file is
-    * parsed ONCE and emits rows for every requested variable; the
-    * long-form `variable` column distinguishes them, so downstream
-    * per-variable pipelines are ordinary `filter`/`groupBy("variable")`
-    * plans. Format auto-detected per file like [[readGrid]]. */
-  def readGridVars(spark: SparkSession, pathGlob: String,
-                   varNames: Seq[String],
-                   latVar: String = "lat", lonVar: String = "lon",
-                   timeVar: String = "time",
-                   bounds: Option[GridBounds] = None): DataFrame = {
-    require(varNames.nonEmpty, "readGridVars needs at least one variable")
-    import spark.implicits._
-    spark.read.format("binaryFile").load(pathGlob)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val g = openGrid(bytes)
-        varNames.iterator.flatMap(v =>
-          emitRows(g, path, v, latVar, lonVar, timeVar, bounds))
-      }
-      .toDF()
-  }
-
-  /** Distributed NetCDF-3 classic → long-form DataFrame (rejects HDF5
-    * files with the classic parser's magic error — use [[readHdf5]] or
-    * [[readGrid]] for NetCDF-4). */
-  def readClassic(spark: SparkSession, pathGlob: String, varName: String,
-                  latVar: String = "lat", lonVar: String = "lon",
-                  timeVar: String = "time"): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(pathGlob)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        emitRows(new ClassicView(NetcdfClassic.parse(bytes)), path,
-          varName, latVar, lonVar, timeVar)
-      }
-      .toDF()
-  }
-
-  /** Distributed NetCDF-4/HDF5 (contiguous, compact, and chunked incl.
-    * deflate/shuffle/fletcher32 — see [[Hdf5Classic]] for the precise
-    * scope and the remaining named rejections) → long-form DataFrame. */
-  def readHdf5(spark: SparkSession, pathGlob: String, varName: String,
-               latVar: String = "lat", lonVar: String = "lon",
-               timeVar: String = "time"): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(pathGlob)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        emitRows(new Hdf5View(Hdf5Classic.parse(bytes)), path,
-          varName, latVar, lonVar, timeVar)
-      }
-      .toDF()
-  }
   val longFormSchema: StructType = StructType(Seq(
     StructField("dataset", StringType),
     StructField("variable", StringType),
@@ -393,43 +193,16 @@ object NetcdfSource {
     StructField("value", DoubleType),
     StructField("attrs", MapType(StringType, StringType))))
 
-  /** bcdp's `to_netcdf` terminal (the reference pipeline's export
-    * step): write a long-form ensemble back out as ONE grid file per
-    * member — NetCDF-3 classic or NetCDF-4/HDF5 per `hdf5`.
-    *
-    * Distributed by the same granularity the READ side uses (one task
-    * ⇔ one member's file): `repartition(dataset)` co-locates each
-    * member, `sortWithinPartitions` makes members contiguous, and each
-    * task streams its partition once, assembling one member grid at a
-    * time — peak task memory is ONE member's dense grid, the same
-    * bound parsing imposes. `destDir` must be a path every executor
-    * can write (shared FS at cluster scale; local FS on local[n]).
-    *
-    * Grid semantics: axes are the member's distinct sorted lat/lon/
-    * time values; cells absent from the input are filled NaN; times
-    * are written CF "microseconds since 1970-01-01" (a CF-legal unit;
-    * every epoch-µs value below 2^53 ≈ year 2255 is an integral double,
-    * so the write→read round-trip is exact at full µs precision — r13,
-    * replacing the seconds-with-fraction encoding whose sub-second
-    * values drifted ±1 µs past ~2041). A member
-    * whose rows ALL have a null time (the (lat, lon) static-grid form
-    * emitRows produces) writes a 2-D file; mixing null and non-null
-    * times in one member is a caller error, rejected by name, as is a
-    * duplicate (time, lat, lon) cell (pass ONE variable at a time — a
-    * readGridVars frame must be filtered or pivoted first; silent
-    * last-write-wins would lose data). Member tags become file
-    * basenames and must be path-safe. */
   /** Sentinel for a null timestamp (2-D static-grid member). */
   private[sources] val NoTime = Long.MinValue
 
-  /** ONE member's on-disk bytes from its long-form cells — the single
-    * implementation behind [[writeGrid]] and the DSv2 writer
-    * ([[NetcdfV2]]), so a grid-encoding fix can never reach one sink
-    * and miss the other. Cells are (epoch-µs | NoTime, lat, lon, value);
+  /** ONE single-variable member's on-disk bytes from its long-form
+    * cells, via [[buildMemberBytesMulti]] (the encoder behind the DSv2
+    * `netcdf` sink). Cells are (epoch-µs | NoTime, lat, lon, value);
     * axes are the distinct sorted coordinates, absent cells NaN-filled
-    * and declared `_FillValue` so both mask-and-scale readers drop
-    * them (write→read is the identity on sparse grids). */
-  private[sources] def buildMemberBytes(
+    * and declared `_FillValue` so mask-and-scale readers (ours, and
+    * xarray's) drop them (write→read is the identity on sparse grids). */
+  private[graft] def buildMemberBytes(
       ds: String, buf: Seq[(Long, Double, Double, Double)],
       varName: String, hdf5: Boolean): Array[Byte] =
     buildMemberBytesMulti(ds,
@@ -506,39 +279,13 @@ object NetcdfSource {
     else NetcdfClassic.write(dims, vars)
   }
 
-  def writeGrid(df: DataFrame, destDir: String, varName: String = "value",
-                hdf5: Boolean = false): Unit = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.functions.col
-    new java.io.File(destDir).mkdirs()
-    val ext = if (hdf5) "h5" else "nc"
-    df.select(col("dataset"), col("time"), col("lat"), col("lon"), col("value"))
-      .repartition(col("dataset"))
-      .sortWithinPartitions(col("dataset"))
-      .foreachPartition { (rows: Iterator[Row]) =>
-        def flush(ds: String, buf: Seq[(Long, Double, Double, Double)]): Unit =
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"$destDir/$ds.$ext"),
-            buildMemberBytes(ds, buf, varName, hdf5))
-        var cur: String = null
-        val buf = scala.collection.mutable.ArrayBuffer
-          .empty[(Long, Double, Double, Double)]
-        rows.foreach { r =>
-          val ds = r.getString(0)
-          if (ds != cur && cur != null) { flush(cur, buf.toSeq); buf.clear() }
-          cur = ds
-          val ts = if (r.isNullAt(1)) NoTime
-            else r.getTimestamp(1).getTime * 1000L +
-              (r.getTimestamp(1).getNanos / 1000L) % 1000L
-          buf += ((ts, r.getDouble(2), r.getDouble(3), r.getDouble(4)))
-        }
-        if (cur != null) flush(cur, buf.toSeq)
-      }
-  }
-
   /** Filename-template metadata extraction, e.g.
     * "{model}_{variable}_{start}.nc" — the R1 path-parsing feature as a
-    * pure-Column transform usable on any file-based source. */
+    * pure-Column transform over `input_file_name()`, for file sources
+    * that populate it (parquet, CSV, JSON, `binaryFile`). It is EMPTY
+    * over a DSv2 `format("netcdf")` scan, so a NetCDF frame carries its
+    * member's basename in `dataset` instead — extract template fields
+    * from that column. */
   def withPathFields(df: DataFrame, pattern: String, fields: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._
     fields.zipWithIndex.foldLeft(df) { case (d, (f, i)) =>
@@ -547,7 +294,7 @@ object NetcdfSource {
   }
 
   /** Long-form parquet fallback (pre-exported NetCDF-4 data, or the
-    * output of a one-time `readClassic → parquet` normalization). */
+    * output of a one-time `format("netcdf")` → parquet normalization). */
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(longFormSchema).parquet(path)
 }

@@ -23,8 +23,8 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** NetCDF-3 / NetCDF-4(HDF5) grid archives as a REAL DataSourceV2
-  * format — the Spark-idiomatic form of [[NetcdfSource.readGrid]]
-  * where Catalyst, not the caller, drives the scan pruning:
+  * format — the ONE read and write path for grid files, where
+  * Catalyst, not the caller, drives the scan pruning:
   *
   * {{{
   * spark.read.format("netcdf")          // registered short name
@@ -50,17 +50,19 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * greatest, NaN == NaN, -0.0 == 0.0 — a NaN coordinate behaves
   * bit-for-bit as if the filter ran post-scan), so every accepted
   * filter is FULLY handled: Spark re-evaluates nothing, and the
-  * DSv2 read with filters is row-identical to
-  * `readGrid(...).filter(...)` (law-pinned in NetcdfV2Spec, including
-  * NaN-coordinate and corrupt-pruned-chunk fixtures). Comparisons the
+  * DSv2 read with filters is row-identical to the unfiltered read
+  * filtered by Spark (law-pinned in NetcdfV2Spec against a
+  * pushdown-free `localCheckpoint()` of the unfiltered read, including
+  * NaN-coordinate and -0.0 fixtures). Comparisons the
   * scan cannot prove exact (`value` predicates, OR trees, null-safe
   * forms) are declined and stay residual — declining only ever costs
   * pruning, never correctness.
   *
-  * Parallelism is one partition per file, exactly like the
-  * `binaryFile`-based [[NetcdfSource.readGrid]] (per-file granularity
-  * is what the container formats force; a multi-TB archive is
-  * thousands of members). `estimateStatistics` reports the pruned
+  * Parallelism is one partition per file (per-file granularity is
+  * what the container formats force; a multi-TB archive is thousands
+  * of members, like dask's per-file chunks in the reference), each
+  * partition parsing its member with the format auto-detected from
+  * the magic bytes. `estimateStatistics` reports the pruned
   * byte total so AQE and join planning see the post-pushdown size.
   *
   * The SESSION's Hadoop configuration (`sessionState.newHadoopConf()`,
@@ -84,8 +86,8 @@ class NetcdfV2 extends TableProvider with DataSourceRegister {
 }
 
 object NetcdfV2 {
-  /** Long-form grid schema — field-for-field [[NetcdfSource.GridRow]]
-    * (the equality law DSv2 == readGrid needs identical schemas). */
+  /** Long-form grid schema — field-for-field [[NetcdfSource.GridRow]],
+    * the row shape the Zarr reader emits too. */
   val schema: StructType = StructType(Seq(
     StructField("dataset", StringType),
     StructField("variable", StringType),
@@ -706,9 +708,7 @@ private class NcAggReader(p: NcAggPartition, pushed: NetcdfV2.NcPushed,
     val dims = g.dimsOf(v)
     val lats = g.read(p.latVar)
     val lons = g.read(p.lonVar)
-    val fill = g.numAttr(v, "_FillValue").orElse(g.numAttr(v, "missing_value"))
-    def present(raw: Double): Boolean =
-      fill.forall(f => !(raw == f || (f.isNaN && raw.isNaN)))
+    val mask = NetcdfSource.fillMask(g, v)
     val laIdx = lats.indices.filter(i => pushed.latOk(lats(i)))
     val loIdx = lons.indices.filter(i => pushed.lonOk(lons(i)))
 
@@ -721,7 +721,7 @@ private class NcAggReader(p: NcAggPartition, pushed: NetcdfV2.NcPushed,
         val times = g.read(p.timeVar).map(t => base + math.round(t * step))
         val tIdx = times.indices.filter(i => pushed.timeOk(times(i)))
         if (tIdx.nonEmpty && laIdx.nonEmpty && loIdx.nonEmpty) {
-          if (fill.isEmpty) {
+          if (mask.fill.isEmpty) {
             // metadata-only: every selected cell emits — count the
             // index-set product, fold the axis values
             val n = tIdx.size.toLong * laIdx.size * loIdx.size
@@ -744,7 +744,7 @@ private class NcAggReader(p: NcAggPartition, pushed: NetcdfV2.NcPushed,
               ti <- t0 to t1 if pushed.timeOk(times(ti))
               li <- a0 to a1 if pushed.latOk(lats(li))
               oi <- o0 to o1 if pushed.lonOk(lons(oi))
-              if present(data(((ti - t0) * nLa + (li - a0)) * nLo + (oi - o0)))
+              if mask.present(data(((ti - t0) * nLa + (li - a0)) * nLo + (oi - o0)))
             } {
               nRows += 1; nTime += 1
               tMin = updL(tMin, times(ti), true)
@@ -757,7 +757,7 @@ private class NcAggReader(p: NcAggPartition, pushed: NetcdfV2.NcPushed,
         // static grid: time NULL — counts toward count(*), never toward
         // count(time) or min/max(time) (SQL null semantics)
         if (pushed.timeOkNull && laIdx.nonEmpty && loIdx.nonEmpty) {
-          if (fill.isEmpty) {
+          if (mask.fill.isEmpty) {
             nRows += laIdx.size.toLong * loIdx.size
             laIdx.foreach(i => { latMin = updD(latMin, lats(i), true)
               latMax = updD(latMax, lats(i), false) })
@@ -772,7 +772,7 @@ private class NcAggReader(p: NcAggPartition, pushed: NetcdfV2.NcPushed,
             for {
               li <- a0 to a1 if pushed.latOk(lats(li))
               oi <- o0 to o1 if pushed.lonOk(lons(oi))
-              if present(data((li - a0) * nLo + (oi - o0)))
+              if mask.present(data((li - a0) * nLo + (oi - o0)))
             } {
               nRows += 1
               seenAxes(lats(li), lons(oi))
@@ -1037,10 +1037,15 @@ private class NcMicroBatchStream(pathGlobs: Seq[String],
   override def stop(): Unit = ()
 }
 
-/** One file → pruned long-form rows. Mirrors
-  * [[NetcdfSource.emitRows]]' bounded path, with the pushed atoms
-  * evaluated Spark-exactly per coordinate: in-predicate index sets per
-  * axis, their contiguous cover fetched through the chunk-pruned
+/** One file → pruned long-form rows — the only long-form row emitter
+  * for grid files. Supports (time, lat, lon) and (lat, lon) variables;
+  * CF times decode through [[NetcdfSource.cfTimeBase]]; the CF
+  * mask-and-scale conventions apply (xarray's
+  * `open_dataset(mask_and_scale=True)` defaults): a fill cell emits NO
+  * row ([[NetcdfSource.FillMask]]) and packed data unpacks as
+  * `raw * scale_factor + add_offset`. The pushed atoms are evaluated
+  * Spark-exactly per coordinate: in-predicate index sets per axis,
+  * their contiguous cover fetched through the chunk-pruned
   * [[NetcdfSource.GridView.readSlab]], per-cell re-check (exact on
   * non-monotonic axes too — the cover only ever over-fetches). */
 private class NcReader(p: NcPartition, pushed: NetcdfV2.NcPushed,
@@ -1052,10 +1057,11 @@ private class NcReader(p: NcPartition, pushed: NetcdfV2.NcPushed,
     val g = NetcdfSource.openGrid(NetcdfV2.readFileBytes(p.path, conf.value))
     val ds = new Path(p.path).getName
     // explicit `vars` option: every named variable must exist in every
-    // member (rowsFor throws the reader's named error otherwise — loud,
-    // like readGridVars). Absent: THIS file's own data variables —
-    // (time,lat,lon)/(lat,lon) layouts, axes and dim scales excluded —
-    // so mixed archives contribute each member's full variable set.
+    // member (rowsFor throws the reader's named error otherwise — a
+    // missing variable is never silently skipped). Absent: THIS file's
+    // own data variables — (time,lat,lon)/(lat,lon) layouts, axes and
+    // dim scales excluded — so mixed archives contribute each member's
+    // full variable set.
     val vars = p.vars.getOrElse {
       val axes = Set(p.latVar, p.lonVar, p.timeVar)
       g.varNames.filterNot(axes).filter { v =>
@@ -1089,15 +1095,13 @@ private class NcReader(p: NcPartition, pushed: NetcdfV2.NcPushed,
     val lons = g.read(p.lonVar)
     val scale = g.numAttr(v, "scale_factor").getOrElse(1.0)
     val offset = g.numAttr(v, "add_offset").getOrElse(0.0)
-    val fill = g.numAttr(v, "_FillValue").orElse(g.numAttr(v, "missing_value"))
-    def present(raw: Double): Boolean =
-      fill.forall(f => !(raw == f || (f.isNaN && raw.isNaN)))
+    val mask = NetcdfSource.fillMask(g, v)
     val dsU = UTF8String.fromString(ds)
     val vU = UTF8String.fromString(v)
 
     def emit(tUs: java.lang.Long, lat: Double, lon: Double,
              raw: Double): Option[InternalRow] =
-      if (!present(raw)) None
+      if (!mask.present(raw)) None
       else {
         // a FRESH row per cell: Spark's row-based DSv2 path buffers
         // reader output without copying, so a reused row would turn
@@ -1187,23 +1191,27 @@ private class NcReader(p: NcPartition, pushed: NetcdfV2.NcPushed,
 //
 // Input is the table's OWN long form (dataset, variable, time, lat,
 // lon, value) — exactly what the read side emits, so
-// read(a).write(b) is an archive copy and writeGrid callers migrate by
-// adding a `variable` literal. One member FILE per `dataset`, holding
-// every variable of that member on the UNION of its observed axes
-// (NaN-filled where a variable lacks a cell — declared _FillValue, so
-// the long-form round-trip is the identity; the xarray Dataset model).
+// read(a).write(b) is an archive copy, and a single-variable frame
+// exports by adding a `variable` literal (Ensemble.toNetcdf). One
+// member FILE per `dataset`, holding every variable of that member on
+// the UNION of its observed axes (NaN-filled where a variable lacks a
+// cell — declared _FillValue, so the long-form round-trip is the
+// identity; the xarray Dataset model). Times are written CF
+// "microseconds since 1970-01-01" (exact below 2^53 µs); a member whose
+// times are ALL null writes a static (lat, lon) file; mixed null and
+// non-null times, or duplicate cells, reject by name
+// (NetcdfSource.buildMemberBytesMulti).
 //
-// Two properties the foreachPartition sink (NetcdfSource.writeGrid)
-// cannot give:
 //  - TASK-COMMIT SAFETY: writers emit to a per-attempt staging dir and
 //    the files reach the destination only in the driver's
 //    BatchWrite.commit — a retried/speculated attempt can never leave
-//    a torn or duplicate member behind (writeGrid documents its
-//    direct-write caveat instead);
+//    a torn or duplicate member behind;
 //  - PLANNED CLUSTERING: the Write declares
 //    RequiresDistributionAndOrdering (cluster + sort by `dataset`), so
-//    Spark inserts the exchange/sort — callers cannot forget the
-//    repartition that writeGrid must do internally.
+//    Spark inserts the exchange/sort — callers never repartition by
+//    hand, and one task holds one member's cells at a time;
+//  - MODES: append replaces only same-name members; overwrite
+//    truncates every prior .nc/.h5 member of the destination.
 // ======================================================================
 
 private class NcWriteBuilder(options: CaseInsensitiveStringMap,

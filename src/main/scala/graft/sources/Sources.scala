@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
@@ -285,10 +285,10 @@ object Sources {
     // Grid round-trips (r12): events are bucketed into a dense
     // (day, lat, lon) COUNT grid — built DISTRIBUTED (distinct-axis
     // cross join + left join, no driver collect) — exported through
-    // the REAL distributed NetcdfSource.writeGrid sink (one task ⇔ one
-    // member file; the hdf5 twin exercises dimension scales,
-    // DIMENSION_LIST through the global heap, and the CF time axis),
-    // re-read through readGrid, and fingerprinted per latitude row.
+    // the DSv2 `netcdf` sink (one task ⇔ one member file; the hdf5
+    // twin exercises dimension scales, DIMENSION_LIST through the
+    // global heap, and the CF time axis), re-read through
+    // `format("netcdf")`, and fingerprinted per latitude row.
     // The oracle recomputes the fingerprint from the BASE events table
     // (DuckDB reads neither format) — equality holds iff
     // grid-build→write→parse→CF-decode→long-form emission is lossless.
@@ -309,32 +309,33 @@ object Sources {
     "q_source_zarr_subset" -> ((s, dir) => zarrRoundtrip(s, dir,
       Some(NetcdfSource.GridBounds(latMin = 5.0, lonMax = 125.0)))),
     // r13: the HYPERSLAB-PUSHDOWN read graded end-to-end — same grid
-    // build, but the read-back pushes GridBounds(latMin=5, lonMax=125)
-    // INTO the scan (keeps lat rows 10/20 and lon columns 100/110/120);
-    // the oracle mirrors the bounds as predicates over the dense cell
-    // space. Chunk pruning itself is law-pinned in Hdf5Spec; this key
-    // grades the bounds SEMANTICS through the full write→read→aggregate
-    // pipeline against DuckDB.
+    // build, but the read-back filters by
+    // GridBounds(latMin=5, lonMax=125).predicate, whose four lat/lon
+    // atoms the scan takes as pushed filters (keeps lat rows 10/20 and
+    // lon columns 100/110/120); the oracle mirrors the bounds as
+    // predicates over the dense cell space. Chunk pruning itself is
+    // law-pinned in Hdf5Spec; this key grades the bounds SEMANTICS
+    // through the full write→read→aggregate pipeline against DuckDB.
     "q_source_grid_subset" -> ((s, dir) => gridRoundtrip(s, dir, hdf5 = true,
-      bounds = Some(NetcdfSource.GridBounds(latMin = 5.0, lonMax = 125.0)))),
-    // r13 late: the SAME subset through the DataSourceV2 `netcdf`
-    // format — the bounds arrive as ordinary Catalyst predicates
+      filter = Some(NetcdfSource.GridBounds(latMin = 5.0, lonMax = 125.0)
+        .predicate))),
+    // r13 late: the SAME subset as a hand-written Catalyst predicate
     // (`.filter(lat >= 5 && lon <= 125)`) that SupportsPushDownFilters
     // turns into the chunk-pruned hyperslab read; grades the full
     // Catalyst pushdown path: filter translation, Spark-exact predicate
     // evaluation, per-file partitioning, InternalRow emission. Same
     // oracle shape as q_source_grid_subset.
     "q_source_dsv2_pushdown" -> ((s, dir) => gridRoundtrip(s, dir, hdf5 = true,
-      bounds = Some(NetcdfSource.GridBounds(latMin = 5.0, lonMax = 125.0)),
-      dsv2 = true)),
+      filter = Some(col("lat") >= 5.0 && col("lon") <= 125.0))),
     // r13 late: the DSv2 WRITE path graded end-to-end — the dense grid
     // goes through `df.write.format("netcdf")` (staging + driver-commit
-    // protocol, RequiresDistributionAndOrdering clustering) instead of
-    // writeGrid, is re-read through the DSv2 reader, and must hit the
-    // SAME unbounded fingerprint the hdf5_roundtrip oracle computes
-    // from the base events table.
+    // protocol, RequiresDistributionAndOrdering clustering) into its
+    // own directory on every call rather than the shared grid file, is
+    // re-read through the DSv2 reader, and must hit the SAME unbounded
+    // fingerprint the hdf5_roundtrip oracle computes from the base
+    // events table.
     "q_source_dsv2_write" -> ((s, dir) => gridRoundtrip(s, dir, hdf5 = true,
-      dsv2 = true, dsv2Write = true)),
+      dsv2Write = true)),
     // r13 late, DEEPENED r15/r16: the STREAMING read surface of the
     // DSv2 format graded as a true multi-batch replay under failure —
     // member 0 lands alone (one checkpointed batch), a deterministic
@@ -513,9 +514,11 @@ object Sources {
     *  - its classic-netCDF twin `grid_nc_<tier>/grid.nc`;
     *  - the Zarr store `zarr_<tier>/grid.zarr`;
     *  - the split archive `gridsplit_<tier>`: members m0/m1/m2 by day
-    *    mod 3 (tiers with < 3 distinct days yield fewer), cleared first
-    *    so a member an earlier build at the same path (a regenerated
-    *    tier) left behind is never read.
+    *    mod 3 (tiers with < 3 distinct days yield fewer).
+    * The NetCDF files go through the DSv2 sink in overwrite mode, which
+    * truncates every prior member of the destination, so a member an
+    * earlier build at the same path (a regenerated tier) left behind is
+    * never read.
     * Returns false (nothing written) for an empty-events tier. The
     * paths embed the tier, so a multi-tier session (specs run sf0.001
     * and sf0.01 back to back) never reads another tier's files; a
@@ -529,25 +532,27 @@ object Sources {
         case None => false
         case Some((cells, dense)) =>
           try {
-            val member = dense.select(lit("grid").as("dataset"), col("time"),
-              col("lat"), col("lon"), col("value"))
-            for ((ext, hdf5) <- Seq("h5" -> true, "nc" -> false))
-              NetcdfSource.writeGrid(member, gridPath(dir, s"grid_$ext"),
-                varName = "events", hdf5 = hdf5)
+            val member = gridMembers(dense, lit("grid"))
+            for ((ext, container) <- Seq("h5" -> "hdf5", "nc" -> "classic"))
+              member.write.format("netcdf").option("container", container)
+                .mode("overwrite").save(gridPath(dir, s"grid_$ext"))
             // overwrite semantics: writeMemberStore rewrites every chunk
             // + metadata file of grid.zarr in place
             ZarrStore.writeGrid(member, gridPath(dir, "zarr"), varName = "events")
-            val split = gridPath(dir, "gridsplit")
-            graft.streaming.UpsertSink.deleteRecursively(java.nio.file.Paths.get(split))
-            NetcdfSource.writeGrid(dense.select(
-                concat(lit("m"), pmod(datediff(col("day"), lit("1970-01-01")),
-                  lit(3)).cast("string")).as("dataset"),
-                col("time"), col("lat"), col("lon"), col("value")),
-              split, varName = "events", hdf5 = true)
+            gridMembers(dense, concat(lit("m"),
+                pmod(datediff(col("day"), lit("1970-01-01")), lit(3)).cast("string")))
+              .write.format("netcdf").option("container", "hdf5")
+              .mode("overwrite").save(gridPath(dir, "gridsplit"))
             true
           } finally cells.unpersist()
       }
     }
+
+  /** The dense grid as the `netcdf` sink's long form: variable
+    * `events`, member tag `dataset`. */
+  private def gridMembers(dense: DataFrame, dataset: Column): DataFrame =
+    dense.select(dataset.as("dataset"), lit("events").as("variable"),
+      col("time"), col("lat"), col("lon"), col("value"))
 
   private def gridPath(dir: String, name: String): String =
     s"$roundtripRoot/${name}_${tierTag(dir)}"
@@ -710,16 +715,18 @@ object Sources {
     denseGrid(s, dir) match {
       case None => false
       case Some((cells, dense)) =>
-        try dense.select(lit("grid").as("dataset"), col("time"), col("lat"),
-            col("lon"), col("value"), lit("events").as("variable"))
+        try gridMembers(dense, lit("grid"))
           .write.format("netcdf").mode("overwrite").save(out)
         finally cells.unpersist()
         true
     }
 
+  /** Fingerprint of the dense grid read back through `format("netcdf")`
+    * from the shared member (or, for `dsv2Write`, a fresh sink write),
+    * filtered by `filter` when set — the scan takes its lat/lon/time
+    * atoms as pushed filters. */
   private def gridRoundtrip(s: SparkSession, dir: String, hdf5: Boolean,
-                            bounds: Option[NetcdfSource.GridBounds] = None,
-                            dsv2: Boolean = false,
+                            filter: Option[Column] = None,
                             dsv2Write: Boolean = false)
       : DataFrame = {
     val member: Option[String] =
@@ -732,19 +739,11 @@ object Sources {
     member match {
       case None => emptyGridFingerprint(s)
       case Some(gridFile) =>
-        val readBack =
-          if (dsv2 && bounds.isDefined)
-            // Catalyst drives the pruning: the filter below is accepted
-            // by SupportsPushDownFilters (Spark-exact, fully handled —
-            // no residual Filter in the plan) and becomes the same
-            // hyperslab cover GridBounds encodes by hand
-            s.read.format("netcdf").option("vars", "events").load(gridFile)
-              .where(col("lat") >= bounds.get.latMin &&
-                col("lon") <= bounds.get.lonMax)
-          else if (dsv2)
-            s.read.format("netcdf").option("vars", "events").load(gridFile)
-          else NetcdfSource.readGrid(s, gridFile, "events", bounds = bounds)
-        gridFingerprint(readBack)
+        // Catalyst drives the pruning: the filter is accepted by
+        // SupportsPushDownFilters (Spark-exact, fully handled — no
+        // residual Filter in the plan) and becomes the hyperslab cover
+        val read = s.read.format("netcdf").option("vars", "events").load(gridFile)
+        gridFingerprint(filter.fold(read)(read.where))
     }
   }
 
@@ -1042,7 +1041,7 @@ object Sources {
         |GROUP BY latb, nt, nlon ORDER BY lat""".stripMargin,
     // the DSv2 WRITE twin re-derives the UNBOUNDED fingerprint (same
     // SQL as the hdf5 roundtrip) — equality holds iff the staged
-    // commit-protocol sink wrote exactly what writeGrid would have
+    // commit-protocol sink wrote every dense cell, fresh on each call
     "q_source_dsv2_write" ->
       """WITH cells AS (
         |  SELECT CAST(ts AS DATE) AS day,
@@ -1062,8 +1061,8 @@ object Sources {
         |GROUP BY latb, nt, nlon ORDER BY lat""".stripMargin,
     // the DSv2 twin's predicates are the SAME bounds (lat >= 5,
     // lon <= 125), so the oracle is the grid_subset SQL verbatim —
-    // DSv2 read + Catalyst-pushed filters must equal the manual
-    // GridBounds read cell-for-cell
+    // the hand-written predicates must equal the
+    // GridBounds.predicate read cell-for-cell
     "q_source_dsv2_pushdown" ->
       """WITH cells AS (
         |  SELECT CAST(ts AS DATE) AS day,

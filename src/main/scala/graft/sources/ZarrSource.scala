@@ -347,8 +347,8 @@ object ZarrStore {
   private def keepAll(n: Int): Array[Boolean] = Array.fill(n)(true)
 
   // ---------- distributed grid read ---------------------------------
-  /** Zarr store → long-form DataFrame, the [[NetcdfSource.readGrid]]
-    * twin: supports (time, lat, lon) and (lat, lon) variables (axis
+  /** Zarr store → long-form DataFrame, the twin of the DSv2
+    * `format("netcdf")` reader: supports (time, lat, lon) and (lat, lon) variables (axis
     * names from the xarray `_ARRAY_DIMENSIONS` attribute), CF time
     * units on the time axis, mask-and-scale semantics (fill_value and
     * NaN cells drop; `scale_factor`/`add_offset` honored), and
@@ -583,8 +583,8 @@ object ZarrStore {
   }
 
   /** bcdp's `to_zarr`-style terminal: one Zarr store per member, the
-    * [[NetcdfSource.writeGrid]] skeleton (repartition by member, one
-    * task assembles one member's dense grid — peak task memory is one
+    * per-member skeleton of the `netcdf` sink (repartition by member,
+    * one task assembles one member's dense grid — peak task memory is one
     * member, the same bound the read side imposes). */
   def writeGrid(df: DataFrame, destDir: String,
                 varName: String = "value"): Unit = {

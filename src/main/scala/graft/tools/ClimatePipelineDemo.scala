@@ -67,7 +67,7 @@ object ClimatePipelineDemo {
 
     // --- R1 for real: the same pipeline fed from .nc FILES on disk ---
     // (write a 2-member NetCDF-3 classic ensemble, load it back with
-    // Ensemble.loadNetcdf — the bcdp.load_local path — and reduce)
+    // Ensemble.loadGrid — the bcdp.load_local path — and reduce)
     import graft.sources.NetcdfClassic
     import graft.sources.NetcdfClassic.{NcAttr, NcDim}
     val ncDir = java.nio.file.Files.createTempDirectory("demo_nc").toString
@@ -87,7 +87,7 @@ object ClimatePipelineDemo {
             ("tas", Seq(0, 1, 2), Seq(NcAttr("units", "K")), data))))
     }
     writeNc("modelA", 1.5); writeNc("obs", 0.0)
-    val fromNc = Ensemble.loadNetcdf(spark, s"$ncDir/*.nc", "tas")
+    val fromNc = Ensemble.loadGrid(spark, s"$ncDir/*.nc", "tas")
       .homogenize().resample("month")
     println(s"[demo] netcdf members=${fromNc.members.mkString(",")} " +
       s"rows=${fromNc.df.count()}")

@@ -7,7 +7,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{Hdf5Classic, NetcdfClassic, NetcdfSource}
+import graft.sources.{Hdf5Classic, NetcdfClassic}
 import graft.sources.NetcdfClassic.{NcAttr, NcDim}
 
 /** The dependency-free NetCDF-4/HDF5 path (the last fidelity gap named
@@ -2651,7 +2651,7 @@ class Hdf5Spec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("h5ens").toString
     writeGridFile(s"$tmp/modelA.h5", nt = 2, bias = 0.0)
     writeGridFile(s"$tmp/modelB.h5", nt = 2, bias = 1000.0)
-    val df = NetcdfSource.readHdf5(spark, s"$tmp/*.h5", "tas")
+    val df = spark.read.format("netcdf").option("vars", "tas").load(s"$tmp/*.h5")
     assert(df.count() == 2 * 2 * 2 * 3)
     assert(df.select("dataset").distinct().count() == 2)
     val t1 = df.filter(col("dataset") === "modelA.h5"
@@ -2675,7 +2675,7 @@ class Hdf5Spec extends AnyFunSuite {
         ("lat", Seq(1), Nil, lats), ("lon", Seq(2), Nil, lons),
         ("tas", Seq(0, 1, 2), Nil, Array.tabulate(6)(_.toDouble)),
         ("pr", Seq(0, 1, 2), Nil, Array.tabulate(6)(i => 100.0 + i)))))
-    val df = NetcdfSource.readGridVars(spark, s"$tmp/m.h5", Seq("tas", "pr"))
+    val df = spark.read.format("netcdf").option("vars", "tas,pr").load(s"$tmp/m.h5")
     assert(df.count() == 12)
     val byVar = df.groupBy("variable").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -2697,15 +2697,15 @@ class Hdf5Spec extends AnyFunSuite {
     val df = rows.toDF("dataset", "time", "lat", "lon", "value")
     for (h5 <- Seq(false, true)) {
       val dir = s"$tmp/${if (h5) "h5" else "nc"}"
-      NetcdfSource.writeGrid(df, dir, varName = "tas", hdf5 = h5)
+      Ensemble.of(df).toNetcdf(dir, varName = "tas", hdf5 = h5)
       val names = new java.io.File(dir).list().sorted.toSeq
       assert(names == Seq("mA", "mB").map(m => s"$m.${if (h5) "h5" else "nc"}"))
-      val back = NetcdfSource.readGrid(spark, s"$dir/*", "tas")
+      val back = Ensemble.loadGrid(spark, s"$dir/*", "tas").df
         .select(regexp_replace(col("dataset"), "\\.(nc|h5)$", "").as("dataset"),
           col("time"), col("lat"), col("lon"), col("value"))
       assert(back.count() == rows.length)
       assert(back.exceptAll(df).count() == 0 && df.exceptAll(back).count() == 0,
-        s"writeGrid(hdf5=$h5) round-trip must be the identity")
+        s"toNetcdf(hdf5=$h5) round-trip must be the identity")
     }
   }
 
@@ -2727,8 +2727,8 @@ class Hdf5Spec extends AnyFunSuite {
     }.toDF("dataset", "time", "lat", "lon", "value")
     for (h5 <- Seq(false, true)) {
       val dir = s"$tmp/${if (h5) "h5" else "nc"}"
-      NetcdfSource.writeGrid(df, dir, varName = "tas", hdf5 = h5)
-      val back = NetcdfSource.readGrid(spark, s"$dir/*", "tas")
+      Ensemble.of(df).toNetcdf(dir, varName = "tas", hdf5 = h5)
+      val back = Ensemble.loadGrid(spark, s"$dir/*", "tas").df
         .select(col("time"), col("value")).collect()
         .map(r => r.getDouble(1).toInt -> r.getTimestamp(0)).toMap
       stamps.zipWithIndex.foreach { case (ts, i) =>
@@ -2752,7 +2752,7 @@ class Hdf5Spec extends AnyFunSuite {
           NcAttr("add_offset", Array(100.0)),
           NcAttr("_FillValue", Array(-999.0))),
           Array(2.0, -999.0, 4.0, -999.0)))))
-    val df = NetcdfSource.readGrid(spark, s"$tmp/m.h5", "tas")
+    val df = spark.read.format("netcdf").option("vars", "tas").load(s"$tmp/m.h5")
     assert(df.count() == 2, "both fill cells must be ABSENT, not NaN rows")
     val vals = df.orderBy("lat").select("value").collect().map(_.getDouble(0)).toSeq
     assert(vals == Seq(2.0 * 0.5 + 100.0, 4.0 * 0.5 + 100.0))
@@ -2764,7 +2764,7 @@ class Hdf5Spec extends AnyFunSuite {
         ("lon", Seq(1), Nil, Array(100.0, 110.0)),
         ("tas", Seq(0, 1), Seq(NcAttr("missing_value", Array(-1.0))),
           Array(-1.0, 7.0)))))
-    val df2 = NetcdfSource.readGrid(spark, s"$tmp/m2.nc", "tas")
+    val df2 = spark.read.format("netcdf").option("vars", "tas").load(s"$tmp/m2.nc")
     assert(df2.count() == 1 &&
       df2.select("value").head().getDouble(0) == 7.0)
   }
@@ -2772,16 +2772,16 @@ class Hdf5Spec extends AnyFunSuite {
   test("2-D (lat, lon) members export and re-load; mixed times reject by name") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("static").toString
-    // static field: every time is null (the (lat, lon) layout emitRows
-    // produces) — r12 review find: this used to NPE in writeGrid
+    // static field: every time is null (the (lat, lon) layout the
+    // reader produces) — r12 review find: this used to NPE on export
     val static = Seq(
       ("oro", null.asInstanceOf[java.sql.Timestamp], 0.0, 100.0, 5.0),
       ("oro", null.asInstanceOf[java.sql.Timestamp], 10.0, 100.0, 6.0))
       .toDF("dataset", "time", "lat", "lon", "value")
     for (h5 <- Seq(false, true)) {
       val dir = s"$tmp/${if (h5) "h5" else "nc"}"
-      NetcdfSource.writeGrid(static, dir, varName = "orog", hdf5 = h5)
-      val back = NetcdfSource.readGrid(spark, s"$dir/*", "orog")
+      Ensemble.of(static).toNetcdf(dir, varName = "orog", hdf5 = h5)
+      val back = Ensemble.loadGrid(spark, s"$dir/*", "orog").df
       assert(back.count() == 2 && back.filter(col("time").isNotNull).count() == 0)
       assert(back.orderBy("lat").select("value").collect().map(_.getDouble(0))
         .toSeq == Seq(5.0, 6.0), s"hdf5=$h5")
@@ -2792,14 +2792,14 @@ class Hdf5Spec extends AnyFunSuite {
       ("m", null.asInstanceOf[java.sql.Timestamp], 0.0, 110.0, 2.0))
       .toDF("dataset", "time", "lat", "lon", "value")
     val ex = intercept[org.apache.spark.SparkException](
-      NetcdfSource.writeGrid(mixed, s"$tmp/bad", varName = "x"))
+      Ensemble.of(mixed).toNetcdf(s"$tmp/bad", varName = "x"))
     assert(ex.getMessage.contains("mixes null and non-null times") ||
       Option(ex.getCause).exists(_.getMessage.contains("mixes null and non-null")))
   }
 
   test("duplicate (time,lat,lon) cells reject by name — no last-write-wins") {
     import spark.implicits._
-    // a readGridVars frame (two variables on the same axes) must not
+    // a multi-variable frame exported under ONE variable name must not
     // silently lose one variable (r12 review find)
     val tmp = Files.createTempDirectory("dup").toString
     val twoVars = Seq(
@@ -2807,7 +2807,7 @@ class Hdf5Spec extends AnyFunSuite {
       ("m", java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 0.0, 100.0, 2.0))
       .toDF("dataset", "time", "lat", "lon", "value")
     val ex = intercept[org.apache.spark.SparkException](
-      NetcdfSource.writeGrid(twoVars, tmp, varName = "x"))
+      Ensemble.of(twoVars).toNetcdf(tmp, varName = "x"))
     assert(ex.getMessage.contains("duplicate rows") ||
       Option(ex.getCause).exists(_.getMessage.contains("duplicate rows")))
   }
@@ -2841,8 +2841,8 @@ class Hdf5Spec extends AnyFunSuite {
     val df = rows.toDF("dataset", "time", "lat", "lon", "value")
     for (h5 <- Seq(false, true)) {
       val dir = s"$tmp/${if (h5) "h5" else "nc"}"
-      NetcdfSource.writeGrid(df, dir, varName = "tas", hdf5 = h5)
-      val back = NetcdfSource.readGrid(spark, s"$dir/*", "tas")
+      Ensemble.of(df).toNetcdf(dir, varName = "tas", hdf5 = h5)
+      val back = Ensemble.loadGrid(spark, s"$dir/*", "tas").df
         .select(regexp_replace(col("dataset"), "\\.(nc|h5)$", "").as("dataset"),
           col("time"), col("lat"), col("lon"), col("value"))
       assert(back.count() == rows.length,
@@ -2862,7 +2862,7 @@ class Hdf5Spec extends AnyFunSuite {
         ("lat", Seq(1), Nil, lats), ("lon", Seq(2), Nil, lons),
         ("tas", Seq(0, 1, 2), Nil, Array.tabulate(6)(_.toDouble)))))
     writeGridFile(s"$tmp/new.h5", nt = 1, bias = 50.0)
-    val df = NetcdfSource.readGrid(spark, s"$tmp/*", "tas")
+    val df = spark.read.format("netcdf").option("vars", "tas").load(s"$tmp/*")
     assert(df.count() == 12)
     assert(df.select("dataset").distinct().collect().map(_.getString(0)).sorted
       .toSeq == Seq("new.h5", "old.nc"))

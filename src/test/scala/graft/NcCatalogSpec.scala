@@ -119,7 +119,7 @@ class NcCatalogSpec extends AnyFunSuite {
     val viaCat = Ensemble.fromCatalog(spark, man, "tas", bounds = Some(b))
     // the facet prunes to the one tas-carrying in-band member (m1) —
     // the unpruned loadGrid comparison must target the same file (the
-    // strict readGrid path rejects a glob member lacking the variable)
+    // explicit-variable read rejects a glob member lacking it)
     val direct = Ensemble.loadGrid(spark, s"$tmp/m1.nc", "tas", bounds = Some(b))
     assert(rows(viaCat.df) == rows(direct.df))
     // the chained API composes on the catalog-loaded ensemble: the

@@ -50,6 +50,14 @@ class NetcdfSpec extends AnyFunSuite {
     assert(nc.read("v").toSeq == Seq(1.5, 2.5, -3.0))
   }
 
+  /** The unfiltered long-form read with no pushdown left to apply: the
+    * independent reference a bounded read is compared against after
+    * Spark itself filters it. Projected like `Ensemble.loadGrid`. */
+  private def unfiltered(glob: String, v: String) =
+    spark.read.format("netcdf").option("vars", v).load(glob)
+      .select(col("dataset"), col("time"), col("lat"), col("lon"), col("value"))
+      .localCheckpoint()
+
   private def writeGridFile(path: String, name: String, nt: Int,
                             bias: Double): Unit = {
     val lats = Array(0.0, 10.0)
@@ -81,7 +89,7 @@ class NetcdfSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("ncens").toString
     writeGridFile(s"$tmp/modelA.nc", "modelA", nt = 2, bias = 0.0)
     writeGridFile(s"$tmp/modelB.nc", "modelB", nt = 2, bias = 1000.0)
-    val df = NetcdfSource.readClassic(spark, s"$tmp/*.nc", "tas")
+    val df = spark.read.format("netcdf").option("vars", "tas").load(s"$tmp/*.nc")
     assert(df.count() == 2 * 2 * 2 * 3) // files × times × lats × lons
     assert(df.select("dataset").distinct().count() == 2)
     // CF "days since 2000-01-01": second timestep = 2000-01-02
@@ -114,26 +122,26 @@ class NetcdfSpec extends AnyFunSuite {
     val b = GridBounds(latMin = 5.0, lonMax = 115.0,
       timeMin = Some(java.sql.Timestamp.valueOf("2000-01-02 00:00:00")))
     for (glob <- Seq(s"$tmp/c.nc", s"$tmp/h.h5", s"$tmp/*")) {
-      val full = NetcdfSource.readGrid(spark, glob, "tas")
+      val full = unfiltered(glob, "tas")
       val filtered = full.filter(col("lat") >= 5.0 && col("lon") <= 115.0 &&
           col("time") >= lit("2000-01-02 00:00:00").cast("timestamp"))
         .collect().map(_.toSeq).toSet
-      val bounded = NetcdfSource.readGrid(spark, glob, "tas", bounds = Some(b))
+      val bounded = Ensemble.loadGrid(spark, glob, "tas", bounds = Some(b)).df
         .collect().map(_.toSeq).toSet
       assert(bounded == filtered, s"bounded read diverged for $glob")
       assert(bounded.nonEmpty && bounded.size < full.count(),
         "bounds must keep a proper non-empty subset for this fixture")
     }
     // degenerate bounds: empty coordinate intersection → zero rows
-    assert(NetcdfSource.readGrid(spark, s"$tmp/c.nc", "tas",
-      bounds = Some(GridBounds(latMin = 99.0))).count() == 0)
+    assert(Ensemble.loadGrid(spark, s"$tmp/c.nc", "tas",
+      bounds = Some(GridBounds(latMin = 99.0))).df.count() == 0)
   }
 
   test("NaN coordinate: default read emits it, bounded read matches filter (r13 review pin)") {
-    // bounds=None must stay the ORIGINAL no-predicate path: a NaN lat
-    // row still emits. With bounds set (even fully infinite), the row
-    // drops on BOTH sides of the equivalence law — Java NaN>=lo is
-    // false, and Spark's NaN-greatest order fails NaN <= +Infinity.
+    // bounds=None applies no predicate: a NaN lat row still emits. With
+    // bounds set (even fully infinite), GridBounds.predicate carries all
+    // four lat/lon comparisons and Spark's NaN-greatest order fails
+    // NaN <= +Infinity, so the row drops.
     val tmp = Files.createTempDirectory("ncnan").toString
     Files.write(Paths.get(s"$tmp/n.nc"), NetcdfClassic.write(
       dims = Seq(NcDim("lat", 2), NcDim("lon", 2)),
@@ -141,11 +149,12 @@ class NetcdfSpec extends AnyFunSuite {
         ("lat", Seq(0), Nil, Array(0.0, Double.NaN)),
         ("lon", Seq(1), Nil, Array(1.0, 2.0)),
         ("v", Seq(0, 1), Nil, Array(1.0, 2, 3, 4)))))
-    val full = NetcdfSource.readGrid(spark, s"$tmp/n.nc", "v")
-    assert(full.count() == 4, "default read must emit NaN-coordinate rows")
+    val full = unfiltered(s"$tmp/n.nc", "v")
+    assert(Ensemble.loadGrid(spark, s"$tmp/n.nc", "v").df.count() == 4,
+      "default read must emit NaN-coordinate rows")
     val inf = graft.sources.NetcdfSource.GridBounds()
-    val bounded = NetcdfSource.readGrid(spark, s"$tmp/n.nc", "v",
-      bounds = Some(inf))
+    val bounded = Ensemble.loadGrid(spark, s"$tmp/n.nc", "v",
+      bounds = Some(inf)).df
     val filtered = full.filter(
       col("lat") >= inf.latMin && col("lat") <= inf.latMax &&
         col("lon") >= inf.lonMin && col("lon") <= inf.lonMax)
@@ -229,11 +238,48 @@ class NetcdfSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("ncload").toString
     writeGridFile(s"$tmp/m1.nc", "m1", nt = 1, bias = 0.0)
     writeGridFile(s"$tmp/m2.nc", "m2", nt = 1, bias = 50.0)
-    val ens = Ensemble.loadNetcdf(spark, s"$tmp/*.nc", "tas")
+    val ens = Ensemble.loadGrid(spark, s"$tmp/*.nc", "tas")
     assert(ens.members == Seq("m1.nc", "m2.nc"))
     // the fluent pipeline runs directly on the loaded ensemble
     val clim = ens.homogenize().climatology()
     assert(clim.count() == 2 * 6) // members × (2 lats × 3 lons), 1 month
+  }
+
+  test("pre-1582 CF time: format(\"netcdf\") and loadGrid emit the cfTimeBase instant; toNetcdf → loadGrid is the identity") {
+    // no Julian→Gregorian rebase anywhere on the path: the emitted
+    // timestamp's epoch µs is exactly the CF arithmetic, in both
+    // containers (a java.sql.Timestamp round-trip would shift year 1000
+    // by 5 days: -30610656000000000)
+    val tmp = Files.createTempDirectory("ncjulian").toString
+    val dims = Seq(NcDim("time", 2), NcDim("lat", 1), NcDim("lon", 2))
+    val vars = Seq(
+      ("time", Seq(0), Seq(NcAttr("units", "days since 1000-01-01")),
+        Array(0.0, 1.0)),
+      ("lat", Seq(1), Nil, Array(0.0)),
+      ("lon", Seq(2), Nil, Array(100.0, 110.0)),
+      ("tas", Seq(0, 1, 2), Nil, Array(1.0, 2.0, 3.0, 4.0)))
+    Files.write(Paths.get(s"$tmp/c.nc"), NetcdfClassic.write(dims, vars))
+    Files.write(Paths.get(s"$tmp/h.h5"), graft.sources.Hdf5Classic.write(dims, vars))
+    val (base, step) = NetcdfSource.cfTimeBase("days since 1000-01-01")
+    assert(base == -30610224000000000L)
+    def micros(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select(unix_micros(col("time"))).collect().map(_.getLong(0)).toSeq.sorted
+    val expect = Seq(base, base, base + step, base + step)
+    for (f <- Seq("c.nc", "h.h5")) {
+      assert(micros(spark.read.format("netcdf").option("vars", "tas")
+        .load(s"$tmp/$f")) == expect, f)
+      assert(micros(Ensemble.loadGrid(spark, s"$tmp/$f", "tas").df) == expect, f)
+    }
+    val ens = Ensemble.loadGrid(spark, s"$tmp/c.nc", "tas")
+    def cells(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+      df.select(unix_micros(col("time")), col("lat"), col("lon"), col("value"))
+        .collect().map(_.toSeq).toSet
+    for (h5 <- Seq(false, true)) {
+      val out = s"$tmp/out_${if (h5) "h5" else "nc"}"
+      ens.toNetcdf(out, "tas", hdf5 = h5)
+      val back = Ensemble.loadGrid(spark, s"$out/*", "tas").df
+      assert(back.count() == 4 && cells(back) == cells(ens.df), s"hdf5=$h5")
+    }
   }
 
   test("CF time units: non-padded dates, fractional seconds, UTC offsets") {

@@ -5,12 +5,14 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{Hdf5Classic, NetcdfClassic, NetcdfSource, NetcdfV2}
+import graft.sources.{Hdf5Classic, NetcdfClassic, NetcdfV2}
 import graft.sources.NetcdfClassic.{NcAttr, NcDim}
 
-/** The DataSourceV2 `netcdf` format: every law is equality against the
-  * proven [[NetcdfSource.readGrid]] path (itself oracled end-to-end by
-  * the graded grid keys), plus destructive proofs that pushdown
+/** The DataSourceV2 `netcdf` format: every pushdown law is equality
+  * against the UNFILTERED read made pushdown-free by `localCheckpoint()`
+  * and then filtered or aggregated by Spark itself (the unfiltered read
+  * is pinned to literal fixture values, and oracled end-to-end by the
+  * graded grid keys), plus destructive proofs that pushdown
   * genuinely prunes — a garbage member file is INVISIBLE behind a
   * `dataset` filter (never opened) and fatal without one. The
   * NaN / -0.0 fixtures pin the scan's Spark-exact comparison semantics
@@ -50,6 +52,11 @@ class NetcdfV2Spec extends AnyFunSuite {
     r.load(path)
   }
 
+  /** The reference side of every pushdown law: the unfiltered read,
+    * materialized so no later filter or aggregate can reach the scan. */
+  private def reference(path: String, vars: String = "tas"): DataFrame =
+    dsv2(path, Some(vars)).localCheckpoint()
+
   private def sortedRows(df: DataFrame): Seq[Row] =
     df.collect().toSeq.sortBy(_.mkString("|"))
 
@@ -83,6 +90,11 @@ class NetcdfV2Spec extends AnyFunSuite {
     val tmp = tmpDir("reg")
     writeClassic(s"$tmp/m1.nc", nt = 1, bias = 0.0)
     assert(dsv2(s"$tmp/m1.nc").count() == 6)
+    // a DSv2 scan leaves input_file_name() empty (the withPathFields
+    // caveat): the member's basename rides in `dataset` instead
+    assert(dsv2(s"$tmp/m1.nc").select(input_file_name(), col("dataset"))
+      .distinct().collect().map(r => (r.getString(0), r.getString(1)))
+      .toSeq == Seq(("", "m1.nc")))
   }
 
   test("unfiltered DSv2 == readGrid on a mixed classic+hdf5 archive") {
@@ -94,12 +106,18 @@ class NetcdfV2Spec extends AnyFunSuite {
                     lo <- Seq(100.0, 110.0, 120.0))
       yield ("m2", new java.sql.Timestamp(t * 86400000L), la, lo,
         (t * 6 + la / 10 * 3 + (lo - 100) / 10) * 1.5)
-    NetcdfSource.writeGrid(
-      rows.toDF("dataset", "time", "lat", "lon", "value"),
-      tmp, varName = "tas", hdf5 = true)
-    val glob = s"$tmp/*"
-    assertSame(dsv2(glob, vars = Some("tas")),
-      NetcdfSource.readGrid(spark, glob, "tas"))
+    Ensemble.of(rows.toDF("dataset", "time", "lat", "lon", "value"))
+      .toNetcdf(tmp, varName = "tas", hdf5 = true)
+    // the reference is the literal fixture: writeClassic's row-major
+    // bias+i cells and the sink's input rows, with reader basenames
+    val classic = for (t <- 0 until 2; (la, li) <- Seq(0.0, 10.0).zipWithIndex;
+                       (lo, oi) <- Seq(100.0, 110.0, 120.0).zipWithIndex)
+      yield ("m1.nc", "tas", new java.sql.Timestamp(t * 86400000L), la, lo,
+        100.0 + (t * 2 + li) * 3 + oi)
+    val expect = (classic ++ rows.map { case (_, t, la, lo, v) =>
+      ("m2.h5", "tas", t, la, lo, v) })
+      .toDF("dataset", "variable", "time", "lat", "lon", "value")
+    assertSame(dsv2(s"$tmp/*", vars = Some("tas")), expect)
   }
 
   test("pushed lat/lon/time range == readGrid.filter, and the filters are FULLY handled") {
@@ -109,7 +127,7 @@ class NetcdfV2Spec extends AnyFunSuite {
     def pred(df: DataFrame): DataFrame =
       df.filter(col("lat") >= 5.0 && col("lon") <= 115.0 && col("time") >= t1)
     val v2 = pred(dsv2(s"$tmp/m1.nc", Some("tas")))
-    assertSame(v2, pred(NetcdfSource.readGrid(spark, s"$tmp/m1.nc", "tas")))
+    assertSame(v2, pred(reference(s"$tmp/m1.nc")))
     assert(v2.count() == 4) // lat=10 × lon∈{100,110} × t∈{day1,day2}
     // explain carries the pushed atoms; the physical plan has NO
     // residual Filter (every conjunct was accepted as exact)
@@ -124,7 +142,7 @@ class NetcdfV2Spec extends AnyFunSuite {
     val tmp = tmpDir("nan")
     writeClassic(s"$tmp/m1.nc", nt = 1, bias = 0.0,
       lats = Array(Double.NaN, 10.0))
-    val grid = NetcdfSource.readGrid(spark, s"$tmp/m1.nc", "tas")
+    val grid = reference(s"$tmp/m1.nc")
     val v2 = dsv2(s"$tmp/m1.nc", Some("tas"))
     // NaN >= 5.0 is TRUE in Spark (NaN greatest): the NaN-lat rows stay
     val kept = v2.filter(col("lat") >= 5.0)
@@ -143,7 +161,7 @@ class NetcdfV2Spec extends AnyFunSuite {
     val tmp = tmpDir("negz")
     writeClassic(s"$tmp/m1.nc", nt = 1, bias = 0.0,
       lats = Array(-0.0, 10.0))
-    val grid = NetcdfSource.readGrid(spark, s"$tmp/m1.nc", "tas")
+    val grid = reference(s"$tmp/m1.nc")
     val v2 = dsv2(s"$tmp/m1.nc", Some("tas"))
     for (p <- Seq(col("lat") >= 0.0, col("lat") === 0.0, col("lat") <= 0.0))
       assertSame(v2.filter(p), grid.filter(p))
@@ -188,9 +206,9 @@ class NetcdfV2Spec extends AnyFunSuite {
     val tas = all.filter(col("variable") === "tas")
     assert(tas.count() == 6)
     assert(tas.agg(sum("value")).head.getDouble(0) == 210.0)
-    // static grid ⇒ null time; readGridVars equality
-    assertSame(all,
-      NetcdfSource.readGridVars(spark, s"$tmp/m1.h5", Seq("pr", "tas")))
+    // static grid ⇒ null time; discovery == the explicit `vars` list
+    assertSame(all, dsv2(s"$tmp/m1.h5", Some("pr,tas")))
+    assert(all.filter(col("time").isNotNull).count() == 0)
   }
 
   test("time null-semantics: IsNotNull skips static grids, isNull keeps only them") {
@@ -205,7 +223,7 @@ class NetcdfV2Spec extends AnyFunSuite {
     Files.write(Paths.get(s"$tmp/s.h5"), bytes)
     writeClassic(s"$tmp/m1.nc", nt = 2, bias = 0.0)
     val v2 = dsv2(s"$tmp/*", Some("tas"))
-    val grid = NetcdfSource.readGrid(spark, s"$tmp/*", "tas")
+    val grid = reference(s"$tmp/*")
     assertSame(v2, grid)
     assertSame(v2.filter(col("time").isNotNull), grid.filter(col("time").isNotNull))
     assertSame(v2.filter(col("time").isNull), grid.filter(col("time").isNull))
@@ -233,7 +251,7 @@ class NetcdfV2Spec extends AnyFunSuite {
     val tmp = tmpDir("resid")
     writeClassic(s"$tmp/m1.nc", nt = 1, bias = 0.0)
     val v2 = dsv2(s"$tmp/m1.nc", Some("tas"))
-    val grid = NetcdfSource.readGrid(spark, s"$tmp/m1.nc", "tas")
+    val grid = reference(s"$tmp/m1.nc")
     for (p <- Seq(col("value") > 2.0,
                   col("lat") === 0.0 || col("lon") === 120.0))
       assertSame(v2.filter(p), grid.filter(p))
@@ -284,9 +302,8 @@ class NetcdfV2Spec extends AnyFunSuite {
     assert(files.toSeq == Seq("m1.h5", "m2.h5"),
       s"expected one member per dataset and NO staging residue: ${files.toSeq}")
     assertSame(tagged(dsv2(s"$tmp/*")), df)
-    // and the non-DSv2 reader agrees (format symmetry)
-    assertSame(tagged(NetcdfSource.readGridVars(spark, s"$tmp/*",
-      Seq("pr", "tas"))), df)
+    // and the explicit `vars` list agrees with per-file discovery
+    assertSame(tagged(dsv2(s"$tmp/*", Some("pr,tas"))), df)
   }
 
   test("read → write is an archive COPY (mixed-format input, classic output)") {
@@ -684,7 +701,7 @@ class NetcdfV2Spec extends AnyFunSuite {
     assert(pushed.queryExecution.executedPlan.toString
       .contains("PushedAggregates: ["))
     // values equal the row-path aggregate (which has the Aggregate node)
-    val expect = aggRow(NetcdfSource.readGrid(spark, s"$tmp/m1.nc", "tas")
+    val expect = aggRow(reference(s"$tmp/m1.nc")
       .filter(col("lat") >= 5.0 && col("lon") <= 115.0)
       .agg(count(lit(1)), min("lat"), max("lon"), min("time"), max("time")))
     assert(aggRow(pushed) == expect)
@@ -725,7 +742,7 @@ class NetcdfV2Spec extends AnyFunSuite {
     assert(pushed.queryExecution.executedPlan.toString
       .contains("PushedAggregates: ["))
     assert(aggRow(pushed) == aggRow(
-      NetcdfSource.readGrid(spark, s"$tmp/*.nc", "tas")
+      reference(s"$tmp/*.nc")
         .agg(count(lit(1)), min("time"), max("time"))))
     // dataset pruning to ONE member stays complete
     val one = dsv2(s"$tmp/*.nc", Some("tas"))
@@ -756,8 +773,7 @@ class NetcdfV2Spec extends AnyFunSuite {
         pushed.queryExecution.optimizedPlan)
     assert(pushed.queryExecution.executedPlan.toString
       .contains("PushedGroupBy: [dataset]"))
-    assertSame(pushed,
-      grouped(NetcdfSource.readGrid(spark, s"$tmp/*.nc", "tas")))
+    assertSame(pushed, grouped(reference(s"$tmp/*.nc")))
     // a filter that empties one member SUPPRESSES its group (SQL emits
     // no row for an empty group — a (m1.nc, 0, null, null) row here
     // would be a wrong result, not a formatting choice)
@@ -765,7 +781,7 @@ class NetcdfV2Spec extends AnyFunSuite {
     val part = grouped(dsv2(s"$tmp/*.nc", Some("tas"))
       .filter(col("time") >= jan3))
     assert(!hasAggregate(part))
-    assertSame(part, grouped(NetcdfSource.readGrid(spark, s"$tmp/*.nc", "tas")
+    assertSame(part, grouped(reference(s"$tmp/*.nc")
       .filter(col("time") >= jan3)))
     assert(part.collect().map(_.getString(0)).toSeq == Seq("m2.nc"))
   }
@@ -834,7 +850,7 @@ class NetcdfV2Spec extends AnyFunSuite {
       yield ("m", new java.sql.Timestamp(jan1 + d * 86400000L), la, lo,
         (d * 15 + la / 10 * 5 + (lo - 100) / 10 + 1).toDouble)
     val frame = rows.toDF("dataset", "time", "lat", "lon", "value")
-    NetcdfSource.writeGrid(frame, tmp, varName = "tas", hdf5 = true)
+    Ensemble.of(frame).toNetcdf(tmp, varName = "tas", hdf5 = true)
     def chain(df: DataFrame): DataFrame =
       graft.Ensemble.of(df)
         .subset(5, 25, 90, 135, "2024-01-03 00:00:00", "2024-01-28 00:00:00")

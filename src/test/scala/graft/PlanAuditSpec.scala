@@ -42,6 +42,18 @@ class PlanAuditSpec extends AnyFunSuite
       s"columns not pruned:\n$p")
   }
 
+  test("q_source_grid_subset: GridBounds atoms reach the netcdf scan as PushedFilters, no residual Filter") {
+    // the bounded grid read's pruning is Catalyst pushdown: every
+    // lat/lon atom of GridBounds.predicate (infinite ends included) is
+    // accepted as exact, so the physical plan filters nothing itself
+    val p = plan(SparkEntry.queries("q_source_grid_subset")(spark, dir))
+    assert(p.contains("PushedFilters: ["), s"no netcdf scan pushdown:\n$p")
+    for (atom <- Seq("GreaterThanOrEqual(lat,5.0)", "LessThanOrEqual(lat,Infinity)",
+                     "GreaterThanOrEqual(lon,-Infinity)", "LessThanOrEqual(lon,125.0)"))
+      assert(p.contains(atom), s"$atom not pushed:\n$p")
+    assert(!p.contains("Filter ("), s"expected no residual Filter:\n$p")
+  }
+
   test("small-side joins broadcast (no shuffle of the fact table)") {
     val p = plan(SparkEntry.queries("q_join_broadcast")(spark, dir))
     assert(p.contains("BroadcastHashJoin"), s"no broadcast join:\n$p")

@@ -418,23 +418,30 @@ class SourcesSpec extends AnyFunSuite {
     SparkEntry.queries("q_source_dsv2_stream")(spark, dir).collect()
     val landed = new java.io.File(
       s"${Sources.roundtripRoot}/dsv2s_${Sources.tierTag(dir)}/land")
-    val direct = Files.createTempDirectory("graft_gridsplit").toFile
+    // the reference encodes each day-mod-3 member straight from the
+    // dense cells with the member encoder, outside every Spark sink
     val (cells, dense) = Sources.denseGrid(spark, dir)
       .getOrElse(fail(s"$dir has no events"))
-    try NetcdfSource.writeGrid(dense.select(
+    val byMember = try dense.select(
         concat(lit("m"), pmod(datediff(col("day"), lit("1970-01-01")),
           lit(3)).cast("string")).as("dataset"),
-        col("time"), col("lat"), col("lon"), col("value")),
-      direct.toString, varName = "events", hdf5 = true)
+        unix_micros(col("time")), col("lat"), col("lon"), col("value"))
+      .collect().toSeq
+      .groupBy(_.getString(0))
     finally cells.unpersist()
-    def sha256s(d: java.io.File): Map[String, String] =
-      d.listFiles().filter(_.getName.endsWith(".h5")).map { f =>
-        f.getName -> java.security.MessageDigest.getInstance("SHA-256")
-          .digest(Files.readAllBytes(f.toPath)).map("%02x".format(_)).mkString
-      }.toMap
-    val staged = sha256s(landed)
+    def sha256(bytes: Array[Byte]): String =
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(bytes).map("%02x".format(_)).mkString
+    val direct = byMember.map { case (m, rows) =>
+      s"$m.h5" -> sha256(NetcdfSource.buildMemberBytes(m,
+        rows.map(r => (r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))),
+        "events", hdf5 = true))
+    }
+    val staged = landed.listFiles().filter(_.getName.endsWith(".h5")).map { f =>
+      f.getName -> sha256(Files.readAllBytes(f.toPath))
+    }.toMap
     assert(staged.keySet == Set("m0.h5", "m1.h5", "m2.h5"))
-    assert(staged == sha256s(direct))
+    assert(staged == direct)
   }
 
   test("two calls of q_source_dsv2_stream collect identical fingerprints") {
