@@ -33,8 +33,8 @@ final case class Ensemble(df: DataFrame) {
     * each read re-executes every member's upstream pipeline). Identical-plan
     * cache() calls share one entry via the cache manager. The CALLER
     * owns the persisted lifetime: unpersist via `.df.unpersist()` (or
-    * hold it in a tracked memo — the ops.Climate.ensembleCache
-    * pattern) when cycling sessions in one JVM. */
+    * hold it as a [[graft.Memo]] value, as q_climate_ensemble does, so
+    * `Memo.clear()` releases it) when cycling sessions in one JVM. */
   def cached(): Ensemble = Ensemble(df.cache())
 
   // ---- ensemble algebra (bcdp R13) ----------------------------------

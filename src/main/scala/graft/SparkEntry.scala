@@ -11,42 +11,18 @@ object SparkEntry {
     * ~5 s of JVM/codegen/table warm-up, so a hash-ordered map smeared
     * that cost onto a different arbitrary key every time the key set
     * changed — pinning the order keeps per-query bench numbers
-    * comparable across rounds.
-    *
-    * q_dedup_clusters_md5 is pinned SECOND (r11, VERDICT r10 #4): it is
-    * the first-touch absorber for the whole md5-dedup family (shared
-    * shingle table + 16-permutation signature cache) and under the
-    * driver it has twice shown a 2-4x GC/first-touch spike (25.0 s
-    * r10-run-1, 14.3 s r9-run-2) when that build cost landed mid-run on
-    * a busy heap. Running it immediately after the warm-up key puts the
-    * family's one-time materialization where the warm-up already lives,
-    * so every later md5-family key times only its own work. */
+    * comparable across rounds. The warm-up key times only its own
+    * scan: a shared build (the md5-dedup family's shingle digests and
+    * candidate graph, say) is charged to the first key that needs it. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = {
-    val base =
+    val all =
       ops.Relational.queries ++ ops.Joins.queries ++ ops.Windows.queries ++
         ops.Functions.queries ++ ops.Streaming.queries ++ ops.Climate.queries ++
         ops.Text.queries ++ ops.Vectors.queries ++ ops.Dedup.queries ++
         ops.TextAnalysis.queries ++ ops.Multimodal.queries ++ ops.Ann.queries ++
         ops.Profiling.queries ++ sources.Sources.queries
-    // r14 (VERDICT r13 perf item b): the pinned warm-up key ALSO
-    // materializes the md5-dedup family's shared caches (hashed
-    // shingle table + candidate graph), so that one-time build —
-    // which on a busy heap has shown 2-4x spikes — lands in the slot
-    // every reader already discounts as warm-up, and clusters_md5
-    // (pinned 2nd) times only its own components + ordering work.
-    // The key's RESULT is untouched; only side-effect cache builds run.
-    val all = base.updated("q_scan_project",
-      (s: SparkSession, dir: String) => {
-        ops.Text.warmMd5Family(s, dir)
-        base("q_scan_project")(s, dir)
-      })
-    scala.collection.immutable.ListMap(all.toSeq.sortBy { case (k, _) =>
-      val rank =
-        if (k == "q_scan_project") 0
-        else if (k == "q_dedup_clusters_md5") 1
-        else 2
-      (rank, k)
-    }: _*)
+    scala.collection.immutable.ListMap(
+      all.toSeq.sortBy { case (k, _) => (k != "q_scan_project", k) }: _*)
   }
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

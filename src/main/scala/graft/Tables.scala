@@ -3,7 +3,7 @@ package graft
 import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Memoized per-(session, sfDir) base-table loaders.
+/** Memoized per-(session, sfDir) base-table loaders ([[Memo]]).
   *
   * At harness scale every table is small (≤600k rows at sf0.1), so we
   * cache all of them: the bench runs ~60 queries that would otherwise
@@ -15,11 +15,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Caching here is a bench optimization, never a correctness dependency.
   */
 object Tables {
-  // keyed by sessionUUID (collision-free and stable, unlike
-  // identityHashCode which can collide or be reused after GC); the
-  // UUID lives on the classic SparkSession in Spark 4
-  private val cache = TrieMap.empty[(String, String, String), DataFrame]
-
   private def uuid(spark: SparkSession): String =
     org.apache.spark.sql.GraftBridge.sessionUUID(spark)
 
@@ -135,7 +130,7 @@ object Tables {
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     tuneForScale(spark, sfDir)
-    cache.getOrElseUpdate((uuid(spark), sfDir, name), {
+    Memo.artifact(spark, sfDir, s"table $name") {
       val df =
         if (name == "events") {
           // conf first: a TIMESTAMP(NANOS) fixture only reads at all
@@ -144,7 +139,7 @@ object Tables {
           normalizeEventTs(spark.read.parquet(s"$sfDir/$name.parquet"))
         } else spark.read.parquet(s"$sfDir/$name.parquet")
       if (cachingEnabled && cacheable(name)) df.cache() else df
-    })
+    }
   }
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")

@@ -1,7 +1,5 @@
 package graft.ops
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -220,33 +218,17 @@ object Ann {
       .select(col("q_id"), col("c_id"), col("cos4"), col("rn").cast("long").as("rn"))
   }
 
-  // one index per (session, corpus dir, nlist, seed): repeated bench /
-  // verify invocations in one session reuse the same built index
-  // instead of retraining and stacking cached copies (the round-1
-  // anti-pattern)
-  private val indexCache = TrieMap.empty[(String, String, Int, Long), IvfIndex]
-
-  /** Release every memoized index (unpersisting its cached
-    * assignments). Long-lived JVMs that cycle SparkSessions (test
-    * suites, notebook kernels) should call this on session teardown —
-    * the memo is keyed by session UUID, so entries for stopped sessions
-    * would otherwise pin their cached plans forever. */
-  def clearIndexes(): Unit = {
-    indexCache.values.foreach(i =>
-      try i.assigned.unpersist() catch { case _: Exception => () })
-    indexCache.clear()
-  }
-
-  /** Memoized index over the harness embeddings table, excluding the
-    * query ids (vec_id < 10 are the probe set, matching q_vec_knn). */
+  /** The index over the harness embeddings table, excluding the query
+    * ids (vec_id < 10 are the probe set, matching q_vec_knn) — one per
+    * (session, corpus dir, nlist, seed) in [[graft.Memo]], so repeated
+    * invocations reuse the built index instead of retraining and
+    * stacking cached copies. */
   private def harnessIndex(s: SparkSession, dir: String, nlist: Int,
-                           seed: Long = 42L): IvfIndex = {
-    val key = (org.apache.spark.sql.GraftBridge.sessionUUID(s), dir, nlist, seed)
-    indexCache.getOrElseUpdate(key, {
+                           seed: Long = 42L): IvfIndex =
+    graft.Memo.artifact(s, dir, s"ivf nlist=$nlist seed=$seed") {
       val corpus = Tables.embeddings(s, dir).filter(col("vec_id") >= 10)
       buildIndex(corpus, nlist, seed)
-    })
-  }
+    }
 
   /** Rows-only query: IVF top-5 for the same 10 queries as q_vec_knn.
     * nprobe=8/nlist=16 (≈half the corpus scanned): random unit vectors

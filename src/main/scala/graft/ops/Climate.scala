@@ -716,9 +716,6 @@ object ClimateOps {
       .select(col("t"), col("i"), col("aq"))
   }
 
-  private val eofCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int, Int), (Seq[Int], IndexedSeq[Long])]
-
   /** Leading EOF (Empirical Orthogonal Function) of the field — THE
     * canonical climate-analysis decomposition (the `eofs` package's
     * core op; NAO/ENSO patterns are its leading modes): the first
@@ -731,32 +728,31 @@ object ClimateOps {
     * entry); aq products ≤ 1e12 keep the distributed sums exact to
     * ~9e6 time steps. Returns (observed cell indices, loading vector
     * indexed by cell id); memoized per (session, input plan, iters)
-    * so the loading-map and PC-series keys share one Gram job. */
+    * in [[graft.Memo]] so the loading-map and PC-series keys share one
+    * Gram job. */
   private[graft] def eofLoadings(base: DataFrame,
                                  iters: Int = 3): (Seq[Int], IndexedSeq[Long]) =
-    eofCache.getOrElseUpdate(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(base.sparkSession),
-        base.queryExecution.analyzed.semanticHash(), iters), {
-        // the Gram self-join reads aq twice and aq reads `base` three
-        // times — cache the (time × grid)-bounded quantized field for
-        // the one action instead of re-running the events aggregate
-        // ~6× inside one plan (r17 bench find)
-        val aq = eofAnomalyQuant(base).cache()
-        val g = try {
-          aq.select(col("t"), col("i").as("ai"), col("aq").as("av"))
-            .join(aq.select(col("t"), col("i").as("bi"), col("aq").as("bv")),
-              "t")
-            .groupBy(col("ai"), col("bi"))
-            .agg(sum(col("av") * col("bv")).as("cij"))
-            .collect()
-        } finally aq.unpersist()
-        val entries = g.map(r =>
-          (r.getLong(0).toInt, r.getLong(1).toInt, r.getLong(2)))
-        // observed cells = indices with a Gram row (every observed
-        // cell has its self-pair); gap indices stay out of the output
-        (entries.map(_._1).distinct.sorted.toSeq,
-          Vectors.powerIterate(entries.toSeq, iters))
-      })
+    graft.Memo.over(base, s"eof iters=$iters") {
+      // the Gram self-join reads aq twice and aq reads `base` three
+      // times — cache the (time × grid)-bounded quantized field for
+      // the one action instead of re-running the events aggregate
+      // ~6× inside one plan (r17 bench find)
+      val aq = eofAnomalyQuant(base).cache()
+      val g = try {
+        aq.select(col("t"), col("i").as("ai"), col("aq").as("av"))
+          .join(aq.select(col("t"), col("i").as("bi"), col("aq").as("bv")),
+            "t")
+          .groupBy(col("ai"), col("bi"))
+          .agg(sum(col("av") * col("bv")).as("cij"))
+          .collect()
+      } finally aq.unpersist()
+      val entries = g.map(r =>
+        (r.getLong(0).toInt, r.getLong(1).toInt, r.getLong(2)))
+      // observed cells = indices with a Gram row (every observed
+      // cell has its self-pair); gap indices stay out of the output
+      (entries.map(_._1).distinct.sorted.toSeq,
+        Vectors.powerIterate(entries.toSeq, iters))
+    }
 }
 
 /** SURVEY §2.9 family G — the climate surface exercised on harness data
@@ -764,23 +760,6 @@ object ClimateOps {
   * value=variable), each an oracle-matched analog of R6–R11.
   */
 object Climate {
-
-  /** One cached member union per (session, dir, stage): alignMembers
-    * reads it three times per invocation and repeated invocations
-    * reuse one materialized cells table (the shingleCache pattern);
-    * call [[clearEnsembleCache]] on session teardown. The stage tag
-    * separates the q_climate_ensemble union from the q_climate_pipeline
-    * pre-align grid. */
-  private val ensembleCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), DataFrame]
-
-  /** Unpersist and drop the memoized ensemble unions. */
-  def clearEnsembleCache(): Unit = {
-    ensembleCache.values.foreach { df =>
-      try df.unpersist() catch { case _: Exception => () }
-    }
-    ensembleCache.clear()
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // R6 select_season analog: "season" = days-of-month {1..3} ∪ {29..31}
@@ -917,18 +896,20 @@ object Climate {
       // so a negative odd event_id yields par = -1, which the old
       // filter(=== 1) DROPPED but a bare otherwise("mb") would keep;
       // isin(0, 1) also covers the NULL drop.
-      val tagged = ensembleCache.getOrElseUpdate(
-        (org.apache.spark.sql.GraftBridge.sessionUUID(s), dir, "ensemble"), {
-          ev.groupBy((col("event_id") % 2).as("par"),
-              col("time"), col("lat"), col("lon"))
-            .agg(sum(col("m")).as("sm"), count(lit(1)).as("n"))
-            .filter(col("par").isin(0, 1))
-            .select(col("time"), col("lat"), col("lon"),
-              (col("sm").cast("double") / 1000000.0 / col("n")).as("value"),
-              when(col("par") === 0, lit("ma")).otherwise(lit("mb"))
-                .as("dataset"))
-            .cache() // align reads the union 3×; it is |cells|-sized
-        })
+      // one cached member union per (session, dir) in graft.Memo:
+      // align reads it three times per invocation and repeated
+      // invocations reuse one materialized cells table
+      val tagged = graft.Memo.artifact(s, dir, "ensemble union") {
+        ev.groupBy((col("event_id") % 2).as("par"),
+            col("time"), col("lat"), col("lon"))
+          .agg(sum(col("m")).as("sm"), count(lit(1)).as("n"))
+          .filter(col("par").isin(0, 1))
+          .select(col("time"), col("lat"), col("lon"),
+            (col("sm").cast("double") / 1000000.0 / col("n")).as("value"),
+            when(col("par") === 0, lit("ma")).otherwise(lit("mb"))
+              .as("dataset"))
+          .cache() // align reads the union 3×; it is |cells|-sized
+      }
       graft.Ensemble.of(tagged)
         // declared count 2: member(1) can be legitimately EMPTY (a
         // single-event corpus has no odd event_ids) and inference
@@ -1145,9 +1126,7 @@ object Climate {
         .regridBin(5.0, 60.0, agg = "sum")
         .resample("day", agg = "sum")
         .convertUnits(2.0, 1.0)
-      val preDf = ensembleCache.getOrElseUpdate(
-        (org.apache.spark.sql.GraftBridge.sessionUUID(s), dir, "pipeline"),
-        pre.df.cache())
+      val preDf = graft.Memo.artifact(s, dir, "pipeline grid")(pre.df.cache())
       val out = graft.Ensemble.of(preDf).alignMembers(declaredMembers = 2)
       // clim = value − anomaly re-derives the windowed climatology
       // through the SAME two-subtraction op sequence the oracle runs
@@ -1477,17 +1456,16 @@ object Climate {
 
   /** The shared EOF input frame: exact daily micros volume per cell of
     * the fixed 10×12 (user_id%10, user_id%12) grid — events playing
-    * the gridded field, the corr_field/trend convention. */
+    * the gridded field, the corr_field/trend convention. Cached like
+    * Tables.cacheable's dimension tables: the (days × grid)-bounded
+    * aggregate (≤ ~26k rows at decade-2) is read 3× by the PC-scores
+    * key's anomaly plan. */
   private def eofBase(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir)
+    graft.Memo.track(Tables.events(s, dir)
       .groupBy(unix_date(to_date(col("ts"))).cast("long").as("t"),
         ((col("user_id") % 10) * 12 + (col("user_id") % 12))
           .cast("long").as("i"))
-      .agg(sum(micros(col("value"))).as("x"))
-      // (days × grid)-bounded aggregate read 3× by the PC-scores
-      // key's anomaly plan; cached like Tables.cacheable's dimension
-      // tables (≤ ~26k rows at decade-2, keyed per tier by plan)
-      .cache()
+      .agg(sum(micros(col("value"))).as("x")))
 
   /** Driver-computed integer cos-lat weights shared by the graded
     * weighted-mean key and its oracle: lat band ↦ round(cos(lat)·1e6).

@@ -134,6 +134,40 @@ object Profiling {
         prefix60 < (lit(tMax.toDouble) * cap / col("_cnt")).cast("long"))
   }
 
+  /** The worst-group distinct count driving the gate, memoized per
+    * (session, input plan, group, value column) in [[graft.Memo]]:
+    * q_profile_mad probes the same (events, vm) pair twice per call
+    * and q_profile_outliers probes it again — one distinct-count scan
+    * serves them all within a session. */
+  private def probeGate(ev: DataFrame, groupCol: String, valCol: String): Long =
+    graft.Memo.over(ev, s"gate $groupCol $valCol") {
+      val ndRow = ev.groupBy(col(groupCol))
+        .agg(approx_count_distinct(col(valCol)).as("_nd"))
+        .agg(max(col("_nd"))).head()
+      if (ndRow.isNullAt(0)) 0L else ndRow.getLong(0)
+    }
+
+  /** THE default exact-percentile gate — the single constant every
+    * gate-parameterized entry point below defaults to, so the graded
+    * `exact_pct` surfacing can never drift from the branch
+    * gatedPercentiles actually took through a default mismatch. */
+  val DefaultExactDistinctMax: Long = 1000000L
+
+  /** True iff [[gatedPercentiles]] on the same (input, group, value)
+    * runs the EXACT percentile branch. Shares the memoized probe, so
+    * calling it next to gatedPercentiles costs nothing extra. The
+    * graded keys surface it as a literal `exact_pct` column whose
+    * oracle side is hard-coded TRUE: the DuckDB oracles only ever
+    * express the exact quantile_cont form, so if a future fixture
+    * tier trips the gate, grading fails LOUDLY on this named column
+    * instead of a mystery hash mismatch between approx and exact
+    * values (ADVICE r5). CONTRACT: pass the SAME `exactDistinctMax`
+    * you passed to gatedPercentiles/iqrFences — an asymmetric
+    * override reports the wrong branch. */
+  def exactGateHolds(ev: DataFrame, groupCol: String, valCol: String,
+                     exactDistinctMax: Long = DefaultExactDistinctMax): Boolean =
+    probeGate(ev, groupCol, valCol) <= exactDistinctMax
+
   /** Per-group interpolated percentiles with a CARDINALITY GATE —
     * the scale fix behind q_profile_outliers and q_profile_mad,
     * factored so the gate is testable on its own.
@@ -163,67 +197,6 @@ object Profiling {
     * per `(p, name)`. PlanAuditSpec asserts the gate fires on a tiny
     * cap and that the default-gate fences equal the inline exact
     * form. */
-  /** Memoized gate counts keyed on (input plan, group, value column):
-    * q_profile_mad probes the same (events, vm) pair twice per call
-    * and q_profile_outliers probes it again — one distinct-count scan
-    * serves them all within a session (the tfIdfCache / Ann.indexCache
-    * precedent: keyed on the ANALYZED plan's semanticHash, so a
-    * different sfDir or a changed input is a different key). */
-  private val gateCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, String), Long]
-
-  /** Drop the memoized gate counts (session-teardown twin of
-    * [[graft.ops.Text.clearTfIdfCache]]). */
-  def clearGateCache(): Unit = gateCache.clear()
-
-  /** Memoized MAD deviation frames (events ⋈ per-group median, one
-    * row per event) — see the q_profile_mad comment. r18 (ADVICE r17):
-    * keyed on (session, dir) like the sibling shingleCache /
-    * ensembleCache — the r17 key was a 32-bit semanticHash of the ev
-    * plan, where an Int collision across data dirs would silently
-    * serve the wrong persisted deviation frame. */
-  private val madAdCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  /** Unpersist and drop the memoized MAD deviation frames. */
-  def clearMadCache(): Unit = {
-    madAdCache.values.foreach { df =>
-      try df.unpersist() catch { case _: Exception => () }
-    }
-    madAdCache.clear()
-  }
-
-  /** The memoized worst-group distinct count driving the gate. */
-  private def probeGate(ev: DataFrame, groupCol: String, valCol: String): Long =
-    gateCache.getOrElseUpdate(
-      (ev.queryExecution.analyzed.semanticHash(), groupCol, valCol), {
-        val ndRow = ev.groupBy(col(groupCol))
-          .agg(approx_count_distinct(col(valCol)).as("_nd"))
-          .agg(max(col("_nd"))).head()
-        if (ndRow.isNullAt(0)) 0L else ndRow.getLong(0)
-      })
-
-  /** THE default exact-percentile gate — the single constant every
-    * gate-parameterized entry point below defaults to, so the graded
-    * `exact_pct` surfacing can never drift from the branch
-    * gatedPercentiles actually took through a default mismatch. */
-  val DefaultExactDistinctMax: Long = 1000000L
-
-  /** True iff [[gatedPercentiles]] on the same (input, group, value)
-    * runs the EXACT percentile branch. Shares the memoized probe, so
-    * calling it next to gatedPercentiles costs nothing extra. The
-    * graded keys surface it as a literal `exact_pct` column whose
-    * oracle side is hard-coded TRUE: the DuckDB oracles only ever
-    * express the exact quantile_cont form, so if a future fixture
-    * tier trips the gate, grading fails LOUDLY on this named column
-    * instead of a mystery hash mismatch between approx and exact
-    * values (ADVICE r5). CONTRACT: pass the SAME `exactDistinctMax`
-    * you passed to gatedPercentiles/iqrFences — an asymmetric
-    * override reports the wrong branch. */
-  def exactGateHolds(ev: DataFrame, groupCol: String, valCol: String,
-                     exactDistinctMax: Long = DefaultExactDistinctMax): Boolean =
-    probeGate(ev, groupCol, valCol) <= exactDistinctMax
-
   def gatedPercentiles(ev: DataFrame, groupCol: String, valCol: String,
                        ps: Seq[(Double, String)],
                        exactDistinctMax: Long = DefaultExactDistinctMax): DataFrame = {
@@ -401,17 +374,19 @@ object Profiling {
       // probe, the mad percentile, the final flag aggregation) — each
       // would re-run the full events scan AND the med percentile job
       // buried in its subtree (r17 optimization round, guide §2.4:
-      // 3 passes → 1). Memoized per (session, dir) so spec parity
-      // suites reuse one cached copy — the Text.shingleCache pattern.
+      // 3 passes → 1). Memoized per (session, dir) in graft.Memo so
+      // spec parity suites reuse one cached copy; keyed on the dir, not
+      // a 32-bit hash of the ev plan, whose collision across data dirs
+      // would silently serve the wrong persisted deviation frame.
       // projected to the three columns downstream reads before the
       // cache — un-projected it would materialize the full event row
       // (props payload included) where the uncached plans pruned it
-      val ad = madAdCache.getOrElseUpdate(
-        (org.apache.spark.sql.GraftBridge.sessionUUID(s), dir),
+      val ad = graft.Memo.artifact(s, dir, "mad deviations") {
         ev.join(broadcast(med), "event_type")
           .withColumn("adev", abs(col("vm").cast("double") - col("med")))
           .select(col("event_type"), col("adev"), col("med"))
-          .cache())
+          .cache()
+      }
       val mad = gatedPercentiles(ad, "event_type", "adev", Seq(0.5 -> "mad"))
       ad.join(broadcast(mad), "event_type")
         .groupBy(col("event_type"))

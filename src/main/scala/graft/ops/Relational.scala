@@ -419,14 +419,13 @@ object Relational {
     // ≤|status×priority| = 15-row aggregate, so the orders scan is the
     // only big stage at any scale. `c` is cached: three branches reuse
     // it, and uncached each would re-scan and re-shuffle orders. The
-    // cache is session-lifetime BY DESIGN (the clusterCache precedent):
-    // Spark's cache manager dedupes by logical plan, so repeated
-    // invocations share one ~15-row entry rather than accreting.
+    // cache lives until Memo.clear(): Spark's cache manager dedupes by
+    // logical plan, so repeated invocations share one ~15-row entry
+    // rather than accreting.
     "q_agg_listagg" -> { (s, dir) =>
-      val c = Tables.orders(s, dir)
+      val c = graft.Memo.track(Tables.orders(s, dir)
         .groupBy(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).cast("long").as("cnt"))
-        .cache()
+        .agg(count(lit(1)).cast("long").as("cnt")))
       val mode = c.groupBy(col("o_orderstatus")).agg(max(col("cnt")).as("mx"))
         .join(c, Seq("o_orderstatus")).where(col("cnt") === col("mx"))
         .groupBy(col("o_orderstatus")).agg(min(col("o_orderpriority")).as("mode_prio"))

@@ -189,8 +189,8 @@ object Text {
     // The decontamination APPLY step graded end-to-end: the surviving
     // corpus (flagged docs anti-joined away) summarized per lang. Same
     // corpus/benchmark split and threshold as q_text_decontam — the two
-    // keys share one memoized overlap computation (the clusterCache
-    // pattern: one operator pipeline invoked by two keys), so this key
+    // keys share one memoized overlap computation (one operator
+    // pipeline invoked by two keys), so this key
     // grades the applyDecontamination composition, which is exactly
     // what decontaminate() runs.
     "q_text_decontam_apply" -> { (s, dir) =>
@@ -333,28 +333,14 @@ object Text {
     corpus.join(pairs.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
 
   // one overlap computation per (session, corpus dir) shared by the two
-  // decontam keys — the clusterCache pattern; the pair set is tiny (27
-  // rows at sf0.01) so the cache() holds the result, not the pipeline.
-  // Same JVM-lifetime caveat as tfIdfCache; clearContamCache() on
-  // session teardown.
-  private val contamCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
+  // decontam keys; the pair set is tiny (27 rows at sf0.01) so the
+  // cache() holds the result, not the pipeline
   private def contamPairs(s: SparkSession, dir: String): DataFrame =
-    contamCache.getOrElseUpdate(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(s), dir), {
-        val docs = Tables.documents(s, dir)
-        contamination(docs.filter(col("doc_id") % 10 =!= 0),
-          docs.filter(col("doc_id") % 10 === 0), minOverlap = 3).cache()
-      })
-
-  /** Release the memoized decontamination pair sets — the
-    * [[Ann.clearIndexes]] twin for session teardown. */
-  def clearContamCache(): Unit = {
-    contamCache.values.foreach(d =>
-      try d.unpersist() catch { case _: Exception => () })
-    contamCache.clear()
-  }
+    graft.Memo.artifact(s, dir, "decontam pairs") {
+      val docs = Tables.documents(s, dir)
+      contamination(docs.filter(col("doc_id") % 10 =!= 0),
+        docs.filter(col("doc_id") % 10 === 0), minOverlap = 3).cache()
+    }
 
   /** tf-idf top-k terms per doc. Ordering is on the ROUNDED score so
     * cross-engine ranking happens on the same 4-dp grid, term as
@@ -374,10 +360,10 @@ object Text {
     // memoized per (session, input plan, params): each build caches the
     // tf intermediate (read by both the idf aggregation and the scored
     // join), so repeated invocations must reuse one instance instead of
-    // stacking cached copies — the Ann.indexCache pattern
-    val key = (org.apache.spark.sql.GraftBridge.sessionUUID(docs.sparkSession),
-      docs.queryExecution.analyzed.semanticHash(), k, broadcastVocabMax)
-    tfIdfCache.getOrElseUpdate(key, {
+    // stacking cached copies. The tf handle rides along because it —
+    // not the result projection — is the cached plan, and unpersisting
+    // a projection over a cached plan is a silent no-op.
+    graft.Memo.over(docs, s"tfidf k=$k broadcastVocabMax=$broadcastVocabMax") {
       val toks = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       val tf = toks.groupBy(col("doc_id"), col("term"))
         .agg(count(lit(1)).cast("long").as("tf"))
@@ -395,27 +381,14 @@ object Text {
         .filter(col("rn") <= k)
         .select(col("doc_id"), col("term"), col("score4"), col("rn"))
       (result, tf)
-    })._1
+    }._1
   }
 
-  // memo LIFETIME: JVM-long, never evicted on session stop, and a
-  // concurrent first call may build twice (orphaning one cached tf) —
-  // acceptable for the single-session bench harness (the Ann.indexCache
-  // precedent); long-lived JVMs cycling sessions call clearTfIdfCache()
-  // on teardown. The tf handle rides along because it — not the result
-  // projection — is the cached plan, and unpersisting a projection over
-  // a cached plan is a silent no-op.
-  private val tfIdfCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int, Long), (DataFrame, DataFrame)]
-
-  /** Release every memoized tf-idf pipeline (unpersisting the cached tf
-    * intermediate) — the [[Ann.clearIndexes]] twin for session teardown. */
-  def clearTfIdfCache(): Unit = {
-    tfIdfCache.values.foreach { case (_, tf) =>
-      try tf.unpersist() catch { case _: Exception => () }
-    }
-    tfIdfCache.clear()
-  }
+  /** `(doc_id, sh)` strings → the md5-family digest rows `(doc_id, h)`
+    * (h = [[Profiling.rowDigest]] of the shingle — the engines' shared
+    * 60-bit digest). Exposed for specs that build variant corpora. */
+  private[graft] def hashShingles(sh: DataFrame): DataFrame =
+    sh.select(col("doc_id"), Profiling.rowDigest(col("sh")).as("h"))
 
   /** The distinct per-doc shingle DIGEST SETS behind ALL THREE md5
     * dedup twins — `(doc_id, hs: array<long>)`, memoized and CACHED
@@ -426,102 +399,49 @@ object Text {
     * r14: the cache holds the 8-byte digest instead of the shingle
     * STRING — every downstream consumer hashes immediately anyway.
     * r18: the digests stay as the per-doc ARRAY (one row per doc) —
-    * see the build comment in [[docShingleArrays]]. The digest is
+    * see the build comment below. The digest is
     * applied AFTER the distinct-on-string, so the set is identical on
     * both engines (a negligible 60-bit collision dedups to the same
     * set; minima are multiset-min-invariant and the SimHash vote
     * counts match because the oracle hashes the same distinct
     * strings). */
-  private val shingleCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  /** `(doc_id, sh)` strings → the md5-family digest rows `(doc_id, h)`
-    * (h = [[Profiling.rowDigest]] of the shingle — the engines' shared
-    * 60-bit digest). Exposed for specs that build variant corpora. */
-  private[graft] def hashShingles(sh: DataFrame): DataFrame =
-    sh.select(col("doc_id"), Profiling.rowDigest(col("sh")).as("h"))
-
   private def docShingleArrays(s: SparkSession, dir: String): DataFrame =
-    shingleCache.getOrElseUpdate(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(s), dir), {
-        // one-pass codegen'd digest build (r17 optimization round):
-        // md5 runs directly over each window's bytes instead of
-        // token-array + window-string + md5 + hex + conv per shingle —
-        // set-identical to hashShingles(Dedup.shingles(...)) by the
-        // byte-slice identity + digest∘distinct = distinct∘digest law
-        // (TextExpressionsSpec pins equality on fixture + edge + random
-        // unicode corpora). r18 (VERDICT r17 #5/#6): the cache now
-        // holds the per-doc digest ARRAY instead of exploded rows —
-        // both signature families are pure per-doc functions of this
-        // set, so they reduce it in kernel PROJECTIONS
-        // ([[graft.expressions.MinHashAffineSigs]] /
-        // [[graft.expressions.SimHashFromSet]]) instead of exploding
-        // to a corpus-shingle-sized row stream and hash-shuffling it
-        // back to doc_id through two groupBy aggregates. The filter
-        // reproduces the explode's drop of null/short docs (< n tokens
-        // ⇒ no signature row), and the cached table shrinks from one
-        // row per distinct shingle to one per doc.
-        Tables.documents(s, dir)
-          .select(col("doc_id"),
-            graft.expressions.TextExpressions
-              .shingle_digests(col("text"), 3).as("hs"))
-          .filter(col("hs").isNotNull && size(col("hs")) > 0)
-          .cache()
-      })
+    graft.Memo.artifact(s, dir, "md5 shingle digests") {
+      // one-pass codegen'd digest build (r17 optimization round):
+      // md5 runs directly over each window's bytes instead of
+      // token-array + window-string + md5 + hex + conv per shingle —
+      // set-identical to hashShingles(Dedup.shingles(...)) by the
+      // byte-slice identity + digest∘distinct = distinct∘digest law
+      // (TextExpressionsSpec pins equality on fixture + edge + random
+      // unicode corpora). r18 (VERDICT r17 #5/#6): the cache now
+      // holds the per-doc digest ARRAY instead of exploded rows —
+      // both signature families are pure per-doc functions of this
+      // set, so they reduce it in kernel PROJECTIONS
+      // ([[graft.expressions.MinHashAffineSigs]] /
+      // [[graft.expressions.SimHashFromSet]]) instead of exploding
+      // to a corpus-shingle-sized row stream and hash-shuffling it
+      // back to doc_id through two groupBy aggregates. The filter
+      // reproduces the explode's drop of null/short docs (< n tokens
+      // ⇒ no signature row), and the cached table shrinks from one
+      // row per distinct shingle to one per doc.
+      Tables.documents(s, dir)
+        .select(col("doc_id"),
+          graft.expressions.TextExpressions
+            .shingle_digests(col("text"), 3).as("hs"))
+        .filter(col("hs").isNotNull && size(col("hs")) > 0)
+        .cache()
+    }
 
   /** The md5-keyed MinHash-LSH candidate pairs `(a, b)` behind
     * q_dedup_minhash_md5 and q_dedup_clusters_md5 — memoized and
     * CACHED per (session, dir) so the two graded keys (and the
     * clustering's union-find collect) share one 16-permutation
-    * signature build (the clusterCache precedent one module over). */
-  private val mhMd5Cache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  /** Every interior pre-cap table the md5 builders cache()d — tracked
-    * so [[clearMhMd5Cache]] reaches ALL the family's persisted state,
-    * including builder invocations that bypass the (session, dir) memo
-    * (spec calls with variant caps). */
-  private val precapCaches =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  private[graft] def trackPrecap(df: DataFrame): DataFrame = {
-    precapCaches.add(df.cache())
-    df
-  }
-
-  /** Unpersist and drop the memoized md5 candidate graphs, the shared
-    * shingle table, and every tracked pre-cap band table. */
-  def clearMhMd5Cache(): Unit = {
-    (mhMd5Cache.values ++ shingleCache.values).foreach { df =>
-      try df.unpersist() catch { case _: Exception => () }
-    }
-    mhMd5Cache.clear()
-    shingleCache.clear()
-    var df = precapCaches.poll()
-    while (df != null) {
-      try df.unpersist() catch { case _: Exception => () }
-      df = precapCaches.poll()
-    }
-  }
+    * signature build. */
 
   private def minHashCandidatesMd5(s: SparkSession, dir: String): DataFrame =
-    mhMd5Cache.getOrElseUpdate(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(s), dir), {
-        minHashCandidatesMd5FromArrays(docShingleArrays(s, dir)).cache()
-      })
-
-  /** MATERIALIZE the md5-family shared caches (the hashed shingle
-    * table and the MinHash-LSH candidate graph) for (session, dir) —
-    * called by the bench/verify warm-up absorber (SparkEntry pins
-    * q_scan_project first precisely to soak one-time costs; r14,
-    * VERDICT r13 perf item b) so q_dedup_clusters_md5, pinned second,
-    * times only its own union-find + ordering work instead of the
-    * whole family's first touch. Idempotent and cheap when warm: the
-    * memoized frames come back cached. */
-  def warmMd5Family(s: SparkSession, dir: String): Unit = {
-    minHashCandidatesMd5(s, dir).count()
-    ()
-  }
+    graft.Memo.artifact(s, dir, "md5 minhash candidates") {
+      minHashCandidatesMd5FromArrays(docShingleArrays(s, dir)).cache()
+    }
 
   /** The 16 fixed affine MinHash permutations shared with the DuckDB
     * oracle: perm_p(h) = (A_p·(h mod P) + B_p) mod P over the prime
@@ -617,7 +537,7 @@ object Text {
     // runs three times (the production minHashCandidates
     // banded0.cache() rationale; identical-plan cache() calls reuse
     // one entry via the cache manager)
-    val band = trackPrecap(agg0
+    val band = graft.Memo.track(agg0
       .select(col("doc_id"), explode(array(bandStructs: _*)).as("e"))
       .select(col("doc_id"), col("e.b").as("b"), col("e.bval").as("bval")))
     // partial+final count (never a per-bucket window — the funnel the
@@ -677,7 +597,7 @@ object Text {
   private def simHashBandPairs(sigs: DataFrame, maxBucket: Long): DataFrame = {
     // cached pre-cap — same three-consumer rationale as the minhash
     // band table above (count + both join sides)
-    val banded = trackPrecap(sigs
+    val banded = graft.Memo.track(sigs
       .select(col("doc_id"), col("sig"),
         explode(sequence(lit(0), lit(3))).as("band"))
       .withColumn("bval", expr("(sig >> (band * 15)) & 32767")))
@@ -756,7 +676,7 @@ object Text {
           .filter(col("_df") > stopDfCap).select(col("lang"), col("h"))
         Dedup.antiJoinHot(base, hot, Seq("lang", "h"))
       }
-    val sh = kept.cache() // read 3× below (both self-join sides + sizes)
+    val sh = graft.Memo.track(kept) // read 3× below (both self-join sides + sizes)
     val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).cast("long").as("sz"))
     val a = sh.select(col("doc_id").as("a"), col("lang"), col("h"))
     val b = sh.select(col("doc_id").as("b"), col("lang").as("lang_b"), col("h").as("h_b"))

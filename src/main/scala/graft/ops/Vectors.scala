@@ -61,41 +61,26 @@ object Vectors {
     * shuffles are by (cid, dim) and vec_id, never all-pairs. */
   def kmeansAssignments(e: DataFrame, k: Int, iters: Int = 2): DataFrame = {
     require(k > 0 && iters >= 1, s"need k > 0 and iters >= 1, got k=$k iters=$iters")
-    kmeansCache.getOrElseUpdate(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(e.sparkSession),
-        e.queryExecution.analyzed.semanticHash(), k, iters), {
-        val v = e.select(col("vec_id"),
-          transform(dbl(col("embedding")), x => round(x * 1000000L, 0)).as("vm"))
-        // seeds = the k SMALLEST ids PRESENT (not `vec_id < k`): on a
-        // filtered corpus — the pipeline-demo audit path — ids 0..k-1
-        // may be gone, and a thinner seed set silently shrinks k. On
-        // the contiguous-id graded table the two rules coincide.
-        val seeds = v.orderBy(col("vec_id")).limit(k)
-          .select(col("vec_id").as("cid"), col("vm").as("cv"))
-        val first = assignToNearest(v, seeds)
-        val last = (2 to iters).foldLeft(first) { (a, _) =>
-          assignToNearest(v, recomputeCentroids(a))
-        }
-        last.select(col("vec_id"), col("cid"),
-            round(sqrt(col("d2")) / 1000000.0, 4).as("dist4"))
-          .cache() // tiny (one row per vector); two graded keys share one fit
-      })
-  }
-
-  /** Memoized fits keyed on (session, input plan, k, iters) — q_vec_kmeans and
-    * q_sample_semantic share one 2-iteration fit per session (the
-    * tfIdfCache / Ann.indexCache precedent; the cached df IS the
-    * returned result, so callers' projections hit it). */
-  private val kmeansCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int, Int), DataFrame]
-
-  /** Unpersist and drop every memoized fit (session-teardown twin of
-    * [[graft.ops.Text.clearTfIdfCache]]). */
-  def clearKmeansCache(): Unit = {
-    kmeansCache.values.foreach { df =>
-      try df.unpersist() catch { case _: Exception => () }
+    // memoized per (session, input plan, k, iters): q_vec_kmeans and
+    // q_sample_semantic share one 2-iteration fit per session; the
+    // cached df IS the returned result, so callers' projections hit it
+    graft.Memo.over(e, s"kmeans k=$k iters=$iters") {
+      val v = e.select(col("vec_id"),
+        transform(dbl(col("embedding")), x => round(x * 1000000L, 0)).as("vm"))
+      // seeds = the k SMALLEST ids PRESENT (not `vec_id < k`): on a
+      // filtered corpus — the pipeline-demo audit path — ids 0..k-1
+      // may be gone, and a thinner seed set silently shrinks k. On
+      // the contiguous-id graded table the two rules coincide.
+      val seeds = v.orderBy(col("vec_id")).limit(k)
+        .select(col("vec_id").as("cid"), col("vm").as("cv"))
+      val first = assignToNearest(v, seeds)
+      val last = (2 to iters).foldLeft(first) { (a, _) =>
+        assignToNearest(v, recomputeCentroids(a))
+      }
+      last.select(col("vec_id"), col("cid"),
+          round(sqrt(col("d2")) / 1000000.0, 4).as("dist4"))
+        .cache() // tiny (one row per vector); two graded keys share one fit
     }
-    kmeansCache.clear()
   }
 
   /** (vec_id, vm, cid, d2): each vector with its nearest centroid.
@@ -173,8 +158,8 @@ object Vectors {
     }.reduce(_ + _)
     // cached pre-cap: the bucketed projection feeds the hot count AND
     // both join sides (the md5 band tables' three-consumer rationale;
-    // tracked by Text's teardown so a session cycle unpersists it)
-    val withB = Text.trackPrecap(v.withColumn("bucket", bucket.cast("long")))
+    // tracked so Memo.clear() unpersists it)
+    val withB = graft.Memo.track(v.withColumn("bucket", bucket.cast("long")))
     val hot = withB.groupBy(col("bucket")).agg(count(lit(1)).as("_n"))
       .filter(col("_n") > maxBucket).select(col("bucket"))
     val kept = Dedup.antiJoinHot(withB, hot, Seq("bucket"))
@@ -269,78 +254,65 @@ object Vectors {
     * recompute is a (sub, cid, dim)-keyed exact-integer partial
     * aggregation. Returns (assignments, codebook): assignments =
     * (vec_id, sub, vs, cid, d2), codebook = (sub, cid, cv) — memoized
-    * per (session, input plan, params) since the code and search keys
-    * share one fit. */
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int, Int, Int, Int, Int), (DataFrame, DataFrame)]
-
-  /** Unpersist and drop the memoized PQ fits. */
-  def clearPqCache(): Unit = {
-    pqCache.values.foreach { case (a, c) =>
-      try { a.unpersist(); c.unpersist() } catch { case _: Exception => () }
-    }
-    pqCache.clear()
-  }
-
+    * per (session, input plan, params) in [[graft.Memo]] since the code
+    * and search keys share one fit. */
   private[graft] def pqModel(e: DataFrame, m: Int = 8, subDim: Int = 8,
                              k: Int = 16, iters: Int = 2)
       : (DataFrame, DataFrame) = {
     require(m > 0 && subDim > 0 && k > 0 && iters >= 1,
       s"need positive PQ params, got m=$m subDim=$subDim k=$k iters=$iters")
-    pqCache.getOrElseUpdate(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(e.sparkSession),
-        e.queryExecution.analyzed.semanticHash(), m, subDim, k, iters), {
-        // sv feeds the seed join + both assign passes (3-4 evaluations
-        // per fit). Caching it was attempted and REVERTED in the r18
-        // optimization round (VERDICT r17 #4): A/B min-of-3 alternating
-        // fresh JVMs measured q_vec_pq 7.80 -> 8.30 s and q_vec_ann_pq
-        // 1.88 -> 2.01 s with a FLAT control (q_vec_knn 0.53/0.53) —
-        // the InMemoryRelation materialization of the m×-exploded
-        // corpus costs more than the re-derivations it saves (the
-        // q_climate_qmap revert, one module over). At archive scale the
-        // fit trains on a bounded sample upstream anyway.
-        val sv = pqSubspaces(e, m, subDim)
-        val seedIds = e.select(col("vec_id")).orderBy(col("vec_id")).limit(k)
-        val seeds = sv.join(broadcast(seedIds), "vec_id")
-          .select(col("sub"), col("vec_id").as("cid"), col("vs").as("cv"))
-        def assign(cents: DataFrame): DataFrame = {
-          val cs = cents.groupBy(col("sub"))
-            .agg(collect_list(struct(col("cid"), col("cv"))).as("cs"))
-          def d2of(cc: Column): Column =
-            dot(col("vs"), col("vs")) -
-              (lit(2.0) * dot(col("vs"), cc.getField("cv"))) +
-              dot(cc.getField("cv"), cc.getField("cv"))
-          sv.join(broadcast(cs), "sub")
-            .withColumn("best", array_min(transform(col("cs"), cc =>
-              struct(d2of(cc).as("d2"), cc.getField("cid").as("cid")))))
-            .filter(col("best").isNotNull) // empty codebook ⇒ zero rows
-            .select(col("vec_id"), col("sub"), col("vs"),
-              col("best").getField("cid").as("cid"),
-              col("best").getField("d2").as("d2"))
-        }
-        // per-(sub, cid, dim) exact integer mean, re-quantized to the
-        // micros grid: floor(s/n + 0.5) — see the determinism note
-        def requantized(a: DataFrame): DataFrame =
-          a.select(col("sub"), col("cid"),
-              posexplode(col("vs")).as(Seq("dim", "mv")))
-            .groupBy(col("sub"), col("cid"), col("dim"))
-            .agg(sum(col("mv").cast("long")).as("s"), count(lit(1)).as("n"))
-            .groupBy(col("sub"), col("cid"))
-            .agg(transform(
-              array_sort(collect_list(struct(col("dim"),
-                // Spark floor() yields LONG; keep the codebook
-                // array<double> (integer-VALUED) like every vm array
-                floor(col("s").cast("double") / col("n").cast("double") + 0.5)
-                  .cast("double").as("m")))),
-              x => x.getField("m")).as("cv"))
-        var cents = seeds
-        var a = assign(cents)
-        (2 to iters).foreach { _ =>
-          cents = requantized(a).cache() // small: m·k rows
-          a = assign(cents)
-        }
-        (a.cache(), cents)
-      })
+    graft.Memo.over(e, s"pq m=$m subDim=$subDim k=$k iters=$iters") {
+      // sv feeds the seed join + both assign passes (3-4 evaluations
+      // per fit). Caching it was attempted and REVERTED in the r18
+      // optimization round (VERDICT r17 #4): A/B min-of-3 alternating
+      // fresh JVMs measured q_vec_pq 7.80 -> 8.30 s and q_vec_ann_pq
+      // 1.88 -> 2.01 s with a FLAT control (q_vec_knn 0.53/0.53) —
+      // the InMemoryRelation materialization of the m×-exploded
+      // corpus costs more than the re-derivations it saves (the
+      // q_climate_qmap revert, one module over). At archive scale the
+      // fit trains on a bounded sample upstream anyway.
+      val sv = pqSubspaces(e, m, subDim)
+      val seedIds = e.select(col("vec_id")).orderBy(col("vec_id")).limit(k)
+      val seeds = sv.join(broadcast(seedIds), "vec_id")
+        .select(col("sub"), col("vec_id").as("cid"), col("vs").as("cv"))
+      def assign(cents: DataFrame): DataFrame = {
+        val cs = cents.groupBy(col("sub"))
+          .agg(collect_list(struct(col("cid"), col("cv"))).as("cs"))
+        def d2of(cc: Column): Column =
+          dot(col("vs"), col("vs")) -
+            (lit(2.0) * dot(col("vs"), cc.getField("cv"))) +
+            dot(cc.getField("cv"), cc.getField("cv"))
+        sv.join(broadcast(cs), "sub")
+          .withColumn("best", array_min(transform(col("cs"), cc =>
+            struct(d2of(cc).as("d2"), cc.getField("cid").as("cid")))))
+          .filter(col("best").isNotNull) // empty codebook ⇒ zero rows
+          .select(col("vec_id"), col("sub"), col("vs"),
+            col("best").getField("cid").as("cid"),
+            col("best").getField("d2").as("d2"))
+      }
+      // per-(sub, cid, dim) exact integer mean, re-quantized to the
+      // micros grid: floor(s/n + 0.5) — see the determinism note
+      def requantized(a: DataFrame): DataFrame =
+        a.select(col("sub"), col("cid"),
+            posexplode(col("vs")).as(Seq("dim", "mv")))
+          .groupBy(col("sub"), col("cid"), col("dim"))
+          .agg(sum(col("mv").cast("long")).as("s"), count(lit(1)).as("n"))
+          .groupBy(col("sub"), col("cid"))
+          .agg(transform(
+            array_sort(collect_list(struct(col("dim"),
+              // Spark floor() yields LONG; keep the codebook
+              // array<double> (integer-VALUED) like every vm array
+              floor(col("s").cast("double") / col("n").cast("double") + 0.5)
+                .cast("double").as("m")))),
+            x => x.getField("m")).as("cv"))
+      var cents = seeds
+      var a = assign(cents)
+      (2 to iters).foreach { _ =>
+        cents = requantized(a).cache() // small: m·k rows
+        a = assign(cents)
+      }
+      (a.cache(), cents)
+    }
   }
 
   /** The (vec_id, sub, vs) long form: subvector `sub` ∈ [0, m) holds
@@ -423,28 +395,23 @@ object Vectors {
     * IDENTICAL integer/IEEE steps in SQL. Fixed iteration count;
     * all-ones start (never orthogonal to the lead on real data);
     * max = 0 (all-zero input) keeps the iterate unscaled, zero-safely.
-    * Memoized per (session, input plan, iters): the loadings and
-    * scores keys share one Gram job. */
-  private val pcaCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int, Int), IndexedSeq[Long]]
-
+    * Memoized per (session, input plan, iters) in [[graft.Memo]]: the
+    * loadings and scores keys share one Gram job. */
   private[graft] def pcaLoadings(e: DataFrame,
                                  iters: Int = 3): IndexedSeq[Long] =
-    pcaCache.getOrElseUpdate(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(e.sparkSession),
-        e.queryExecution.analyzed.semanticHash(), iters), {
-        val u = e.select(col("vec_id"),
-          posexplode(transform(dbl(col("embedding")),
-            x => round(x * 1000L, 0).cast("long"))).as(Seq("i", "xi")))
-        val ua = u.select(col("vec_id"), col("i").as("ai"), col("xi").as("ax"))
-        val ub = u.select(col("vec_id"), col("i").as("bi"), col("xi").as("bx"))
-        val cRows = ua.join(ub, "vec_id")
-          .groupBy(col("ai"), col("bi"))
-          .agg(sum(col("ax") * col("bx")).as("cij"))
-          .collect()
-        powerIterate(cRows.map(r =>
-          (r.getInt(0), r.getInt(1), r.getLong(2))), iters)
-      })
+    graft.Memo.over(e, s"pca iters=$iters") {
+      val u = e.select(col("vec_id"),
+        posexplode(transform(dbl(col("embedding")),
+          x => round(x * 1000L, 0).cast("long"))).as(Seq("i", "xi")))
+      val ua = u.select(col("vec_id"), col("i").as("ai"), col("xi").as("ax"))
+      val ub = u.select(col("vec_id"), col("i").as("bi"), col("xi").as("bx"))
+      val cRows = ua.join(ub, "vec_id")
+        .groupBy(col("ai"), col("bi"))
+        .agg(sum(col("ax") * col("bx")).as("cij"))
+        .collect()
+      powerIterate(cRows.map(r =>
+        (r.getInt(0), r.getInt(1), r.getLong(2))), iters)
+    }
 
   /** The shared driver-side quantized power iteration over a sparse
     * integer Gram matrix (extracted r17 so the climate EOF op runs the

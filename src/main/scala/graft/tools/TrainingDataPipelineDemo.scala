@@ -157,7 +157,7 @@ object TrainingDataPipelineDemo {
       "sq8_vectors" -> sq8Rows)
     finally {
       Seq(gated, boiled, clean, deduped, sampled, emb).foreach(_.unpersist())
-      Vectors.clearKmeansCache()
+      graft.Memo.clear()
     }
   }
 

@@ -15,7 +15,7 @@ class DedupScaleSpec extends AnyFunSuite
   override def afterAll(): Unit = {
     // the md5-twin cap tests call the un-memoized builders directly,
     // registering tracked pre-cap caches — drain them on teardown
-    ops.Text.clearMhMd5Cache()
+    Memo.clear()
     super.afterAll()
   }
   lazy val spark: SparkSession = SparkSession.builder()

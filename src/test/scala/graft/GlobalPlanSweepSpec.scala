@@ -37,9 +37,7 @@ class GlobalPlanSweepSpec extends AnyFunSuite
     // suite on this SparkContext (cache lookups match by analyzed
     // plan), so drain on teardown rather than leak cached plans into
     // whoever runs next
-    ops.Text.clearMhMd5Cache()
-    ops.Climate.clearEnsembleCache()
-    ops.Profiling.clearMadCache()
+    Memo.clear()
     spark.catalog.clearCache()
     super.afterAll()
   }

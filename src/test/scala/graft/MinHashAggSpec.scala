@@ -62,7 +62,7 @@ class MinHashAggSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(shArr == shRows, "simhash pair sets diverge")
     // clean up the pre-cap caches both builders register
-    ops.Text.clearMhMd5Cache()
+    Memo.clear()
   }
 
   test("r18 kernel signatures == aggregate signatures on random multi-doc " +

@@ -14,9 +14,7 @@ class PlanAuditSpec extends AnyFunSuite
   override def afterAll(): Unit = {
     // the r6 shape test calls the un-memoized md5 builders directly,
     // registering tracked pre-cap caches — drain them on teardown
-    ops.Text.clearMhMd5Cache()
-    ops.Climate.clearEnsembleCache()
-    ops.Profiling.clearMadCache()
+    Memo.clear()
     super.afterAll()
   }
   lazy val spark: SparkSession = SparkSession.builder()
@@ -494,11 +492,11 @@ class PlanAuditSpec extends AnyFunSuite
     }
     // q_profile_mad: one scan in the memoized deviation-cache build +
     // one for the exact-gate probe — the pre-r17 shape had 3
-    ops.Profiling.clearMadCache() // count the cache BUILD's scan too
+    Memo.clear() // count the cache BUILD's scan too
     val pm = formatted("q_profile_mad")
     assert(eventsScans(pm) <= 2,
       s"q_profile_mad reads the events table ${eventsScans(pm)}×:\n$pm")
-    ops.Profiling.clearMadCache()
+    Memo.clear()
     // lm_fluency: the corpus-sized bigram stream must keep its ONE
     // merge-hinted join — the pre-r17 plan had zero SortMergeJoin
     // (the planner broadcast the exploded corpus side, an OOM at

@@ -19,7 +19,7 @@ class PqSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     .getOrCreate()
 
   override def afterAll(): Unit = {
-    ops.Vectors.clearPqCache()
+    Memo.clear()
     super.afterAll()
   }
 

@@ -452,12 +452,33 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("one memo mechanism: Sources and Streaming hand-roll no TrieMap memo") {
+    import scala.jdk.CollectionConverters._
+    def read(f: java.nio.file.Path): String =
+      new String(Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8)
+    def scalaFiles(d: String): Seq[java.nio.file.Path] = {
+      val st = Files.walk(java.nio.file.Paths.get(d))
+      try st.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      finally st.close()
+    }
     for (f <- Seq("src/main/scala/graft/sources/Sources.scala",
                   "src/main/scala/graft/ops/Streaming.scala")) {
-      val src = new String(Files.readAllBytes(java.nio.file.Paths.get(f)),
-        java.nio.charset.StandardCharsets.UTF_8)
+      val src = read(java.nio.file.Paths.get(f))
       assert(!src.contains("TrieMap") && !src.contains("getOrElseUpdate"),
         s"$f memoizes outside graft.Memo")
     }
+    val opsAndSources = scalaFiles("src/main/scala/graft/ops") ++
+      scalaFiles("src/main/scala/graft/sources")
+    assert(opsAndSources.size > 20, "vacuous file list")
+    for (f <- opsAndSources)
+      assert(!read(f).contains("TrieMap"), s"$f memoizes outside graft.Memo")
+    // one release path: Memo.clear(), no per-module twin
+    val release = """def\s+(clear\w*Cache|clearIndexes)\b""".r
+    for (f <- scalaFiles("src/main/scala"))
+      assert(release.findFirstIn(read(f)).isEmpty, s"$f defines a per-module release method")
+    // Tables keeps only tuneForScale's two maps
+    val tables = read(java.nio.file.Paths.get("src/main/scala/graft/Tables.scala"))
+    val maps = """val\s+(\w+)\s*=\s*TrieMap""".r.findAllMatchIn(tables).map(_.group(1)).toSet
+    assert(maps == Set("dirSize", "sessionDefaults"))
+    assert("TrieMap".r.findAllIn(tables).size == 3, "Tables declares a TrieMap besides its two maps")
   }
 }
