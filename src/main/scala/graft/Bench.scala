@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** `s` as a JSON string literal: the paths the two printed lines
     * embed may hold quotes, backslashes or control characters. */
@@ -12,23 +11,20 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default 32: the contract's local[32] box. Measured at sf0.1/149
-    // keys: 60.8 s vs 80.5-83.6 s at the old local[4] default — the
-    // CPU-bound md5/dedup keys scale near-linearly while the ~0.2 s
-    // keys pay no visible extra per-task overhead. Output is proven
-    // layout-invariant (local[16]/local[7] byte-identity, BASELINE.md).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
+    val failed = Seq.newBuilder[String]
     val results = SparkEntry.queries.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
+      val error = try { fn(spark, sfDir).count(); None } catch { case e: Throwable => Some(e) }
+      val seconds = (System.nanoTime() - t0) / 1e9
+      error.foreach { e =>
+        failed += name
+        System.err.println(s"[bench] $name failed: $e")
+        e.getStackTrace.take(8).foreach(f => System.err.println(s"[bench]   at $f"))
+      }
+      name -> seconds
     }
+    val failedJson = failed.result().map(jsonString).mkString("[", ",", "]")
     // member order inside the one JSON line is chosen for the harness's
     // stdout TAIL capture (last ~2000 chars): queries ASCENDING by cost
     // and the total LAST, so the tail always carries the most expensive
@@ -40,7 +36,7 @@ object Bench {
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val fullLine =
-      s"""{"metric":"total","unit":"sec","sf":${jsonString(sfDir)},"queries":$qs,"value":$total}"""
+      s"""{"metric":"total","unit":"sec","sf":${jsonString(sfDir)},"queries":$qs,"failed":$failedJson,"value":$total}"""
     println(fullLine)
     // r18 (VERDICT r17 #1): the full line is ~6 KB, so the driver's
     // 2000-char stdout tail has NEVER contained a parseable JSON line
@@ -59,7 +55,7 @@ object Bench {
         .split("\\s+").take(3).mkString("[", ",", "]")
       catch { case _: Exception => "[]" }
     println(s"""{"metric":"total","unit":"sec","sf":${jsonString(sfDir)},""" +
-      s""""n":${results.size},"value":$total,"loadavg":$loadavg,""" +
+      s""""n":${results.size},"failed":$failedJson,"value":$total,"loadavg":$loadavg,""" +
       s""""results":${jsonString(resultsPath.toString)}}""")
     spark.stop()
   }

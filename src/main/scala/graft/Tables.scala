@@ -32,14 +32,6 @@ object Tables {
   private val cacheable = Set("region", "nation", "customer", "supplier",
     "part", "documents", "embeddings")
 
-  /** Tiny-input fast path (measured: AQE's re-optimization loop costs
-    * ~18% of total wall-clock across the query set at sf0.1 while
-    * having nothing to adapt — no skew, no partitions to coalesce at
-    * 4-32 shuffle partitions). Below 256 MB of total input, turn AQE
-    * off for the session; at production scale the gate leaves it on,
-    * where runtime re-planning (skew splits, join demotion) is worth
-    * its cost. Size, not scale-factor name, drives the decision. */
-  /** Set SPARK_GRAFT_NOTUNE=1 to leave AQE/partition confs untouched. */
   private val dirSize = TrieMap.empty[String, Long]
   private val sessionDefaults = TrieMap.empty[String, (String, String)]
 
@@ -47,14 +39,20 @@ object Tables {
     if (f.isDirectory) Option(f.listFiles()).map(_.map(dirBytes).sum).getOrElse(0L)
     else f.length()
 
+  /** Tiny-input fast path (measured: AQE's re-optimization loop costs
+    * ~18% of total wall-clock across the query set at sf0.1 while
+    * having nothing to adapt — no skew, no partitions to coalesce at
+    * 4-32 shuffle partitions). Below 256 MB of total input, turn AQE
+    * off for the session; at production scale the gate leaves it on,
+    * where runtime re-planning (skew splits, join demotion) is worth
+    * its cost. Size, not scale-factor name, drives the decision.
+    * Set SPARK_GRAFT_NOTUNE=1 to leave AQE/partition confs untouched. */
   // synchronized: the conf writes are session-global, so two threads
   // loading dirs of different sizes concurrently would interleave the
   // AQE/partition settings (harness is single-threaded; the lock makes
   // the library safe for concurrent callers at negligible cost)
   private def tuneForScale(spark: SparkSession, sfDir: String): Unit = synchronized {
-    // env for operators; system property for in-process tools (AqeProbe)
-    if (sys.env.get("SPARK_GRAFT_NOTUNE").contains("1")
-      || sys.props.get("graft.notune").contains("1")) return
+    if (sys.env.get("SPARK_GRAFT_NOTUNE").contains("1")) return
     // size measured RECURSIVELY (Spark-written tables are directories of
     // part files — a flat sum would see ~4 KB per table and misfire the
     // gate on production-scale data) and memoized per dir; the conf is

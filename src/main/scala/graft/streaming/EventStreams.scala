@@ -393,13 +393,7 @@ object EventStreams {
   /** Smoke-run all four against a memory sink, synchronously. */
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(4)
     val runs = Seq[(String, DataFrame => DataFrame, String)](
       ("stream_tumbling", tumbling, "append"),
       ("stream_sliding", sliding, "append"),

@@ -2,7 +2,6 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskStart,
   SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Retry determinism proof (r13, r11 verdict item 2): run the EXACT
   * driver dump loop (`graft.Verify.main`) under forced task
@@ -24,7 +23,7 @@ import org.apache.spark.sql.SparkSession
   *     where the kill lands before completion (tiny tasks can win the
   *     race; the printed counter reports how many landed).
   *   - the dump itself is `Verify.main` verbatim: creating THIS session
-  *     first makes Verify's `getOrCreate()` adopt it (master/UI are
+  *     first makes Verify's `Session.local()` adopt it (master/UI are
   *     final; its runtime confs match ours), so the loop under test is
   *     the driver's own, not a copy.
   *
@@ -45,13 +44,7 @@ import org.apache.spark.sql.SparkSession
 object ChaosVerify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus, 4]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(maxFailures = 4)
     val sc = spark.sparkContext
     sc.setLogLevel("ERROR") // kill-induced task logs would flood WARN
     val killed = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()

@@ -168,13 +168,7 @@ object TrainingDataPipelineDemo {
         "usage: TrainingDataPipelineDemo <sfDir> [outDir]  (or set SPARK_GRAFT_SF_DIR)"))
     val out = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft_pipeline").toString)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(4)
     run(spark, dir, out).foreach { case (stage, n) =>
       val unit = stage match {
         case "semantic_clusters" => "clusters"

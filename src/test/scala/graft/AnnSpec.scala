@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** IVF index contract: bounded deterministic training sample, build
   * once / search many, persistable. */
-class AnnSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class AnnSpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
   private def corpus = Tables.embeddings(spark, dir).filter(col("vec_id") >= 10)
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.plans.AsOf
@@ -8,14 +7,7 @@ import graft.plans.AsOf
 /** The custom AsOfJoinExec must agree with the oracle-matched window
   * emulation (q_join_asof) on the same task: most recent prior signup
   * per purchase, per user. */
-class AsOfJoinSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class AsOfJoinSpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("AsOfJoinExec plan is used and matches the window emulation") {
@@ -142,5 +134,11 @@ class AsOfJoinSpec extends AnyFunSuite {
       AsOf.join(spark, l, r, "k", "k2", "t", "t2")
     }
     assert(e.getMessage.contains("share one data type"))
+  }
+
+  test("AsOf.register is idempotent: two calls install one strategy") {
+    AsOf.register(spark)
+    AsOf.register(spark)
+    assert(spark.experimental.extraStrategies.count(_ eq AsOf.AsOfStrategy) == 1)
   }
 }

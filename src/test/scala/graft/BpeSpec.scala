@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.TextAnalysis
 
 /** Laws for the deterministic BPE tokenizer (r17): merge learning,
   * greedy longest-match application, and the frozen-table query op. */
-class BpeSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class BpeSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   test("merge learning is deterministic and ties break lexically") {

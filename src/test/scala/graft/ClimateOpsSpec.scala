@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.ClimateOps
 
 /** FIXTURES §3 mini-climate-grid: hand-computed expectations for the
   * bcdp-surface transforms (SURVEY §2.1 R3-R12). */
-class ClimateOpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ClimateOpsSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   // 2 datasets × 4 timesteps (2 in DJF) × (2 lats × 2 lons, one lon ≥ 180)

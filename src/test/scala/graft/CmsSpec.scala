@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,15 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * sketch is exact on this vocabulary, partial-merge across partitions
   * equals a single-pass build, and a deliberately narrow sketch
   * overestimates (proving it actually collides rather than growing). */
-class CmsSpec extends AnyFunSuite {
+class CmsSpec extends AnyFunSuite with SparkSuite {
   import graft.expressions.CountMinAgg.{cms_sketch, cms_estimate}
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private val dir = "/root/testdata/sf0.001"
 

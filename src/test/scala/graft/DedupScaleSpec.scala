@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,22 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * These tests plant the degenerate input (1,000 identical boilerplate
   * docs — the crawl-data worst case) and assert pair output stays
   * linear, not quadratic. */
-class DedupScaleSpec extends AnyFunSuite
-    with org.scalatest.BeforeAndAfterAll {
-
-  override def afterAll(): Unit = {
-    // the md5-twin cap tests call the un-memoized builders directly,
-    // registering tracked pre-cap caches — drain them on teardown
-    Memo.clear()
-    super.afterAll()
-  }
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class DedupScaleSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   /** 1,000 byte-identical docs + 1 guaranteed near-dup pair + 2

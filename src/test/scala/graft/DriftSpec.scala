@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Profiling
 
 /** Laws for the drift report (r17): zero drift on identical slices,
   * sign/direction on a planted shift, and count conservation. */
-class DriftSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class DriftSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   test("identical slices report zero drift in every bin") {

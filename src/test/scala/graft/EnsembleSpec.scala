@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The bcdp-style chained pipeline over the fluent Ensemble facade. */
-class EnsembleSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class EnsembleSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def member(name: String, lats: Seq[Double]) = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.ClimateOps
@@ -8,13 +7,7 @@ import graft.ops.ClimateOps
 /** Laws for the EOF decomposition (r17): exact mean removal, the
   * anti-correlated-cells sign structure, the zero-variance field, and
   * the PC series re-derived driver-side from the quantized field. */
-class EofSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class EofSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   // two anti-correlated cells with different amplitudes: cell 1 swings

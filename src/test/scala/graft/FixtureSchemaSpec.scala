@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,14 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * loud-failure paths (unsupported type; non-UTC session TZ under the
   * NTZ cast).
   */
-class FixtureSchemaSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class FixtureSchemaSpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   /** Raw observed schema — deliberately NOT via Tables.table, so this

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,27 +27,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * without ever producing a CartesianProduct, and only the allowlist
   * catches that O(n·m) degeneration on the other 130 keys.
   */
-class GlobalPlanSweepSpec extends AnyFunSuite
-    with org.scalatest.BeforeAndAfterAll {
-
-  override def afterAll(): Unit = {
-    // constructing every key caches the dimension tables AND registers
-    // tracked operator caches; the CacheManager is shared across every
-    // suite on this SparkContext (cache lookups match by analyzed
-    // plan), so drain on teardown rather than leak cached plans into
-    // whoever runs next
-    Memo.clear()
-    spark.catalog.clearCache()
-    super.afterAll()
-  }
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class GlobalPlanSweepSpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   // q_stream_upsert: constructing it runs the whole 4-batch streaming
@@ -69,7 +48,8 @@ class GlobalPlanSweepSpec extends AnyFunSuite
     * (cartesian / single-partition exchange / nested-loop join): scan
     * every key's executedPlan for `fragment`, assert hits ⊆ `allowed`
     * (r11 review find — three hand-copied blocks consolidated). The
-    * matching audit tools are graft.tools.{SinglePart,Bnlj}Probe. */
+    * matching audit is a `grep -l <fragment>` over the plan files
+    * `graft.tools.Profile --plan DIR` writes. */
   private def assertFragmentAllowlisted(fragment: String,
                                         allowed: Set[String],
                                         what: String): Unit = {
@@ -107,20 +87,21 @@ class GlobalPlanSweepSpec extends AnyFunSuite
   }
 
   test("single-partition exchanges stay within the declared bounded-reduction set") {
-    // The r10 SinglePartProbe audit found exactly 16 keys planning an
-    // `Exchange SinglePartition`, each argued bounded (single-row
-    // global aggregates, scalar watermark/threshold gates, ≤15-row hot
-    // sets, the two declared global-window quantile keys). A blanket
-    // ban was rejected then — there is no structural signal separating
-    // a bounded reduction from a funnel — but the SET is a contract:
-    // this sweep makes the probe's finding standing, so a future edit
-    // that collapses some other key's shuffle into one partition (the
-    // classic lost-distribution regression: a coalesce(1), a global
-    // orderBy feeding an agg, a window losing its partitionBy AFTER
-    // the optimizer) names itself here instead of surfacing at the
-    // driver as a mystery slowdown. A NEW name must be argued bounded
-    // in a comment and added; a DISAPPEARED name is fine (tighter plan,
-    // subset assertion only).
+    // The r10 single-partition audit (now a `grep -l "Exchange
+    // SinglePartition"` over the `Profile --plan` files) found exactly
+    // 16 keys planning an `Exchange SinglePartition`, each argued
+    // bounded (single-row global aggregates, scalar watermark/threshold
+    // gates, ≤15-row hot sets, the two declared global-window quantile
+    // keys). A blanket ban was rejected then — there is no structural
+    // signal separating a bounded reduction from a funnel — but the SET
+    // is a contract: this sweep makes the audit's finding standing, so
+    // a future edit that collapses some other key's shuffle into one
+    // partition (the classic lost-distribution regression: a
+    // coalesce(1), a global orderBy feeding an agg, a window losing its
+    // partitionBy AFTER the optimizer) names itself here instead of
+    // surfacing as a mystery slowdown at scale. A NEW name must be
+    // argued bounded in a comment and added; a DISAPPEARED name is fine
+    // (tighter plan, subset assertion only).
     val allowed = Set(
       "q_agg_cms", "q_agg_global",                       // 1-row global aggs
       "q_climate_ensemble", "q_climate_pipeline",        // scalar ensemble stats
@@ -151,7 +132,8 @@ class GlobalPlanSweepSpec extends AnyFunSuite
   }
 
   test("nested-loop joins stay within the declared bounded-broadcast set") {
-    // The r11 BnljProbe audit: exactly 19 keys plan a
+    // The r11 nested-loop audit (now `grep -l BroadcastNestedLoopJoin`
+    // over the `Profile --plan` files): exactly 19 keys plan a
     // BroadcastNestedLoopJoin, every one with a bounded broadcast side
     // — 1-row scalar gates (cms/expect/watermark/closed-stream), ≤15-row
     // hot sets (boilerplate), bounded vocab/top-k (tfidf/heavyhitters),

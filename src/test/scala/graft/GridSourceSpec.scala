@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The DSv2 grid source must produce exactly the uniform mesh, in
   * parallel partitions, with correct cell centers. */
-class GridSourceSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class GridSourceSpec extends AnyFunSuite with SparkSuite {
   private def grid(opts: (String, String)*) = {
     val r = spark.read.format("graft.sources.GridSource")
     opts.foldLeft(r) { case (b, (k, v)) => b.option(k, v) }.load()

@@ -4,7 +4,6 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{Hdf5Classic, NetcdfClassic}
@@ -18,14 +17,7 @@ import graft.sources.NetcdfClassic.{NcAttr, NcDim}
   * named rejections for every out-of-scope feature (so an unsupported
   * file can NEVER be read wrong silently), and the distributed loader
   * end-to-end into the climate ops — mirroring NetcdfSpec. */
-class Hdf5Spec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class Hdf5Spec extends AnyFunSuite with SparkSuite {
   // ---- hand-assembled spec-literal fixture --------------------------
   // One dataset "v" in the root group; datatype / layout / data bytes
   // are injectable so the same skeleton covers f64-contiguous,

@@ -1,29 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SURVEY §5.2 cross-query invariants on sf0.001 — structural relations
   * that must hold between independent query results. */
-class InvariantsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  override def afterAll(): Unit = {
-    // the inertia law above leaves iters=1 and iters=2 fits in the
-    // session-scoped memo, and the ensemble law materializes the
-    // member union — drop both so no cached DataFrame outlives this
-    // suite's session
-    Memo.clear()
-    super.afterAll()
-  }
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class InvariantsSpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
   private def q(name: String) = SparkEntry.queries(name)(spark, dir)
 

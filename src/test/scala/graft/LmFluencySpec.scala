@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.TextAnalysis
 
@@ -8,13 +7,7 @@ import graft.ops.TextAnalysis
   * integer scoring replayed by hand on a closed fixture, and the
   * textbook perplexity (the law-tested double API the graded key
   * deliberately does NOT hash — see lmFluency's scaladoc). */
-class LmFluencySpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class LmFluencySpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   // corpus: bigrams (a,b)×3, (b,a)×1; hist a=3, b=1; vocab {a,b,c} V=3

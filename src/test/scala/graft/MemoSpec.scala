@@ -2,28 +2,15 @@ package graft
 
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The one memo ([[Memo]]): plan-keyed entries hit on structurally
   * equal inputs built independently — as the graded keys build theirs
   * on every call — and miss on a changed parameter or input; `clear()`
   * releases every frame the memo persisted. */
-class MemoSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = {
-    Memo.clear()
-    super.afterAll()
-  }
-
+class MemoSpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   // each call builds a new plan object over the memoized base table
@@ -106,9 +93,8 @@ class MemoSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("Memo.clear() releases every held and tracked frame; keys rebuild after it") {
     val sc = spark.sparkContext
-    // suites share this SparkContext: start from no cached plan at all,
-    // so no frame another suite left cached can share a plan with an
-    // entry built here
+    // start from no cached plan at all, so no frame an earlier test in
+    // this suite left cached can share a plan with an entry built here
     Memo.clear()
     spark.catalog.clearCache()
     val before = sc.getPersistentRDDs.keySet

@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The one-pass MinHash UDAF must be bit-identical to the composed
   * numPerm-min-aggregates form it replaces. */
-class MinHashAggSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class MinHashAggSpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
   private val numPerm = 16
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * BMP/WAV decoders are real — byte-level golden fixtures assert
   * actual pixel/sample values; only codec-library formats (JPEG/MP4)
   * remain behind the documented opaque fallback. */
-class MultimodalSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class MultimodalSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private val dir = "/root/testdata/sf0.001"

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,14 +12,7 @@ import NetcdfClassic.{NcAttr, NcDim}
 /** Laws for the ESGF-style catalog/manifest layer (r14, reference R2's
   * local half): envelope recording, facet-equivalence with the
   * unpruned read, and OBSERVABLE planning-time member pruning. */
-class NcCatalogSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class NcCatalogSpec extends AnyFunSuite with SparkSuite {
   private def tmpDir(tag: String): String =
     Files.createTempDirectory(s"nccat-$tag").toString
 

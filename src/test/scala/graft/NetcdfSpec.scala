@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{NetcdfClassic, NetcdfSource}
@@ -12,14 +11,7 @@ import graft.sources.NetcdfClassic.{NcAttr, NcDim}
   * (assembled by hand, independent of the writer, straight from the
   * Unidata spec), writer↔parser round-trip, and the distributed
   * long-form loader end-to-end into the climate ops. */
-class NetcdfSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class NetcdfSpec extends AnyFunSuite with SparkSuite {
   test("parser reads a hand-assembled spec-literal file") {
     // CDF-1: one dim "x"(3), no gattrs, one double var "v"(x) with one
     // char attr units="m" — every byte placed per the classic spec

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{Hdf5Classic, NetcdfClassic, NetcdfV2}
@@ -19,14 +19,7 @@ import graft.sources.NetcdfClassic.{NcAttr, NcDim}
   * (`SQLOrderingUtil.compareDoubles`): pushed filters are claimed
   * fully-handled, so a single coordinate Spark would keep but the scan
   * drops (or vice versa) is a wrong-results bug, not a perf bug. */
-class NetcdfV2Spec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class NetcdfV2Spec extends AnyFunSuite with SparkSuite {
   private def tmpDir(tag: String): String =
     Files.createTempDirectory(s"ncv2-$tag").toString
 

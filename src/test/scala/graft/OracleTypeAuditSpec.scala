@@ -50,11 +50,7 @@ class OracleTypeAuditSpec extends AnyFunSuite {
       // TYPES are tier- and partition-count-independent either way.
       val spark = org.apache.spark.sql.SparkSession.getActiveSession
         .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-        .getOrElse(org.apache.spark.sql.SparkSession.builder()
-          .master("local[2]")
-          .config("spark.sql.shuffle.partitions", "2")
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false").getOrCreate())
+        .getOrElse(Session.local(2))
       missing.foreach { d =>
         SparkEntry.queries(s"q_source_${d}_roundtrip")(spark, sfDir).count()
       }
@@ -90,11 +86,7 @@ class OracleTypeAuditSpec extends AnyFunSuite {
     // confs to it; schemas need analysis only, so any session works
     val spark = org.apache.spark.sql.SparkSession.getActiveSession
       .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .getOrElse(org.apache.spark.sql.SparkSession.builder()
-        .master("local[2]")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate())
+      .getOrElse(Session.local(2))
     val ok: Set[DataType] =
       Set(LongType, DoubleType, StringType, BooleanType, IntegerType)
     val bad = SparkEntry.oracleSql.keys.toSeq.sorted.flatMap { key =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * pin the ALGEBRA: the 1e6-grid normalization invariant, genuine
   * spectral progress on the true Gram matrix, and score fidelity
   * re-derived independently of the engine. */
-class PcaSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PcaSpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private lazy val kilos: Map[Long, Array[Long]] =

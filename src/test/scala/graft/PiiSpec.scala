@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,14 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * doc_id rule says, redaction is complete (a second detection pass
   * over redacted text finds nothing), and non-planted text is
   * untouched. */
-class PiiSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PiiSpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
   private def planted = ops.TextAnalysis.plantPii(Tables.documents(spark, dir))
 

@@ -1,21 +1,13 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Smoke + shape checks for the end-to-end curation pipeline demo: the
   * stages must be monotonically non-increasing (each is a filter over
   * the previous), the output non-empty, and the written parquet must
   * agree with the reported sample count. */
-class PipelineDemoSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PipelineDemoSpec extends AnyFunSuite with SparkSuite {
   // one literal for BOTH the demo input and the embeddings cross-check
   // below — two copies could drift to different tiers (r9 advice)
   private val dir = "/root/testdata/sf0.001"

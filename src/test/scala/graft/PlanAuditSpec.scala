@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,22 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * scale to 100 TB. Each assertion names the plan feature it guards:
   * losing it wouldn't fail correctness tests, only blow up at scale,
   * so it must be guarded explicitly. */
-class PlanAuditSpec extends AnyFunSuite
-    with org.scalatest.BeforeAndAfterAll {
-
-  override def afterAll(): Unit = {
-    // the r6 shape test calls the un-memoized md5 builders directly,
-    // registering tracked pre-cap caches — drain them on teardown
-    Memo.clear()
-    super.afterAll()
-  }
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PlanAuditSpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,19 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * argmin optimality against the returned codebook, the integer-grid
   * codebook invariant that makes every distance exact, and the
   * compression-vs-recall trade of brute-ADC search. */
-class PqSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = {
-    Memo.clear()
-    super.afterAll()
-  }
-
+class PqSpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
   private def model = ops.Vectors.pqModel(Tables.embeddings(spark, dir))
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, ByteType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * its graded search key: the mathematical error bound, the int8 value
   * range, the byte-packed storage form, the zero-vector guard, and the
   * compression-vs-recall trade against the exact cosine ranking. */
-class QuantizeSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class QuantizeSpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("reconstruction error is bounded by scale/2 on every vector") {

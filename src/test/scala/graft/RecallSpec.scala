@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * documents for sf0.01: seven 3-gram-Jaccard ≥ 0.95 near-dup pairs
   * within the first 300 doc ids. Turns "spark_rows > 0" into measured
   * recall/precision. */
-class RecallSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class RecallSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private val dir = "/root/testdata/sf0.01"

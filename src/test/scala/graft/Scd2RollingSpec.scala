@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{ClimateOps, Joins}
 
 /** Laws for the r17 rolling-mean and SCD2 ops: hand-replayed windows,
   * version maximality, interval chaining, and NULL-state tracking. */
-class Scd2RollingSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class Scd2RollingSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   test("rollingMean replayed by hand, min_periods nulls the head") {

@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Skew
 
 /** Salting rewrites must be result-identical to the unsalted forms. */
-class SkewSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SkewSpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("saltedSum(cents) == plain groupBy sum") {

@@ -1,20 +1,12 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{NetcdfSource, Sources}
 
 /** CSV/JSON round-trips must be lossless against the parquet truth. */
-class SourcesSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SourcesSpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("CSV round-trip of customer is lossless") {
@@ -451,15 +443,16 @@ class SourcesSpec extends AnyFunSuite {
     assert(run() == first)
   }
 
-  test("one memo mechanism: Sources and Streaming hand-roll no TrieMap memo") {
+  private def read(f: java.nio.file.Path): String =
+    new String(Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8)
+  private def scalaFiles(d: String): Seq[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
-    def read(f: java.nio.file.Path): String =
-      new String(Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8)
-    def scalaFiles(d: String): Seq[java.nio.file.Path] = {
-      val st = Files.walk(java.nio.file.Paths.get(d))
-      try st.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-      finally st.close()
-    }
+    val st = Files.walk(java.nio.file.Paths.get(d))
+    try st.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    finally st.close()
+  }
+
+  test("one memo mechanism: Sources and Streaming hand-roll no TrieMap memo") {
     for (f <- Seq("src/main/scala/graft/sources/Sources.scala",
                   "src/main/scala/graft/ops/Streaming.scala")) {
       val src = read(java.nio.file.Paths.get(f))
@@ -480,5 +473,17 @@ class SourcesSpec extends AnyFunSuite {
     val maps = """val\s+(\w+)\s*=\s*TrieMap""".r.findAllMatchIn(tables).map(_.group(1)).toSet
     assert(maps == Set("dirSize", "sessionDefaults"))
     assert("TrieMap".r.findAllIn(tables).size == 3, "Tables declares a TrieMap besides its two maps")
+  }
+
+  test("one session builder and one profiler: Session.local is the only builder, Profile the only probe") {
+    def isComment(line: String) = Seq("*", "/*", "//").exists(line.trim.startsWith)
+    val builders = scalaFiles("src/main/scala").filter { f =>
+      read(f).linesIterator.exists(l =>
+        !isComment(l) && l.split("//").head.contains("SparkSession.builder"))
+    }.map(_.getFileName.toString)
+    assert(builders == Seq("Session.scala"), s"session builders outside Session.scala: $builders")
+    val tools = scalaFiles("src/main/scala/graft/tools").map(_.getFileName.toString).toSet
+    assert(tools == Set("Profile.scala", "ChaosVerify.scala",
+      "ClimatePipelineDemo.scala", "TrainingDataPipelineDemo.scala"))
   }
 }

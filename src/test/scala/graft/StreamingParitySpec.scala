@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.EventStreams
@@ -12,14 +11,7 @@ import graft.streaming.EventStreams
   *  - tumbling: streaming append-mode output = batch output MINUS the
   *    windows the final watermark hasn't passed (still-open tail).
   */
-class StreamingParitySpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class StreamingParitySpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def runStream(name: String,

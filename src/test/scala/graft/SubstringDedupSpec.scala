@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.TextAnalysis
 
 /** Laws for exact substring-span dedup (r17): span boundaries replayed
   * by hand, overlap/adjacency merging, gap splitting, within-doc
   * repeats, and the all-unique zero-row family law. */
-class SubstringDedupSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SubstringDedupSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def words(prefix: String, n: Int): String =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.expressions.{TextExpressions, TextKernels}
@@ -11,15 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * fixture corpus, on adversarial edge strings, and on seeded random
   * unicode soup. Also pins that the graded keys actually run the
   * native expression inside a codegen span. */
-class TextExpressionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class TextExpressionsSpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("kernel matches the split/ceil model on edge strings") {

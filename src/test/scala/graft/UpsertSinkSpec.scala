@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.UpsertSink
@@ -20,14 +19,7 @@ import graft.streaming.UpsertSink
   *  - fixpoint: the graded key's streamed-then-merged table equals the
   *    complete batch aggregation (the q_stream_tumbling fixpoint).
   */
-class UpsertSinkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class UpsertSinkSpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def freshTable(): String =

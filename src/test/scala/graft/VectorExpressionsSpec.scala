@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.expressions.VectorExpressions.{cosine_sim, dot_product}
@@ -8,14 +7,7 @@ import graft.expressions.VectorExpressions.{cosine_sim, dot_product}
 /** The custom codegen expressions must be BIT-IDENTICAL to the
   * higher-order-function formulation (same index-order accumulation),
   * otherwise they cannot replace it in oracle-matched queries. */
-class VectorExpressionsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class VectorExpressionsSpec extends AnyFunSuite with SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def dbl(c: org.apache.spark.sql.Column) = transform(c, x => x.cast("double"))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{NetcdfSource, ZarrStore}
@@ -10,13 +9,7 @@ import java.nio.file.{Files, Paths}
   * grids, chunk pruning by name arithmetic, fill/missing-chunk
   * masking, the xarray interop conventions, every named rejection,
   * and the raw/zlib/gzip/endianness decode paths. */
-class ZarrSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ZarrSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def tmpDir(tag: String): String = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,14 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * a reference bit-interleave, and a z-ordered range partitioning
   * bounds EVERY dimension's per-partition spread where a
   * lexicographic sort bounds only the leading dimension's. */
-class ZorderSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ZorderSpec extends AnyFunSuite with SparkSuite {
   private def mortonRef(xs: Seq[Long], bits: Int): Long = {
     val n = xs.length
     var z = 0L

@@ -26,7 +26,8 @@ replaced by equivalent scalable ones.
 
 Usage: python3 tools/decade_dedup_oracle.py <sfDir> <engineDumpDir>
   where <engineDumpDir> holds q_dedup_clusters_md5/ and
-  q_dedup_simhash_md5/ parquet dirs (graft.tools.RetryKeys output).
+  q_dedup_simhash_md5/ parquet dirs, as written by
+  `graft.Verify <sfDir> <out> q_dedup_clusters_md5,q_dedup_simhash_md5`.
 """
 import sys, glob, os
 import duckdb
