@@ -195,30 +195,21 @@ object Ensemble {
       spark.read.parquet(path).withColumn("dataset", lit(name))
     }.reduce(_ unionByName _))
 
-  /** bcdp `load_local` for a Zarr v2 store (r17) — one member per
-    * store; `bounds` prunes non-intersecting chunk files from the
-    * manifest by name arithmetic before anything is opened (see
-    * [[graft.sources.ZarrStore.readGrid]]). */
-  def loadZarr(spark: SparkSession, storePath: String, varName: String,
-               bounds: Option[graft.sources.NetcdfSource.GridBounds] = None)
-      : Ensemble =
-    Ensemble(graft.sources.ZarrStore
-      .readGrid(spark, storePath, varName, bounds)
-      .select(col("dataset"), col("time"), col("lat"), col("lon"),
-        col("value")))
-
-  /** bcdp `load_local` for grid-file ensembles: every file the glob
-    * matches becomes a member (dataset = file basename), read through
-    * the DSv2 `netcdf` format with the format auto-detected per file
-    * from the magic bytes — NetCDF-3 classic and NetCDF-4/HDF5 (incl.
-    * chunked/compressed; see [[graft.sources.Hdf5Classic]]) members
-    * load side by side, the mid-migration state every real CMIP mirror
-    * is in. Every member must carry `varName`. Coordinate-variable
-    * names are overridable for archives using latitude/longitude.
-    * `bounds` filters by [[graft.sources.NetcdfSource.GridBounds.predicate]],
-    * which the scan takes as pushed filters — the load-time form of
+  /** bcdp `load_local` for grid-file ensembles: every file and every
+    * Zarr v2 store (a directory holding `.zgroup`) the glob matches
+    * becomes a member (dataset = its basename), read through the DSv2
+    * `netcdf` format with the format auto-detected per file from the
+    * magic bytes — NetCDF-3 classic, NetCDF-4/HDF5 (incl.
+    * chunked/compressed; see [[graft.sources.Hdf5Classic]]) and Zarr
+    * (see [[graft.sources.ZarrStore]]) members load side by side, the
+    * mid-migration state every real CMIP mirror is in. Every member
+    * must carry `varName`. Coordinate-variable names are overridable
+    * for archives using latitude/longitude. `bounds` filters by
+    * [[graft.sources.NetcdfSource.GridBounds.predicate]], which the
+    * scan takes as pushed filters — the load-time form of
     * [[Ensemble.subset]]: rows outside never materialize, and
-    * compressed HDF5 chunks that don't intersect are never inflated. */
+    * compressed HDF5 or Zarr chunks that don't intersect are never
+    * inflated. */
   def loadGrid(spark: SparkSession, pathGlob: String, varName: String,
                latVar: String = "lat", lonVar: String = "lon",
                timeVar: String = "time",

@@ -1,5 +1,10 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets
+import scala.collection.mutable
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
@@ -15,15 +20,17 @@ import org.apache.spark.sql.types._
   * layouts, and the standard filter pipeline (deflate via the JDK's
   * `java.util.zip.Inflater`, shuffle, fletcher32, NBIT, SCALEOFFSET).
   * Only szip (a genuinely native codec) rejects with a NAMED error.
+  * Zarr v2 stores are parsed by [[ZarrStore]].
   *
-  * Every grid read and write goes through the DataSourceV2 `netcdf`
-  * format ([[NetcdfV2]]): `spark.read.format("netcdf")` emits the long
-  * form with Catalyst-pushed hyperslab pruning, and
-  * `df.write.format("netcdf")` is the staged, driver-committed sink.
-  * This object holds what that source shares with the catalog and the
-  * Zarr store: CF time decoding, [[GridBounds]], the format-agnostic
-  * [[GridView]] over one parsed file, the fill mask, and the member
-  * encoder [[buildMemberBytes]].
+  * Every grid read goes through the DataSourceV2 `netcdf` format
+  * ([[NetcdfV2]]): `spark.read.format("netcdf")` emits the long form of
+  * classic and HDF5 files and Zarr stores alike, with Catalyst-pushed
+  * hyperslab pruning; `df.write.format("netcdf")` is the staged,
+  * driver-committed sink for the two NetCDF containers. This object
+  * holds what that source shares with the catalog and the Zarr store:
+  * CF time decoding, [[GridBounds]], the format-agnostic [[GridView]]
+  * over one member, the fill mask, and the member encoder
+  * [[buildMemberBytes]].
   */
 object NetcdfSource {
 
@@ -105,10 +112,11 @@ object NetcdfSource {
     }
   }
 
-  /** The two self-describing grid container formats behind ONE view:
+  /** The three self-describing grid container formats behind ONE view:
     * axis names of a variable, raw values, and an attribute lookup.
-    * NetCDF-3 names axes via dim ids; NetCDF-4/HDF5 via DIMENSION_LIST
-    * dimension scales (see [[Hdf5Classic]]). */
+    * NetCDF-3 names axes via dim ids, NetCDF-4/HDF5 via DIMENSION_LIST
+    * dimension scales (see [[Hdf5Classic]]), Zarr via the xarray
+    * `_ARRAY_DIMENSIONS` attribute. */
   private[sources] sealed trait GridView {
     /** Every dataset/variable name in the file (coordinates included) —
       * the DSv2 source's variable discovery walks this. */
@@ -166,10 +174,70 @@ object NetcdfSource {
     def attrs(v: String): Seq[NetcdfClassic.NcAttr] = h5.variable(v).attrs
   }
 
+  /** A Zarr v2 store: its arrays are the variables, `_ARRAY_DIMENSIONS`
+    * names their axes, `.zattrs` holds the attributes, and `.zarray`'s
+    * `fill_value` is reported as `_FillValue`, so [[FillMask]] is the
+    * one masking rule for all three formats. Slabs decode only the
+    * chunks they touch ([[ZarrStore.readSlab]]). */
+  private final class ZarrView(root: String, conf: Configuration) extends GridView {
+    private val fs = new Path(root).getFileSystem(conf)
+    private def fetch(p: String): Option[Array[Byte]] =
+      if (fs.exists(new Path(p))) Some(NetcdfV2.readFileBytes(p, conf)) else None
+    private def json(p: String): Option[Any] =
+      fetch(p).map(b => ZarrStore.ZJson.parse(new String(b, StandardCharsets.UTF_8)))
+    private val metas = mutable.Map.empty[String, ZarrStore.ZArrayMeta]
+    private def meta(v: String): ZarrStore.ZArrayMeta = metas.getOrElseUpdate(v,
+      ZarrStore.parseArrayMeta(new String(
+        NetcdfV2.readFileBytes(s"$root/$v/.zarray", conf), StandardCharsets.UTF_8)))
+    private val zattrs = mutable.Map.empty[String, Map[String, Any]]
+    private def zattrsOf(v: String): Map[String, Any] = zattrs.getOrElseUpdate(v,
+      json(s"$root/$v/.zattrs").map(_.asInstanceOf[Map[String, Any]]).getOrElse(Map.empty))
+
+    def varNames: Seq[String] =
+      fs.listStatus(new Path(root)).toSeq
+        .filter(st => st.isDirectory && fs.exists(new Path(st.getPath, ".zarray")))
+        .map(_.getPath.getName).sorted
+    def dimsOf(v: String): Seq[String] = zattrsOf(v).get("_ARRAY_DIMENSIONS") match {
+      case Some(d: Vector[Any] @unchecked) => d.map(_.asInstanceOf[String])
+      case _ => meta(v).rank match {
+        case 3 => Seq("time", "lat", "lon")
+        case 2 => Seq("lat", "lon")
+        case r => throw new IllegalArgumentException(
+          s"'$v' is $r-D and names no _ARRAY_DIMENSIONS")
+      }
+    }
+    def read(v: String): Array[Double] = {
+      val shape = meta(v).shape.map(_.toLong)
+      readSlab(v, shape.map(_ => 0L), shape, shape)
+    }
+    def readSlab(v: String, starts: Seq[Long], counts: Seq[Long],
+                 shape: Seq[Long]): Array[Double] = {
+      val m = meta(v)
+      require(m.shape.map(_.toLong) == shape,
+        s"'$v': caller shape ${shape.mkString("x")} != store shape " +
+          m.shape.mkString("x"))
+      ZarrStore.readSlab(root, v, m, starts, counts, fetch)
+    }
+    def attrs(v: String): Seq[NetcdfClassic.NcAttr] =
+      meta(v).fill.map(f => NetcdfClassic.NcAttr("_FillValue", Array(f))).toSeq ++
+        zattrsOf(v).toSeq.sortBy(_._1).collect {
+          case (k, s: String) => NetcdfClassic.NcAttr(k, s)
+          case (k, d: Double) => NetcdfClassic.NcAttr(k, Array(d))
+        }
+  }
+
   private[sources] def openGrid(bytes: Array[Byte]): GridView =
     if (bytes.length >= 4 && bytes(0) == 'C' && bytes(1) == 'D' && bytes(2) == 'F')
       new ClassicView(NetcdfClassic.parse(bytes))
     else new Hdf5View(Hdf5Classic.parse(bytes)) // parse names bad magic
+
+  /** Opens one archive member: a directory is a Zarr store, a file is
+    * classic or HDF5 by its magic bytes. */
+  private[sources] def openGrid(path: String, conf: Configuration): GridView = {
+    val p = new Path(path)
+    if (p.getFileSystem(conf).getFileStatus(p).isDirectory) new ZarrView(path, conf)
+    else openGrid(NetcdfV2.readFileBytes(path, conf))
+  }
 
   /** The CF missing-data mask of one variable (xarray
     * `mask_and_scale=True`): `fill` is its `_FillValue`, else the

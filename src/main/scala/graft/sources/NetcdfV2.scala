@@ -22,9 +22,10 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** NetCDF-3 / NetCDF-4(HDF5) grid archives as a REAL DataSourceV2
-  * format — the ONE read and write path for grid files, where
-  * Catalyst, not the caller, drives the scan pruning:
+/** NetCDF-3 / NetCDF-4(HDF5) grid archives and Zarr v2 stores as a
+  * REAL DataSourceV2 format — the ONE read path for grid archives and
+  * the write path for NetCDF files, where Catalyst, not the caller,
+  * drives the scan pruning:
   *
   * {{{
   * spark.read.format("netcdf")          // registered short name
@@ -58,12 +59,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * forms) are declined and stay residual — declining only ever costs
   * pruning, never correctness.
   *
-  * Parallelism is one partition per file (per-file granularity is
-  * what the container formats force; a multi-TB archive is thousands
-  * of members, like dask's per-file chunks in the reference), each
-  * partition parsing its member with the format auto-detected from
-  * the magic bytes. `estimateStatistics` reports the pruned
-  * byte total so AQE and join planning see the post-pushdown size.
+  * A member is a file, or a Zarr store: a directory holding `.zgroup`
+  * that the glob matches, read through [[NetcdfSource.openGrid]]'s
+  * Zarr view. Parallelism is one partition per member (per-file
+  * granularity is what the container formats force; a multi-TB
+  * archive is thousands of members, like dask's per-file chunks in the
+  * reference), each partition parsing its member with the format
+  * auto-detected from the magic bytes. `estimateStatistics` reports
+  * the pruned byte total (a store counts the sum of its files) so AQE
+  * and join planning see the post-pushdown size.
   *
   * The SESSION's Hadoop configuration (`sessionState.newHadoopConf()`,
   * spark.hadoop.* merged) is captured at plan/write-build time and
@@ -87,7 +91,7 @@ class NetcdfV2 extends TableProvider with DataSourceRegister {
 
 object NetcdfV2 {
   /** Long-form grid schema — field-for-field [[NetcdfSource.GridRow]],
-    * the row shape the Zarr reader emits too. */
+    * the one row shape for all three container formats. */
   val schema: StructType = StructType(Seq(
     StructField("dataset", StringType),
     StructField("variable", StringType),
@@ -233,6 +237,21 @@ object NetcdfV2 {
       s"netcdf $what needs a ${if (what == "sink") "save" else "load"}(path)")
     all
   }
+
+  /** The members `globs` match, as (path, on-disk bytes): every file,
+    * and every Zarr v2 store (a directory holding `.zgroup`) as ONE
+    * member sized by the sum of its files. */
+  private[graft] def listMembers(globs: Seq[String],
+                                 conf: Configuration): Seq[(String, Long)] =
+    globs.flatMap { glob =>
+      val p = new Path(glob)
+      val fs = p.getFileSystem(conf)
+      Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil).collect {
+        case st if st.isFile => (st.getPath.toString, st.getLen)
+        case st if fs.exists(new Path(st.getPath, ".zgroup")) =>
+          (st.getPath.toString, fs.getContentSummary(st.getPath).getLength)
+      }
+    }.distinct
 
   /** Whole-file fetch (per-member granularity is what the container
     * formats force — parallelism comes from the file count). */
@@ -422,11 +441,8 @@ private class NcScanBuilder(options: CaseInsensitiveStringMap)
     *    archive size — unless two surviving members collide on
     *    basename across directories (then partial, Spark merges). */
   private lazy val survivingPaths: Option[Seq[String]] = Try {
-    NetcdfV2.resolvePaths(options, "source").flatMap { glob =>
-      val p = new Path(glob)
-      val fs = p.getFileSystem(NetcdfV2.captureConf().value)
-      Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)
-    }.filter(_.isFile).map(_.getPath.toString).distinct
+    NetcdfV2.listMembers(NetcdfV2.resolvePaths(options, "source"),
+      NetcdfV2.captureConf().value).map(_._1)
       .filter(path => acc.dsOk(new Path(path).getName))
   }.toOption // listing failure → never claim complete
 
@@ -501,19 +517,14 @@ private class NcScan(pathGlobs: Seq[String], varsOpt: Option[Seq[String]],
                      streamSlackMs: Long = NetcdfV2.DefaultMtimeSlackMs)
     extends Scan with Batch with SupportsReportStatistics {
 
-  /** Driver-side file listing, `dataset` pushdown applied: an
+  /** Driver-side member listing, `dataset` pushdown applied: an
     * out-of-set member is pruned HERE and never opened. Sorted for
     * deterministic partition numbering. */
   private lazy val files: Seq[(String, Long)] = {
-    val all = pathGlobs.flatMap { glob =>
-      val p = new Path(glob)
-      val fs = p.getFileSystem(conf.value)
-      Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)
-    }.filter(_.isFile)
+    val all = NetcdfV2.listMembers(pathGlobs, conf.value)
     require(all.nonEmpty,
       s"netcdf source: no files match '${pathGlobs.mkString(", ")}'")
-    all.map(st => (st.getPath.toString, st.getLen)).distinct
-      .filter { case (path, _) => pushed.dsOk(new Path(path).getName) }
+    all.filter { case (path, _) => pushed.dsOk(new Path(path).getName) }
       .sortBy(_._1)
   }
 
@@ -688,7 +699,7 @@ private class NcAggReader(p: NcAggPartition, pushed: NetcdfV2.NcPushed,
 
   locally {
     p.paths.foreach { path =>
-      val g = NetcdfSource.openGrid(NetcdfV2.readFileBytes(path, conf.value))
+      val g = NetcdfSource.openGrid(path, conf.value)
       val ds = new Path(path).getName
       if (pushed.dsOk(ds)) {
         val vars = p.vars.getOrElse {
@@ -1037,9 +1048,10 @@ private class NcMicroBatchStream(pathGlobs: Seq[String],
   override def stop(): Unit = ()
 }
 
-/** One file → pruned long-form rows — the only long-form row emitter
-  * for grid files. Supports (time, lat, lon) and (lat, lon) variables;
-  * CF times decode through [[NetcdfSource.cfTimeBase]]; the CF
+/** One member → pruned long-form rows — the only long-form row emitter
+  * for grid files and Zarr stores. Supports (time, lat, lon) and
+  * (lat, lon) variables; CF times decode through
+  * [[NetcdfSource.cfTimeBase]]; the CF
   * mask-and-scale conventions apply (xarray's
   * `open_dataset(mask_and_scale=True)` defaults): a fill cell emits NO
   * row ([[NetcdfSource.FillMask]]) and packed data unpacks as
@@ -1054,7 +1066,7 @@ private class NcReader(p: NcPartition, pushed: NetcdfV2.NcPushed,
   import NetcdfV2._
 
   private val it: Iterator[InternalRow] = {
-    val g = NetcdfSource.openGrid(NetcdfV2.readFileBytes(p.path, conf.value))
+    val g = NetcdfSource.openGrid(p.path, conf.value)
     val ds = new Path(p.path).getName
     // explicit `vars` option: every named variable must exist in every
     // member (rowsFor throws the reader's named error otherwise — a

@@ -294,20 +294,23 @@ object Sources {
     // grid-build→write→parse→CF-decode→long-form emission is lossless.
     // All grid values are exact-integer counts and epoch-day/second
     // numbers, so double arithmetic is exact on both engines.
-    "q_source_netcdf_roundtrip" -> ((s, dir) => gridRoundtrip(s, dir, hdf5 = false)),
-    "q_source_hdf5_roundtrip" -> ((s, dir) => gridRoundtrip(s, dir, hdf5 = true)),
+    "q_source_netcdf_roundtrip" -> ((s, dir) => gridRoundtrip(s, dir, "nc")),
+    "q_source_hdf5_roundtrip" -> ((s, dir) => gridRoundtrip(s, dir, "h5")),
     // r17: the ZARR v2 store graded through the same dense grid —
     // write (zlib chunks, one-time-step-per-chunk, xarray
-    // _ARRAY_DIMENSIONS + CF time conventions), read back distributed
-    // (one task per chunk), fingerprint per latitude. Same oracle as
-    // the netcdf/hdf5 twins: the formats differ only in bytes on disk.
-    "q_source_zarr_roundtrip" -> ((s, dir) => zarrRoundtrip(s, dir, None)),
+    // _ARRAY_DIMENSIONS + CF time conventions), read back through the
+    // same `format("netcdf")` scan as the .h5 keys (the store is one
+    // member), fingerprint per latitude. Same oracle as the
+    // netcdf/hdf5 twins: the formats differ only in bytes on disk.
+    "q_source_zarr_roundtrip" -> ((s, dir) => gridRoundtrip(s, dir, "zarr")),
     // and the CHUNK-PRUNED bounded read: GridBounds(latMin=5,
-    // lonMax=125) mirrors q_source_grid_subset — the manifest drops
-    // non-intersecting chunk files by pure name arithmetic before
-    // anything is opened (ZarrSpec pins the pruning itself).
-    "q_source_zarr_subset" -> ((s, dir) => zarrRoundtrip(s, dir,
-      Some(NetcdfSource.GridBounds(latMin = 5.0, lonMax = 125.0)))),
+    // lonMax=125).predicate mirrors q_source_grid_subset — its atoms
+    // are pushed into the scan, whose slab read drops non-intersecting
+    // chunk files by pure name arithmetic before anything is opened
+    // (ZarrSpec pins the pruning itself).
+    "q_source_zarr_subset" -> ((s, dir) => gridRoundtrip(s, dir, "zarr",
+      filter = Some(NetcdfSource.GridBounds(latMin = 5.0, lonMax = 125.0)
+        .predicate))),
     // r13: the HYPERSLAB-PUSHDOWN read graded end-to-end — same grid
     // build, but the read-back filters by
     // GridBounds(latMin=5, lonMax=125).predicate, whose four lat/lon
@@ -316,7 +319,7 @@ object Sources {
     // predicates over the dense cell space. Chunk pruning itself is
     // law-pinned in Hdf5Spec; this key grades the bounds SEMANTICS
     // through the full write→read→aggregate pipeline against DuckDB.
-    "q_source_grid_subset" -> ((s, dir) => gridRoundtrip(s, dir, hdf5 = true,
+    "q_source_grid_subset" -> ((s, dir) => gridRoundtrip(s, dir, "h5",
       filter = Some(NetcdfSource.GridBounds(latMin = 5.0, lonMax = 125.0)
         .predicate))),
     // r13 late: the SAME subset as a hand-written Catalyst predicate
@@ -325,7 +328,7 @@ object Sources {
     // Catalyst pushdown path: filter translation, Spark-exact predicate
     // evaluation, per-file partitioning, InternalRow emission. Same
     // oracle shape as q_source_grid_subset.
-    "q_source_dsv2_pushdown" -> ((s, dir) => gridRoundtrip(s, dir, hdf5 = true,
+    "q_source_dsv2_pushdown" -> ((s, dir) => gridRoundtrip(s, dir, "h5",
       filter = Some(col("lat") >= 5.0 && col("lon") <= 125.0))),
     // r13 late: the DSv2 WRITE path graded end-to-end — the dense grid
     // goes through `df.write.format("netcdf")` (staging + driver-commit
@@ -334,7 +337,7 @@ object Sources {
     // re-read through the DSv2 reader, and must hit the SAME unbounded
     // fingerprint the hdf5_roundtrip oracle computes from the base
     // events table.
-    "q_source_dsv2_write" -> ((s, dir) => gridRoundtrip(s, dir, hdf5 = true,
+    "q_source_dsv2_write" -> ((s, dir) => gridRoundtrip(s, dir, "h5",
       dsv2Write = true)),
     // r13 late, DEEPENED r15/r16: the STREAMING read surface of the
     // DSv2 format graded as a true multi-batch replay under failure —
@@ -358,7 +361,7 @@ object Sources {
     // facet-prune → DSv2 load → pushdown yields exactly the bounded rows.
     "q_source_catalog" -> { (s, dir) =>
       val tier = tierTag(dir)
-      sharedGridMember(s, dir, hdf5 = true) match {
+      sharedGridMember(s, dir, "h5") match {
         case None => emptyGridFingerprint(s)
         case Some(gridFile) =>
           val man = s"$roundtripRoot/catalog_$tier"
@@ -389,7 +392,7 @@ object Sources {
     // outside the region are never inflated (law-pinned in
     // NetcdfV2Spec "climate pipeline over the DSv2 source").
     "q_climate_pipeline_nc" -> { (s, dir) =>
-      sharedGridMember(s, dir, hdf5 = true) match {
+      sharedGridMember(s, dir, "h5") match {
         case None => emptyPipelineNcResult(s)
         case Some(gridFile) =>
           val loaded = s.read.format("netcdf").option("vars", "events")
@@ -422,7 +425,7 @@ object Sources {
     // bounded cell set is empty (Spark's min/max over zero rows), a
     // degeneracy the --one fuzz tier exercises. */
     "q_source_dsv2_agg" -> { (s, dir) =>
-      sharedGridMember(s, dir, hdf5 = true) match {
+      sharedGridMember(s, dir, "h5") match {
         case None => emptyDsv2AggResult(s)
         case Some(gridFile) =>
           s.read.format("netcdf").option("vars", "events").load(gridFile)
@@ -509,7 +512,8 @@ object Sources {
     })
 
   /** The dense grid, written ONCE per (session, tier) as every file
-    * artifact the grid keys read: one [[denseGrid]] evaluation writes
+    * artifact the grid keys read: one [[denseGrid]] evaluation, cached
+    * for the four writes, writes
     *  - the single-member HDF5 file `grid_h5_<tier>/grid.h5`;
     *  - its classic-netCDF twin `grid_nc_<tier>/grid.nc`;
     *  - the Zarr store `zarr_<tier>/grid.zarr`;
@@ -530,7 +534,10 @@ object Sources {
     graft.Memo.artifact(s, dir, "grid") {
       denseGrid(s, dir) match {
         case None => false
-        case Some((cells, dense)) =>
+        case Some((cells, plan)) =>
+          // four writes read the dense grid: cache it, so its three
+          // distinct-axis jobs and the left join run once, not per write
+          val dense = plan.cache()
           try {
             val member = gridMembers(dense, lit("grid"))
             for ((ext, container) <- Seq("h5" -> "hdf5", "nc" -> "classic"))
@@ -544,7 +551,7 @@ object Sources {
               .write.format("netcdf").option("container", "hdf5")
               .mode("overwrite").save(gridPath(dir, "gridsplit"))
             true
-          } finally cells.unpersist()
+          } finally { dense.unpersist(); cells.unpersist() }
       }
     }
 
@@ -557,21 +564,15 @@ object Sources {
   private def gridPath(dir: String, name: String): String =
     s"$roundtripRoot/${name}_${tierTag(dir)}"
 
+  /** The shared grid member in one format: `h5`, `nc` or `zarr`. */
   private def sharedGridMember(s: SparkSession, dir: String,
-                               hdf5: Boolean): Option[String] = {
-    val ext = if (hdf5) "h5" else "nc"
-    if (grid(s, dir)) Some(s"${gridPath(dir, s"grid_$ext")}/grid.$ext") else None
-  }
+                               ext: String): Option[String] =
+    if (!grid(s, dir)) None
+    else if (ext == "zarr") Some(s"${gridPath(dir, "zarr")}/grid.zarr")
+    else Some(s"${gridPath(dir, s"grid_$ext")}/grid.$ext")
 
   private def sharedSplitArchive(s: SparkSession, dir: String): Option[String] =
     if (grid(s, dir)) Some(gridPath(dir, "gridsplit")) else None
-
-  private def zarrRoundtrip(s: SparkSession, dir: String,
-                            bounds: Option[NetcdfSource.GridBounds])
-      : DataFrame =
-    if (!grid(s, dir)) emptyGridFingerprint(s)
-    else gridFingerprint(ZarrStore.readGrid(s, s"${gridPath(dir, "zarr")}/grid.zarr",
-      "events", bounds))
 
   /** One SHARED 2-member parity archive per (session, tier) for the
     * catalog-ensemble key: members e0/e1 carry the SPARSE per-parity
@@ -722,10 +723,11 @@ object Sources {
     }
 
   /** Fingerprint of the dense grid read back through `format("netcdf")`
-    * from the shared member (or, for `dsv2Write`, a fresh sink write),
+    * from the shared member in format `ext` (or, for `dsv2Write`, a
+    * fresh sink write),
     * filtered by `filter` when set — the scan takes its lat/lon/time
     * atoms as pushed filters. */
-  private def gridRoundtrip(s: SparkSession, dir: String, hdf5: Boolean,
+  private def gridRoundtrip(s: SparkSession, dir: String, ext: String,
                             filter: Option[Column] = None,
                             dsv2Write: Boolean = false)
       : DataFrame = {
@@ -735,7 +737,7 @@ object Sources {
         // it grades, so sharing would grade nothing
         val out = s"$roundtripRoot/dsv2w"
         if (writeDenseGrid(s, dir, out)) Some(s"$out/grid.h5") else None
-      } else sharedGridMember(s, dir, hdf5)
+      } else sharedGridMember(s, dir, ext)
     member match {
       case None => emptyGridFingerprint(s)
       case Some(gridFile) =>

@@ -1,8 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 /** Zarr v2 LOCAL-STORE reader/writer — the cloud-native chunked-array
   * format modern climate archives (CMIP6 cloud mirrors, Pangeo) are
@@ -25,13 +25,16 @@ import java.nio.file.{Files, Paths}
   *  - dtype: f8/f4, i1/i2/i4/i8, u1 in either endianness; strings,
   *    complex, and datetime dtypes reject by name
   *
-  * Scale shape mirrors the HDF5 reader: metadata + coordinate axes
-  * are driver-side planning data (axis-sized, the NcCatalog
-  * allowlist); the DATA chunks are listed by pure name arithmetic —
-  * bounds prune non-intersecting chunks from the manifest WITHOUT
-  * opening them — and decoded one task per chunk through the
-  * binaryFile source, so parallelism is the chunk grid, exactly the
-  * unit dask assigns. */
+  * Reading goes through the DSv2 `netcdf` format: a store (a
+  * directory holding `.zgroup`) is one member of a `format("netcdf")`
+  * scan beside classic and HDF5 files, seen through
+  * `NetcdfSource.ZarrView`, so pushdown, aggregate pushdown, file
+  * pruning and row emission are the ones every grid file gets. This
+  * object holds the format itself: metadata parsing, the chunk codec,
+  * [[planChunks]] — bounds prune non-intersecting chunks by pure name
+  * arithmetic, WITHOUT opening them — and [[readSlab]], which decodes
+  * only the chunks a hyperslab touches. A store is one scan member and
+  * one partition, like a chunked `.h5` file. */
 object ZarrStore {
 
   // ---------- minimal JSON (objects, arrays, strings, numbers,
@@ -274,51 +277,6 @@ object ZarrStore {
     java.util.Arrays.copyOf(buf, n)
   }
 
-  // ---------- driver-side store access ------------------------------
-  private def readFile(p: String): Array[Byte] = Files.readAllBytes(Paths.get(p))
-  private def readText(p: String): String =
-    new String(readFile(p), java.nio.charset.StandardCharsets.UTF_8)
-
-  private[graft] def arrayMeta(store: String, name: String): ZArrayMeta =
-    parseArrayMeta(readText(s"$store/$name/.zarray"))
-
-  /** `.zattrs` of one array (empty map when absent). */
-  private[sources] def arrayAttrs(store: String, name: String): Map[String, Any] = {
-    val p = Paths.get(s"$store/$name/.zattrs")
-    if (Files.exists(p)) ZJson.parse(readText(p.toString))
-      .asInstanceOf[Map[String, Any]]
-    else Map.empty
-  }
-
-  /** Read a full (small — coordinate-axis-sized) 1-D array driver-side. */
-  private[sources] def read1D(store: String, name: String): Array[Double] = {
-    val meta = arrayMeta(store, name)
-    require(meta.rank == 1, s"$name is not 1-D")
-    val es = elemSize(meta.dtype)
-    val out = new Array[Double](meta.shape.head)
-    val nChunks = meta.gridShape.head
-    for (ci <- 0 until nChunks) {
-      val p = Paths.get(s"$store/$name/$ci")
-      if (Files.exists(p)) {
-        val vals = decodeChunk(
-          decompress(readFile(p.toString), meta.compressor,
-            meta.chunkElems * es), meta)
-        var k = 0
-        while (k < meta.chunks.head && ci * meta.chunks.head + k < out.length) {
-          out(ci * meta.chunks.head + k) = vals(k); k += 1
-        }
-      } else {
-        val f = meta.fill.getOrElse(throw new IllegalArgumentException(
-          s"$name: chunk $ci missing and fill_value is null"))
-        var k = 0
-        while (k < meta.chunks.head && ci * meta.chunks.head + k < out.length) {
-          out(ci * meta.chunks.head + k) = f; k += 1
-        }
-      }
-    }
-    out
-  }
-
   /** The chunk files of `name` that can intersect `keep` (per-axis
     * boolean keep masks over global indices) — PURE NAME ARITHMETIC:
     * a chunk outside the kept hyperslab is pruned from the manifest
@@ -344,138 +302,59 @@ object ZarrStore {
     rec(0, Nil).map(ix => s"$store/$name/${ix.mkString(".")}")
   }
 
-  private def keepAll(n: Int): Array[Boolean] = Array.fill(n)(true)
-
-  // ---------- distributed grid read ---------------------------------
-  /** Zarr store → long-form DataFrame, the twin of the DSv2
-    * `format("netcdf")` reader: supports (time, lat, lon) and (lat, lon) variables (axis
-    * names from the xarray `_ARRAY_DIMENSIONS` attribute), CF time
-    * units on the time axis, mask-and-scale semantics (fill_value and
-    * NaN cells drop; `scale_factor`/`add_offset` honored), and
-    * `bounds` pruning that removes non-intersecting CHUNKS from the
-    * manifest before anything is opened. One task per surviving
-    * chunk. */
-  def readGrid(spark: SparkSession, storePath: String, varName: String,
-               bounds: Option[NetcdfSource.GridBounds] = None): DataFrame = {
-    import spark.implicits._
-    val store = storePath.stripSuffix("/")
-    val ds = store.substring(store.lastIndexOf('/') + 1)
-    val meta = arrayMeta(store, varName)
-    val attrs = arrayAttrs(store, varName)
-    val dims = attrs.get("_ARRAY_DIMENSIONS") match {
-      case Some(v: Vector[Any] @unchecked) => v.map(_.asInstanceOf[String])
-      case _ => if (meta.rank == 3) Seq("time", "lat", "lon")
-                else Seq("lat", "lon")
-    }
-    require(meta.rank == 2 || meta.rank == 3,
-      s"$varName is ${meta.rank}-D (grid reads support 2-D/3-D)")
-    val lats = read1D(store, dims(meta.rank - 2))
-    val lons = read1D(store, dims(meta.rank - 1))
-    val timesMicros: Array[Long] =
-      if (meta.rank == 3) {
-        val tName = dims.head
-        val units = arrayAttrs(store, tName).get("units") match {
-          case Some(u: String) => u
-          case _ => throw new IllegalArgumentException(
-            s"time axis '$tName' has no CF units attribute")
-        }
-        val (base, step) = NetcdfSource.cfTimeBase(units)
-        read1D(store, tName).map(t => base + math.round(t * step))
-      } else Array.emptyLongArray
-    val scale = attrs.get("scale_factor") match {
-      case Some(d: Double) => d; case _ => 1.0 }
-    val offset = attrs.get("add_offset") match {
-      case Some(d: Double) => d; case _ => 0.0 }
-    val fill = meta.fill
-
-    val b = bounds.getOrElse(NetcdfSource.GridBounds())
-    def inT(us: Long): Boolean =
-      b.timeMin.forall(t => us >= t.getTime * 1000L +
-        (t.getNanos / 1000 % 1000)) &&
-        b.timeMax.forall(t => us <= t.getTime * 1000L +
-          (t.getNanos / 1000 % 1000))
-    val keep: Seq[Array[Boolean]] = {
-      val kLat =
-        if (bounds.isEmpty) keepAll(lats.length)
-        else lats.map(v => v >= b.latMin && v <= b.latMax)
-      val kLon =
-        if (bounds.isEmpty) keepAll(lons.length)
-        else lons.map(v => v >= b.lonMin && v <= b.lonMax)
-      if (meta.rank == 3) {
-        val kT = if (bounds.isEmpty) keepAll(timesMicros.length)
-                 else timesMicros.map(inT)
-        Seq(kT, kLat, kLon)
-      } else Seq(kLat, kLon)
-    }
-    val candidates = planChunks(store, varName, meta, keep)
-    // a missing chunk is ALL fill_value — legal (and masked out below)
-    // only when the array declares a fill; with fill null it's a
-    // corrupt store, rejected by name
-    val (paths, missing) =
-      candidates.partition(p => Files.exists(Paths.get(p)))
-    require(missing.isEmpty || meta.fill.isDefined,
-      s"$varName: ${missing.length} chunk file(s) missing (e.g. " +
-        s"${missing.head}) and fill_value is null")
-    if (paths.isEmpty)
-      return spark.emptyDataset[NetcdfSource.GridRow].toDF()
-
-    val chunks = meta.chunks
-    val shape = meta.shape
-    val comp = meta.compressor
+  /** Dense row-major hyperslab `[starts, starts + counts)` of array
+    * `name`: only the chunks [[planChunks]] keeps are fetched (`fetch`
+    * returns a chunk file's bytes, None when the file is absent) and
+    * decoded. A missing chunk reads as `fill_value`; with a null fill
+    * it is a corrupt store, rejected by name. */
+  private[sources] def readSlab(store: String, name: String, meta: ZArrayMeta,
+                                starts: Seq[Long], counts: Seq[Long],
+                                fetch: String => Option[Array[Byte]]): Array[Double] = {
     val rank = meta.rank
-    val es = elemSize(meta.dtype)
-    val m = meta
-    // axis-sized state rides as ONE broadcast, not a task-closure
-    // capture: with one task per chunk, a captured time axis (~10⁷
-    // steps on a long climate record = ~80 MB of longs) would be
-    // re-serialized into EVERY task; a broadcast ships it once per
-    // executor (ADVICE r17 self-review item, applied this round).
-    val sc = spark.sparkContext
-    val axesB = sc.broadcast((lats, lons, timesMicros, keep))
-    spark.read.format("binaryFile").load(paths: _*)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val (lats, lons, timesMicros, keep) = axesB.value
-        val cix = path.substring(path.lastIndexOf('/') + 1)
-          .split('.').map(_.toInt)
-        val vals = decodeChunk(decompress(bytes, comp, m.chunkElems * es), m)
-        val rows = Iterator.range(0, vals.length).flatMap { li =>
-          // local C-order index → per-axis local then global indices
-          var rem = li
-          val g = new Array[Int](rank)
-          var ax = rank - 1
-          while (ax >= 0) {
-            g(ax) = cix(ax) * chunks(ax) + rem % chunks(ax)
-            rem /= chunks(ax)
-            ax -= 1
-          }
-          val inShape = (0 until rank).forall(a => g(a) < shape(a))
-          if (!inShape) Iterator.empty
-          else {
-            val raw = vals(li)
-            val masked = raw.isNaN ||
-              fill.exists(f => raw == f || (f.isNaN && raw.isNaN))
-            val kept = (0 until rank).forall(a => keep(a)(g(a)))
-            if (masked || !kept) Iterator.empty
-            else {
-              val (ti, la, lo) =
-                if (rank == 3) (g(0), g(1), g(2)) else (-1, g(0), g(1))
-              val ts =
-                if (ti < 0) null
-                else {
-                  val us = timesMicros(ti)
-                  val t = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-                  t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-                  t
-                }
-              Iterator.single(NetcdfSource.GridRow(ds, varName, ts,
-                lats(la), lons(lo), raw * scale + offset))
-            }
-          }
-        }
-        rows
+    val st = starts.map(_.toInt).toArray
+    val ct = counts.map(_.toInt).toArray
+    val out = new Array[Double](ct.product)
+    if (out.isEmpty) return out
+    val keep = meta.shape.indices.map(a =>
+      Array.tabulate(meta.shape(a))(g => g >= st(a) && g < st(a) + ct(a)))
+    val ch = meta.chunks
+    planChunks(store, name, meta, keep).foreach { path =>
+      val cix = path.substring(path.lastIndexOf('/') + 1).split('.').map(_.toInt)
+      val vals = fetch(path) match {
+        case Some(b) =>
+          decodeChunk(decompress(b, meta.compressor,
+            meta.chunkElems * elemSize(meta.dtype)), meta)
+        case None => Array.fill(meta.chunkElems)(meta.fill.getOrElse(
+          throw new IllegalArgumentException(
+            s"$name: chunk file $path missing and fill_value is null")))
       }
-      .toDF()
+      // this chunk's overlap with the slab, per axis [lo, hi); copy it
+      // one last-axis run at a time, stepping the other axes odometer-wise
+      val lo = Array.tabulate(rank)(a => math.max(st(a), cix(a) * ch(a)))
+      val hi = Array.tabulate(rank)(a => math.min(st(a) + ct(a), (cix(a) + 1) * ch(a)))
+      val run = hi(rank - 1) - lo(rank - 1)
+      val g = lo.clone()
+      var more = true
+      while (more) {
+        var src = 0
+        var dst = 0
+        var a = 0
+        while (a < rank) {
+          src = src * ch(a) + (g(a) - cix(a) * ch(a))
+          dst = dst * ct(a) + (g(a) - st(a))
+          a += 1
+        }
+        System.arraycopy(vals, src, out, dst, run)
+        more = false
+        var ax = rank - 2
+        while (ax >= 0 && !more) {
+          g(ax) += 1
+          if (g(ax) < hi(ax)) more = true
+          else { g(ax) = lo(ax); ax -= 1 }
+        }
+      }
+    }
+    out
   }
 
   // ---------- write path --------------------------------------------

@@ -103,4 +103,20 @@ class EnsembleSpec extends AnyFunSuite with SparkSuite {
     assert(ens.members == Seq("m1", "obs"))
     assert(ens.dropMember("m1").members == Seq("obs"))
   }
+
+  test("loadGrid over a glob matching an .h5 member and a .zarr store returns both members' rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ens_mixed").toString
+    Ensemble.of(member("a", Seq(0.0, 20.0))).toNetcdf(dir, "tas", hdf5 = true)
+    graft.sources.ZarrStore.writeGrid(member("b", Seq(0.0, 20.0, 40.0)), dir,
+      varName = "tas")
+    val ens = Ensemble.loadGrid(spark, s"$dir/*", "tas")
+    assert(ens.members == Seq("a.h5", "b.zarr"))
+    def cells(df: org.apache.spark.sql.DataFrame) =
+      df.select("time", "lat", "lon", "value").collect()
+        .map(r => (r.getTimestamp(0).getTime, r.getDouble(1), r.getDouble(2),
+          r.getDouble(3))).sorted.toSeq
+    assert(cells(ens.df.filter($"dataset" === "a.h5")) == cells(member("a", Seq(0.0, 20.0))))
+    assert(cells(ens.df.filter($"dataset" === "b.zarr")) ==
+      cells(member("b", Seq(0.0, 20.0, 40.0))))
+  }
 }

@@ -36,6 +36,18 @@ class PlanAuditSpec extends AnyFunSuite with SparkSuite {
     assert(!p.contains("Filter ("), s"expected no residual Filter:\n$p")
   }
 
+  test("q_source_zarr_subset: GridBounds atoms reach the netcdf scan as PushedFilters, no residual Filter") {
+    // the Zarr store is one member of the same scan: its bounded read
+    // prunes through the pushed atoms, not a Filter above the scan
+    val p = plan(SparkEntry.queries("q_source_zarr_subset")(spark, dir))
+    assert(p.contains("PushedFilters: ["), s"no netcdf scan pushdown:\n$p")
+    assert(p.contains("grid.zarr"), s"not a scan of the Zarr store:\n$p")
+    for (atom <- Seq("GreaterThanOrEqual(lat,5.0)", "LessThanOrEqual(lat,Infinity)",
+                     "GreaterThanOrEqual(lon,-Infinity)", "LessThanOrEqual(lon,125.0)"))
+      assert(p.contains(atom), s"$atom not pushed:\n$p")
+    assert(!p.contains("Filter ("), s"expected no residual Filter:\n$p")
+  }
+
   test("small-side joins broadcast (no shuffle of the fact table)") {
     val p = plan(SparkEntry.queries("q_join_broadcast")(spark, dir))
     assert(p.contains("BroadcastHashJoin"), s"no broadcast join:\n$p")

@@ -19,6 +19,10 @@ class ZarrSpec extends AnyFunSuite with SparkSuite {
 
   private def ts(s: String): java.sql.Timestamp = java.sql.Timestamp.valueOf(s)
 
+  /** A store read as one member of the `netcdf` scan. */
+  private def readZarr(store: String, v: String) =
+    spark.read.format("netcdf").option("vars", v).load(store)
+
   // sparse 3-D member: 3 times × 2 lats × 2 lons, 2 cells absent
   private def sparse3d = Seq(
     ("m0", ts("2024-01-01 00:00:00"), 10.0, 100.0, 1.0),
@@ -32,7 +36,7 @@ class ZarrSpec extends AnyFunSuite with SparkSuite {
   test("write -> read is the identity on a sparse 3-D grid") {
     val dir = tmpDir("rt3d")
     ZarrStore.writeGrid(sparse3d, dir, varName = "tas")
-    val back = ZarrStore.readGrid(spark, s"$dir/m0.zarr", "tas")
+    val back = readZarr(s"$dir/m0.zarr", "tas")
       .select("time", "lat", "lon", "value")
       .collect().map(r => (r.getTimestamp(0), r.getDouble(1),
         r.getDouble(2), r.getDouble(3))).sortBy(r => (r._1.getTime, r._2, r._3))
@@ -49,7 +53,7 @@ class ZarrSpec extends AnyFunSuite with SparkSuite {
       ("s0", null.asInstanceOf[java.sql.Timestamp], 20.0, 110.0, 8.0))
       .toDF("dataset", "time", "lat", "lon", "value")
     ZarrStore.writeGrid(df, dir, varName = "orog")
-    val back = ZarrStore.readGrid(spark, s"$dir/s0.zarr", "orog")
+    val back = readZarr(s"$dir/s0.zarr", "orog")
       .select("time", "lat", "lon", "value").collect()
       .map(r => (r.isNullAt(0), r.getDouble(1), r.getDouble(2),
         r.getDouble(3))).sortBy(_._2)
@@ -77,7 +81,8 @@ class ZarrSpec extends AnyFunSuite with SparkSuite {
     val dir = tmpDir("prune")
     ZarrStore.writeGrid(sparse3d, dir, varName = "tas")
     val store = s"$dir/m0.zarr"
-    val meta = ZarrStore.arrayMeta(store, "tas")
+    val meta = ZarrStore.parseArrayMeta(
+      new String(Files.readAllBytes(Paths.get(s"$store/tas/.zarray"))))
     // keep only the middle time step
     val keep = Seq(Array(false, true, false),
       Array(true, true), Array(true, true))
@@ -87,7 +92,7 @@ class ZarrSpec extends AnyFunSuite with SparkSuite {
     val b = NetcdfSource.GridBounds(
       timeMin = Some(ts("2024-01-02 00:00:00")),
       timeMax = Some(ts("2024-01-02 23:59:59")))
-    val bounded = ZarrStore.readGrid(spark, store, "tas", Some(b))
+    val bounded = readZarr(store, "tas").where(b.predicate)
       .select("lat", "lon", "value").collect().map(r =>
         (r.getDouble(0), r.getDouble(1), r.getDouble(2))).sortBy(_._1)
     assert(bounded.toSeq == Seq((10.0, 110.0, 3.5), (20.0, 100.0, 4.25)))
@@ -98,13 +103,15 @@ class ZarrSpec extends AnyFunSuite with SparkSuite {
     ZarrStore.writeGrid(sparse3d, dir, varName = "tas")
     val store = s"$dir/m0.zarr"
     Files.delete(Paths.get(s"$store/tas/1.0.0"))
-    val back = ZarrStore.readGrid(spark, store, "tas")
+    val back = readZarr(store, "tas")
       .select("value").collect().map(_.getDouble(0)).sorted
     assert(back.toSeq == Seq(-5.0, 1.0, 2.0, 6.0)) // day-2 cells gone
     // coordinate arrays declare no fill: a missing coord chunk rejects
     Files.delete(Paths.get(s"$store/lat/0"))
-    val e = intercept[IllegalArgumentException] {
-      ZarrStore.readGrid(spark, store, "tas")
+    // the scan reads the axes in its task, so the reader's named error
+    // arrives wrapped in the job failure
+    val e = intercept[org.apache.spark.SparkException] {
+      readZarr(store, "tas").collect()
     }
     assert(e.getMessage.contains("fill_value is null"))
   }
@@ -133,6 +140,7 @@ class ZarrSpec extends AnyFunSuite with SparkSuite {
         .order(java.nio.ByteOrder.LITTLE_ENDIAN)
       v.foreach(bb.putFloat); bb.array()
     }
+    put(".zgroup", """{"zarr_format": 2}""".getBytes)
     put("lat/.zarray",
       """{"zarr_format": 2, "shape": [2], "chunks": [2], "dtype": ">f8",
         | "compressor": null, "fill_value": null, "order": "C",
@@ -150,7 +158,7 @@ class ZarrSpec extends AnyFunSuite with SparkSuite {
         .stripMargin.getBytes)
     put("v/.zattrs", """{"_ARRAY_DIMENSIONS": ["lat", "lon"]}""".getBytes)
     put("v/0.0", gz(leFloats(Array(1.5f, Float.NaN, 2.5f, 3.5f))))
-    val got = ZarrStore.readGrid(spark, store, "v")
+    val got = readZarr(store, "v")
       .select("lat", "lon", "value").collect()
       .map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2)))
       .sortBy(r => (r._1, r._2))
@@ -200,5 +208,68 @@ class ZarrSpec extends AnyFunSuite with SparkSuite {
     }
     assert(e1.getMessage.contains("duplicate") ||
       e1.getCause.getMessage.contains("duplicate"))
+  }
+
+  test("a NaN cell in an array whose fill_value is null reads as a NaN row") {
+    // the NetCDF rule: with no declared fill every cell is present, NaN
+    // included (the old Zarr reader dropped every NaN)
+    val store = s"${tmpDir("nullfill")}/n.zarr"
+    def put(p: String, b: Array[Byte]): Unit = {
+      Files.createDirectories(Paths.get(s"$store/$p").getParent)
+      Files.write(Paths.get(s"$store/$p"), b)
+    }
+    def leDoubles(v: Double*): Array[Byte] = {
+      val bb = java.nio.ByteBuffer.allocate(v.length * 8)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      v.foreach(bb.putDouble); bb.array()
+    }
+    def zarray(shape: String) =
+      s"""{"zarr_format": 2, "shape": $shape, "chunks": $shape,
+         | "dtype": "<f8", "compressor": null, "fill_value": null,
+         | "order": "C", "filters": null}""".stripMargin.getBytes
+    put(".zgroup", """{"zarr_format": 2}""".getBytes)
+    put("lat/.zarray", zarray("[2]")); put("lat/0", leDoubles(10.0, 20.0))
+    put("lon/.zarray", zarray("[1]")); put("lon/0", leDoubles(100.0))
+    put("v/.zarray", zarray("[2, 1]"))
+    put("v/.zattrs", """{"_ARRAY_DIMENSIONS": ["lat", "lon"]}""".getBytes)
+    put("v/0.0", leDoubles(1.0, Double.NaN))
+    val got = readZarr(store, "v").select("lat", "value").collect()
+      .map(r => (r.getDouble(0), r.getDouble(1))).sortBy(_._1)
+    assert(got.length == 2 && got(0) == ((10.0, 1.0)) &&
+      got(1)._1 == 20.0 && got(1)._2.isNaN, got.toSeq)
+  }
+
+  test("a time-bounded read of a static (lat, lon) array returns no rows") {
+    // a static grid's time is NULL, and NULL fails every time
+    // comparison (the old Zarr reader ignored time bounds on 2-D arrays)
+    val dir = tmpDir("static_t")
+    val df = Seq(
+      ("s0", null.asInstanceOf[java.sql.Timestamp], 10.0, 100.0, 7.0),
+      ("s0", null.asInstanceOf[java.sql.Timestamp], 20.0, 110.0, 8.0))
+      .toDF("dataset", "time", "lat", "lon", "value")
+    ZarrStore.writeGrid(df, dir, varName = "orog")
+    val read = readZarr(s"$dir/s0.zarr", "orog")
+    assert(read.count() == 2)
+    val b = NetcdfSource.GridBounds(timeMin = Some(ts("2024-01-01 00:00:00")))
+    assert(read.where(b.predicate).count() == 0)
+  }
+
+  test("a bounded scan never opens chunk files outside the bounds") {
+    val dir = tmpDir("unopened")
+    ZarrStore.writeGrid(sparse3d, dir, varName = "tas")
+    val store = s"$dir/m0.zarr"
+    // corrupt the first and last time step's chunks: only a read that
+    // prunes them by name can succeed
+    for (t <- Seq(0, 2))
+      Files.write(Paths.get(s"$store/tas/$t.0.0"), Array[Byte](1, 2, 3))
+    val b = NetcdfSource.GridBounds(
+      timeMin = Some(ts("2024-01-02 00:00:00")),
+      timeMax = Some(ts("2024-01-02 23:59:59")))
+    val bounded = readZarr(store, "tas").where(b.predicate)
+      .select("value").collect().map(_.getDouble(0)).sorted
+    assert(bounded.toSeq == Seq(3.5, 4.25))
+    intercept[org.apache.spark.SparkException] {
+      readZarr(store, "tas").collect()
+    }
   }
 }
