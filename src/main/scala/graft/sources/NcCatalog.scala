@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** File-backed catalog/manifest layer over the grid formats — the
@@ -9,11 +9,14 @@ import org.apache.spark.sql.functions._
   * fetches. Zero-egress rules out the network half; everything an
   * ESGF client does AFTER the HTTP GET is here:
   *
-  *  1. [[buildManifest]] — a DISTRIBUTED sweep over a grid archive
-  *     (one task per member, the per-file granularity the DSv2
-  *     `netcdf` scan uses too) parses each member's
-  *     self-describing header and records its envelope: data
-  *     variables, lat/lon extents, CF-decoded time range, byte size.
+  *  1. [[buildManifest]] — a DISTRIBUTED sweep over a grid archive:
+  *     the members are listed the way the DSv2 `netcdf` scan lists
+  *     them ([[NetcdfV2.listMembers]]: every file, and every Zarr v2
+  *     store as one member sized by the sum of its files), and one
+  *     task per member opens it by path the way the scan's reader does
+  *     ([[NetcdfSource.openGrid]]) and records its envelope from the
+  *     self-describing metadata: data variables, lat/lon extents,
+  *     CF-decoded time range, byte size.
   *     The manifest is plain JSONL — the durable catalog artifact a
   *     100 TB archive maintains incrementally instead of re-listing
   *     and re-opening thousands of members per query.
@@ -54,22 +57,39 @@ object NcCatalog {
   def buildManifest(spark: SparkSession, pathGlob: String,
                     manifestDir: String,
                     latVar: String = "lat", lonVar: String = "lon",
-                    timeVar: String = "time"): Unit = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(pathGlob)
-      .select(col("path"), col("content"), col("length"))
-      .as[(String, Array[Byte], Long)]
-      .map { case (path, bytes, len) =>
-        memberMeta(path, bytes, len, latVar, lonVar, timeVar)
-      }
+                    timeVar: String = "time"): Unit =
+    index(spark, members(spark, pathGlob), latVar, lonVar, timeVar)
       .write.mode("overwrite").json(manifestDir)
+
+  /** The (path, bytes) members `pathGlob` matches, listed on the driver. */
+  private def members(spark: SparkSession, pathGlob: String): Seq[(String, Long)] = {
+    val found = NetcdfV2.listMembers(Seq(pathGlob),
+      org.apache.spark.sql.GraftBridge.sessionHadoopConf(spark))
+    require(found.nonEmpty, s"catalog: no members match '$pathGlob'")
+    found
   }
 
-  /** The envelope of ONE member, from its self-describing header. */
-  private[graft] def memberMeta(path: String, bytes: Array[Byte], len: Long,
-                                latVar: String, lonVar: String,
-                                timeVar: String): MemberMeta = {
-    val g = NetcdfSource.openGrid(bytes)
+  /** One task per member: each opens its member by path, so a classic
+    * or HDF5 file is read whole and a Zarr store only for its metadata
+    * and axes. */
+  private def index(spark: SparkSession, members: Seq[(String, Long)],
+                    latVar: String, lonVar: String,
+                    timeVar: String): Dataset[MemberMeta] = {
+    import spark.implicits._
+    val conf = new NetcdfV2.HadoopConfSer(
+      org.apache.spark.sql.GraftBridge.sessionHadoopConf(spark))
+    spark.sparkContext.parallelize(members, members.size)
+      .map { case (path, bytes) =>
+        memberMeta(path, NetcdfSource.openGrid(path, conf.value), bytes,
+          latVar, lonVar, timeVar)
+      }
+      .toDS()
+  }
+
+  /** The envelope of ONE member, from its self-describing metadata. */
+  private def memberMeta(path: String, g: NetcdfSource.GridView, bytes: Long,
+                         latVar: String, lonVar: String,
+                         timeVar: String): MemberMeta = {
     val axes = Set(latVar, lonVar, timeVar)
     val dataVars = g.varNames.filterNot(axes).filter { v =>
       scala.util.Try(g.dimsOf(v)).toOption.exists(d =>
@@ -98,7 +118,7 @@ object NcCatalog {
       if (lats.isEmpty) Double.NaN else lats.max,
       if (lons.isEmpty) Double.NaN else lons.min,
       if (lons.isEmpty) Double.NaN else lons.max,
-      len)
+      bytes)
   }
 
   /** The manifest as a DataFrame (schema from [[MemberMeta]]). */
@@ -109,9 +129,8 @@ object NcCatalog {
   /** Incremental refresh: index ONLY members the manifest does not
     * know yet (path equality) and append their envelopes — the daily
     * shape for a growing 100 TB archive, where a full [[buildManifest]]
-    * re-opens every member. The probe pass projects (path, length)
-    * only, so binaryFile's column pruning keeps known members' BYTES
-    * unread (law-pinned: a corrupted already-indexed member does not
+    * re-opens every member. Known members are only listed, never
+    * opened (law-pinned: a corrupted already-indexed member does not
     * fail the update). A removed file keeps its row — catalogs
     * tombstone externally; rebuild to compact. Returns the newly
     * indexed paths. */
@@ -119,22 +138,14 @@ object NcCatalog {
                      manifestDir: String,
                      latVar: String = "lat", lonVar: String = "lon",
                      timeVar: String = "time"): Seq[String] = {
-    import spark.implicits._
-    val known = catalog(spark, manifestDir).select("path")
     // member-COUNT-bounded collect, like select's planning listing
-    val fresh = spark.read.format("binaryFile").load(pathGlob)
-      .select(col("path"))
-      .join(known, Seq("path"), "left_anti")
-      .as[String].collect().sorted.toIndexedSeq
+    val known = catalog(spark, manifestDir).select("path").collect()
+      .map(_.getString(0)).toSet
+    val fresh = members(spark, pathGlob).filterNot(m => known(m._1)).sortBy(_._1)
     if (fresh.nonEmpty)
-      spark.read.format("binaryFile").load(fresh: _*)
-        .select(col("path"), col("content"), col("length"))
-        .as[(String, Array[Byte], Long)]
-        .map { case (path, bytes, len) =>
-          memberMeta(path, bytes, len, latVar, lonVar, timeVar)
-        }
+      index(spark, fresh, latVar, lonVar, timeVar)
         .write.mode("append").json(manifestDir)
-    fresh
+    fresh.map(_._1)
   }
 
   /** Facet query → planning-time member pruning → DSv2 read with the

@@ -26,11 +26,12 @@ import org.apache.spark.sql.types._
   * ([[NetcdfV2]]): `spark.read.format("netcdf")` emits the long form of
   * classic and HDF5 files and Zarr stores alike, with Catalyst-pushed
   * hyperslab pruning; `df.write.format("netcdf")` is the staged,
-  * driver-committed sink for the two NetCDF containers. This object
-  * holds what that source shares with the catalog and the Zarr store:
-  * CF time decoding, [[GridBounds]], the format-agnostic [[GridView]]
-  * over one member, the fill mask, and the member encoder
-  * [[buildMemberBytes]].
+  * driver-committed sink for all three containers. This object holds
+  * what that source shares with the catalog and the Zarr store: CF
+  * time decoding, [[GridBounds]], the format-agnostic [[GridView]]
+  * over one member and its opener [[openGrid]], the fill mask, the
+  * union-axes rule [[memberGrid]] and the file encoder
+  * [[buildMemberBytesMulti]].
   */
 object NetcdfSource {
 
@@ -276,14 +277,21 @@ object NetcdfSource {
     buildMemberBytesMulti(ds,
       buf.map { case (t, la, lo, v) => (varName, t, la, lo, v) }, hdf5)
 
-  /** Multi-variable member (xarray `Dataset` fidelity — the DSv2
-    * writer's input is the full long form incl. `variable`): ALL the
-    * member's variables share the UNION of the observed axes; cells a
-    * variable does not cover stay NaN (= declared fill, masked on
-    * read), so write→read is the identity on the long form. */
-  private[sources] def buildMemberBytesMulti(
-      ds: String, cells: Seq[(String, Long, Double, Double, Double)],
-      hdf5: Boolean): Array[Byte] = {
+  /** One member's cells on the UNION of its observed axes — the rule
+    * both member encoders share (xarray `Dataset` fidelity: the sink's
+    * input is the full long form incl. `variable`). Axes are the
+    * distinct sorted coordinates; each variable is a dense row-major
+    * (time, lat, lon) grid, NaN where it has no cell (= the declared
+    * fill, masked on read), so write→read is the identity on the long
+    * form. A static member's only time is [[NoTime]] (one plane). */
+  private[sources] final case class MemberGrid(
+      times: Seq[Long], lats: Seq[Double], lons: Seq[Double],
+      grids: Seq[(String, Array[Double])]) {
+    def is2d: Boolean = times == Seq(NoTime)
+  }
+
+  private[sources] def memberGrid(
+      ds: String, cells: Seq[(String, Long, Double, Double, Double)]): MemberGrid = {
     require(!ds.contains('/') && !ds.contains(java.io.File.separatorChar),
       s"member tag '$ds' is not a path-safe file basename")
     val varNames = cells.map(_._1).distinct.sorted
@@ -294,8 +302,7 @@ object NetcdfSource {
           "empty, or contains '/' (the reader's group separator)")
     }
     val times = cells.map(_._2).distinct.sorted
-    val is2d = times == Seq(NoTime)
-    require(is2d || !times.contains(NoTime),
+    require(times == Seq(NoTime) || !times.contains(NoTime),
       s"member '$ds' mixes null and non-null times — a grid file is " +
         "either a (time, lat, lon) series or a static (lat, lon) field")
     val lats = cells.map(_._3).distinct.sorted
@@ -313,8 +320,17 @@ object NetcdfSource {
           "lon) cell — last-write-wins would lose data")
       grids(vn)(i) = v
     }
+    MemberGrid(times, lats, lons, varNames.map(v => v -> grids(v)))
+  }
+
+  /** A classic or HDF5 member file's bytes from its [[memberGrid]]. */
+  private[sources] def buildMemberBytesMulti(
+      ds: String, cells: Seq[(String, Long, Double, Double, Double)],
+      hdf5: Boolean): Array[Byte] = {
+    val g = memberGrid(ds, cells)
+    val MemberGrid(times, lats, lons, grids) = g
     val (dims, coordVars) =
-      if (is2d)
+      if (g.is2d)
         (Seq(NetcdfClassic.NcDim("lat", lats.length),
           NetcdfClassic.NcDim("lon", lons.length)),
           Seq(
@@ -337,8 +353,8 @@ object NetcdfSource {
     // declare the NaN fill so readers (ours via mask-and-scale,
     // xarray via mask_and_scale=True) drop absent cells — the
     // write→read pair is then the identity on SPARSE grids too
-    val vars = coordVars ++ varNames.map(vn => (vn, dims.indices.toSeq,
-      Seq(NetcdfClassic.NcAttr("_FillValue", Array(Double.NaN))), grids(vn)))
+    val vars = coordVars ++ grids.map { case (vn, grid) => (vn, dims.indices.toSeq,
+      Seq(NetcdfClassic.NcAttr("_FillValue", Array(Double.NaN))), grid) }
     // r17: HDF5 members ship deflate+shuffle chunked data variables —
     // the real-archive norm (an uncompressed sink pays 3-10×
     // storage/IO at 100 TB). NetCDF-3 classic has no compression in
@@ -350,7 +366,7 @@ object NetcdfSource {
   /** Filename-template metadata extraction, e.g.
     * "{model}_{variable}_{start}.nc" — the R1 path-parsing feature as a
     * pure-Column transform over `input_file_name()`, for file sources
-    * that populate it (parquet, CSV, JSON, `binaryFile`). It is EMPTY
+    * that populate it (parquet, CSV, JSON, whole binary files). It is EMPTY
     * over a DSv2 `format("netcdf")` scan, so a NetCDF frame carries its
     * member's basename in `dataset` instead — extract template fields
     * from that column. */

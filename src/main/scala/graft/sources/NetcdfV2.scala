@@ -23,9 +23,10 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** NetCDF-3 / NetCDF-4(HDF5) grid archives and Zarr v2 stores as a
-  * REAL DataSourceV2 format — the ONE read path for grid archives and
-  * the write path for NetCDF files, where Catalyst, not the caller,
-  * drives the scan pruning:
+  * REAL DataSourceV2 format — the ONE read and write path for grid
+  * archives (the sink's three containers are described at the WRITE
+  * side below), where Catalyst, not the caller, drives the scan
+  * pruning:
   *
   * {{{
   * spark.read.format("netcdf")          // registered short name
@@ -237,6 +238,9 @@ object NetcdfV2 {
       s"netcdf $what needs a ${if (what == "sink") "save" else "load"}(path)")
     all
   }
+
+  /** A member name's container extension, as the sink writes it. */
+  private[sources] val MemberExt: scala.util.matching.Regex = """\.(nc|h5|zarr)$""".r
 
   /** The members `globs` match, as (path, on-disk bytes): every file,
     * and every Zarr v2 store (a directory holding `.zgroup`) as ONE
@@ -1199,31 +1203,35 @@ private class NcReader(p: NcPartition, pushed: NetcdfV2.NcPushed,
 
 // ======================================================================
 // WRITE side: `df.write.format("netcdf").mode("append"|"overwrite")
-//   .option("container", "hdf5"|"classic").save(dir)`
+//   .option("container", "hdf5"|"classic"|"zarr").save(dir)`
 //
 // Input is the table's OWN long form (dataset, variable, time, lat,
 // lon, value) — exactly what the read side emits, so
 // read(a).write(b) is an archive copy, and a single-variable frame
 // exports by adding a `variable` literal (Ensemble.toNetcdf). One
-// member FILE per `dataset`, holding every variable of that member on
-// the UNION of its observed axes (NaN-filled where a variable lacks a
-// cell — declared _FillValue, so the long-form round-trip is the
-// identity; the xarray Dataset model). Times are written CF
-// "microseconds since 1970-01-01" (exact below 2^53 µs); a member whose
-// times are ALL null writes a static (lat, lon) file; mixed null and
-// non-null times, or duplicate cells, reject by name
-// (NetcdfSource.buildMemberBytesMulti).
+// member per `dataset` in one of three containers: an HDF5 file
+// (`.h5`, the default), a classic NetCDF-3 file (`.nc`) or a Zarr v2
+// store directory (`.zarr`, ZarrStore.writeMemberStore). A member holds
+// every variable of that dataset on the UNION of its observed axes
+// (NaN-filled where a variable lacks a cell — declared fill, so the
+// long-form round-trip is the identity; the xarray Dataset model).
+// Times are written CF "microseconds since 1970-01-01" (exact below
+// 2^53 µs); a member whose times are ALL null writes a static
+// (lat, lon) grid; mixed null and non-null times, or duplicate cells,
+// reject by name (NetcdfSource.memberGrid).
 //
 //  - TASK-COMMIT SAFETY: writers emit to a per-attempt staging dir and
-//    the files reach the destination only in the driver's
+//    the members reach the destination only in the driver's
 //    BatchWrite.commit — a retried/speculated attempt can never leave
-//    a torn or duplicate member behind;
+//    a torn or duplicate member behind; a store is renamed into place
+//    whole, replacing a same-name store with all its chunk files;
 //  - PLANNED CLUSTERING: the Write declares
 //    RequiresDistributionAndOrdering (cluster + sort by `dataset`), so
 //    Spark inserts the exchange/sort — callers never repartition by
 //    hand, and one task holds one member's cells at a time;
 //  - MODES: append replaces only same-name members; overwrite
-//    truncates every prior .nc/.h5 member of the destination.
+//    truncates every prior .nc/.h5 member and .zarr store of the
+//    destination.
 // ======================================================================
 
 private class NcWriteBuilder(options: CaseInsensitiveStringMap,
@@ -1237,11 +1245,12 @@ private class NcWriteBuilder(options: CaseInsensitiveStringMap,
       case many => throw new IllegalArgumentException(
         s"netcdf sink writes to ONE directory (got ${many.size} paths)")
     }
-    val hdf5 = options.getOrDefault("container", "hdf5") match {
-      case "hdf5" => true
-      case "classic" => false
+    val ext = options.getOrDefault("container", "hdf5") match {
+      case "hdf5" => "h5"
+      case "classic" => "nc"
+      case "zarr" => "zarr"
       case other => throw new IllegalArgumentException(
-        s"netcdf sink: container '$other' (use 'hdf5' or 'classic')")
+        s"netcdf sink: container '$other' (use 'hdf5', 'classic' or 'zarr')")
     }
     // ordinals by name: AppendData resolves columns by name against the
     // table schema, but be defensive about order
@@ -1256,7 +1265,7 @@ private class NcWriteBuilder(options: CaseInsensitiveStringMap,
       ord("variable", StringType), ord("time", TimestampType),
       ord("lat", DoubleType), ord("lon", DoubleType),
       ord("value", DoubleType))
-    new NcWrite(dest, hdf5, doTruncate, ords, NetcdfV2.captureConf())
+    new NcWrite(dest, ext, doTruncate, ords, NetcdfV2.captureConf())
   }
 }
 
@@ -1267,7 +1276,7 @@ private case class NcWriteOrds(ds: Int, vr: Int, tm: Int,
 private case class NcCommit(entries: Seq[(String, String, String)])
     extends WriterCommitMessage
 
-private class NcWrite(dest: String, hdf5: Boolean, truncate: Boolean,
+private class NcWrite(dest: String, ext: String, truncate: Boolean,
                       ords: NcWriteOrds, conf: NetcdfV2.HadoopConfSer)
     extends Write with RequiresDistributionAndOrdering {
   import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
@@ -1284,10 +1293,10 @@ private class NcWrite(dest: String, hdf5: Boolean, truncate: Boolean,
       SortDirection.ASCENDING, NullOrdering.NULLS_FIRST))
 
   override def toBatch: BatchWrite =
-    new NcBatchWrite(dest, hdf5, truncate, ords, conf)
+    new NcBatchWrite(dest, ext, truncate, ords, conf)
 }
 
-private class NcBatchWrite(dest: String, hdf5: Boolean, truncate: Boolean,
+private class NcBatchWrite(dest: String, ext: String, truncate: Boolean,
                            ords: NcWriteOrds, conf: NetcdfV2.HadoopConfSer)
     extends BatchWrite {
   private val stagingDir =
@@ -1295,7 +1304,7 @@ private class NcBatchWrite(dest: String, hdf5: Boolean, truncate: Boolean,
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    new NcWriterFactory(stagingDir, if (hdf5) "h5" else "nc", ords, conf)
+    new NcWriterFactory(stagingDir, ext, ords, conf)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val destP = new Path(dest)
@@ -1320,20 +1329,20 @@ private class NcBatchWrite(dest: String, hdf5: Boolean, truncate: Boolean,
     // file commit — each member itself is atomic via rename).
     moves.foreach { case (tmp, fin, _) =>
       val to = new Path(destP, fin)
-      fs.delete(to, false) // same member name = replace
+      fs.delete(to, true) // same member name = replace, a store whole
       require(fs.rename(new Path(tmp), to),
         s"netcdf sink: could not move $tmp to $to")
     }
     if (truncate) {
-      // truncate means the DESTINATION's prior members are gone — both
-      // container extensions, or an overwrite that switched containers
-      // would leave the old-format member readable next to the new one
+      // truncate means the DESTINATION's prior members are gone — every
+      // container's, or an overwrite that switched containers would
+      // leave the old-format member readable next to the new one
       val fresh = moves.map(_._2).toSet
       Option(fs.listStatus(destP)).getOrElse(Array.empty)
-        .filter(st => st.isFile && (st.getPath.getName.endsWith(".h5") ||
-          st.getPath.getName.endsWith(".nc")) &&
-          !fresh.contains(st.getPath.getName))
-        .foreach(st => fs.delete(st.getPath, false))
+        .map(_.getPath)
+        .filter(p => NetcdfV2.MemberExt.findFirstIn(p.getName).isDefined &&
+          !fresh.contains(p.getName))
+        .foreach(fs.delete(_, true))
     }
     fs.delete(new Path(stagingDir), true)
   }
@@ -1354,8 +1363,9 @@ private class NcWriterFactory(stagingDir: String, ext: String,
 }
 
 /** Streams the dataset-sorted partition: one member's cells buffered,
-  * flushed to a per-attempt staging file on dataset change. Files move
-  * to the destination only at driver commit. */
+  * flushed to a per-attempt staging file (or store directory) on
+  * dataset change. Members move to the destination only at driver
+  * commit. */
 private class NcDataWriter(stagingDir: String, ext: String,
                            ords: NcWriteOrds, partitionId: Int, taskId: Long,
                            conf: NetcdfV2.HadoopConfSer)
@@ -1380,22 +1390,25 @@ private class NcDataWriter(stagingDir: String, ext: String,
   private val named = scala.collection.mutable.HashMap.empty[String, String]
 
   private def flush(): Unit = if (cur != null) {
-    // a member tag that came from a read is a file BASENAME — strip its
-    // container extension so read(a) → write(b) copies m1.nc to m1.nc,
-    // not m1.nc.nc (the container option picks the new extension)
-    val base = cur.replaceAll("\\.(nc|h5)$", "")
+    // a member tag that came from a read is a member BASENAME — strip
+    // its container extension so read(a) → write(b) copies m1.nc to
+    // m1.nc, not m1.nc.nc (the container option picks the new extension)
+    val base = NetcdfV2.MemberExt.replaceFirstIn(cur, "")
     named.put(s"$base.$ext", cur).filter(_ != cur).foreach { prev =>
       throw new IllegalArgumentException(
         s"netcdf sink: datasets '$prev' and '$cur' both map to member " +
           s"file '$base.$ext' — extension-stripped tags must be unique")
     }
-    val bytes = NetcdfSource.buildMemberBytesMulti(base, buf.toSeq,
-      hdf5 = ext == "h5")
     // taskId-unique temp name: concurrent attempts of the same
     // partition can never collide in staging
     val tmp = new Path(stagingDir, s"$taskId-$base.$ext")
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
+    if (ext == "zarr") ZarrStore.writeMemberStore(fs, tmp, base, buf.toSeq)
+    else {
+      val bytes = NetcdfSource.buildMemberBytesMulti(base, buf.toSeq,
+        hdf5 = ext == "h5")
+      val out = fs.create(tmp, true)
+      try out.write(bytes) finally out.close()
+    }
     moves += ((tmp.toString, s"$base.$ext", cur))
     buf.clear()
   }
@@ -1416,6 +1429,6 @@ private class NcDataWriter(stagingDir: String, ext: String,
 
   override def commit(): WriterCommitMessage = { flush(); NcCommit(moves.toSeq) }
   override def abort(): Unit =
-    moves.foreach { case (tmp, _, _) => fs.delete(new Path(tmp), false) }
+    moves.foreach { case (tmp, _, _) => fs.delete(new Path(tmp), true) }
   override def close(): Unit = fs.close() // private instance — must close
 }

@@ -516,10 +516,10 @@ object Sources {
     * for the four writes, writes
     *  - the single-member HDF5 file `grid_h5_<tier>/grid.h5`;
     *  - its classic-netCDF twin `grid_nc_<tier>/grid.nc`;
-    *  - the Zarr store `zarr_<tier>/grid.zarr`;
+    *  - its Zarr twin, the store `grid_zarr_<tier>/grid.zarr`;
     *  - the split archive `gridsplit_<tier>`: members m0/m1/m2 by day
     *    mod 3 (tiers with < 3 distinct days yield fewer).
-    * The NetCDF files go through the DSv2 sink in overwrite mode, which
+    * Every write goes through the DSv2 sink in overwrite mode, which
     * truncates every prior member of the destination, so a member an
     * earlier build at the same path (a regenerated tier) left behind is
     * never read.
@@ -540,12 +540,10 @@ object Sources {
           val dense = plan.cache()
           try {
             val member = gridMembers(dense, lit("grid"))
-            for ((ext, container) <- Seq("h5" -> "hdf5", "nc" -> "classic"))
+            for ((ext, container) <- Seq("h5" -> "hdf5", "nc" -> "classic",
+                "zarr" -> "zarr"))
               member.write.format("netcdf").option("container", container)
                 .mode("overwrite").save(gridPath(dir, s"grid_$ext"))
-            // overwrite semantics: writeMemberStore rewrites every chunk
-            // + metadata file of grid.zarr in place
-            ZarrStore.writeGrid(member, gridPath(dir, "zarr"), varName = "events")
             gridMembers(dense, concat(lit("m"),
                 pmod(datediff(col("day"), lit("1970-01-01")), lit(3)).cast("string")))
               .write.format("netcdf").option("container", "hdf5")
@@ -567,9 +565,7 @@ object Sources {
   /** The shared grid member in one format: `h5`, `nc` or `zarr`. */
   private def sharedGridMember(s: SparkSession, dir: String,
                                ext: String): Option[String] =
-    if (!grid(s, dir)) None
-    else if (ext == "zarr") Some(s"${gridPath(dir, "zarr")}/grid.zarr")
-    else Some(s"${gridPath(dir, s"grid_$ext")}/grid.$ext")
+    if (grid(s, dir)) Some(s"${gridPath(dir, s"grid_$ext")}/grid.$ext") else None
 
   private def sharedSplitArchive(s: SparkSession, dir: String): Option[String] =
     if (grid(s, dir)) Some(gridPath(dir, "gridsplit")) else None

@@ -1,10 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
 import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets
 
-/** Zarr v2 LOCAL-STORE reader/writer — the cloud-native chunked-array
+import org.apache.hadoop.fs.{FileSystem, Path}
+
+/** Zarr v2 LOCAL-STORE format — the cloud-native chunked-array
   * format modern climate archives (CMIP6 cloud mirrors, Pangeo) are
   * migrating to, completing the grid-format family next to
   * [[NetcdfClassic]] and [[Hdf5Classic]]. Hand-built from the PUBLIC
@@ -34,7 +35,12 @@ import java.nio.file.Files
   * [[planChunks]] — bounds prune non-intersecting chunks by pure name
   * arithmetic, WITHOUT opening them — and [[readSlab]], which decodes
   * only the chunks a hyperslab touches. A store is one scan member and
-  * one partition, like a chunked `.h5` file. */
+  * one partition, like a chunked `.h5` file.
+  *
+  * Writing goes through the same format's sink:
+  * `df.write.format("netcdf").option("container", "zarr")` stages one
+  * store per member and commits it like a member file, and
+  * [[writeMemberStore]] is its member encoder. */
 object ZarrStore {
 
   // ---------- minimal JSON (objects, arrays, strings, numbers,
@@ -357,13 +363,12 @@ object ZarrStore {
     out
   }
 
-  // ---------- write path --------------------------------------------
-  private def writeArray(dir: java.io.File, dtype: String,
-                         shape: Seq[Int], chunks: Seq[Int],
+  // ---------- write path: the netcdf sink's member encoder ----------
+  private def writeArray(put: (String, Array[Byte]) => Unit, name: String,
+                         dtype: String, shape: Seq[Int], chunks: Seq[Int],
                          dims: Seq[String], fillNaN: Boolean,
                          extraAttrs: Seq[(String, Any)],
                          chunkBytes: Seq[(Seq[Int], Array[Byte])]): Unit = {
-    dir.mkdirs()
     val metaJson = ZJson.renderObj(Seq(
       "zarr_format" -> 2,
       "shape" -> shape,
@@ -374,14 +379,12 @@ object ZarrStore {
       "fill_value" -> (if (fillNaN) Double.NaN else null),
       "order" -> "C",
       "filters" -> null))
-    Files.write(dir.toPath.resolve(".zarray"),
-      metaJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    put(s"$name/.zarray", metaJson.getBytes(StandardCharsets.UTF_8))
     val attrsJson = ZJson.renderObj(
       ("_ARRAY_DIMENSIONS" -> (dims: Any)) +: extraAttrs)
-    Files.write(dir.toPath.resolve(".zattrs"),
-      attrsJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    put(s"$name/.zattrs", attrsJson.getBytes(StandardCharsets.UTF_8))
     chunkBytes.foreach { case (ix, raw) =>
-      Files.write(dir.toPath.resolve(ix.mkString(".")), compressZlib(raw))
+      put(s"$name/${ix.mkString(".")}", compressZlib(raw))
     }
   }
 
@@ -394,102 +397,50 @@ object ZarrStore {
     v.foreach(bb.putLong); bb.array()
   }
 
-  /** ONE member's Zarr store from its long-form cells — the
-    * [[NetcdfSource.buildMemberBytes]] twin: axes are the distinct
-    * sorted coordinates, absent cells NaN (= the declared fill, so
-    * write→read is the identity on sparse grids), times stored as
-    * epoch-µs `<i8` with CF units, data chunked one-time-step-per-
-    * chunk (`(1, nlat, nlon)`) so a time-bounded read prunes whole
-    * chunk files, everything zlib level 6. */
+  /** ONE member's Zarr store at `root`, written through `fs` — the
+    * `netcdf` sink's `zarr` container. Every variable of the member is
+    * one `<f8` array on the union of the member's axes
+    * ([[NetcdfSource.memberGrid]], the rule the classic and HDF5
+    * containers follow), absent cells NaN (= the declared fill, so
+    * write→read is the identity on sparse grids); times are stored as
+    * epoch-µs `<i8` with CF units, data chunked one-time-step-per-chunk
+    * (`(1, nlat, nlon)`) so a time-bounded read prunes whole chunk
+    * files, everything zlib level 6. */
   private[sources] def writeMemberStore(
-      destDir: String, ds: String,
-      cells: Seq[(Long, Double, Double, Double)], varName: String): Unit = {
-    require(!ds.contains('/') && !ds.contains(java.io.File.separatorChar),
-      s"member tag '$ds' is not a path-safe store basename")
-    require(varName.nonEmpty && !varName.contains('/') &&
-      !Seq("time", "lat", "lon").contains(varName),
-      s"variable name '$varName' collides with an axis or contains '/'")
-    val times = cells.map(_._1).distinct.sorted
-    val is2d = times == Seq(NetcdfSource.NoTime)
-    require(is2d || !times.contains(NetcdfSource.NoTime),
-      s"member '$ds' mixes null and non-null times")
-    val lats = cells.map(_._2).distinct.sorted
-    val lons = cells.map(_._3).distinct.sorted
-    val tIx = times.zipWithIndex.toMap
-    val laIx = lats.zipWithIndex.toMap
-    val loIx = lons.zipWithIndex.toMap
-    val nPlane = lats.length * lons.length
-    val grid = Array.fill((if (is2d) 1 else times.length) * nPlane)(Double.NaN)
-    val seen = new java.util.HashSet[Integer](cells.length * 2)
-    cells.foreach { case (t, la, lo, v) =>
-      val ti = if (is2d) 0 else tIx(t)
-      val i = (ti * lats.length + laIx(la)) * lons.length + loIx(lo)
-      require(seen.add(i),
-        s"member '$ds' has duplicate rows for one (time, lat, lon) cell")
-      grid(i) = v
+      fs: FileSystem, root: Path, ds: String,
+      cells: Seq[(String, Long, Double, Double, Double)]): Unit = {
+    val g = NetcdfSource.memberGrid(ds, cells)
+    val nPlane = g.lats.length * g.lons.length
+    def put(rel: String, bytes: Array[Byte]): Unit = {
+      val out = fs.create(new Path(root, rel), true)
+      try out.write(bytes) finally out.close()
     }
-    val root = new java.io.File(destDir, s"$ds.zarr")
-    root.mkdirs()
-    Files.write(root.toPath.resolve(".zgroup"),
-      "{\"zarr_format\": 2}".getBytes)
-    Files.write(root.toPath.resolve(".zattrs"), "{}".getBytes)
-    writeArray(new java.io.File(root, "lat"), "<f8",
-      Seq(lats.length), Seq(lats.length), Seq("lat"), fillNaN = false,
-      Seq("units" -> "degrees_north"),
-      Seq(Seq(0) -> doubleBytes(lats.toArray)))
-    writeArray(new java.io.File(root, "lon"), "<f8",
-      Seq(lons.length), Seq(lons.length), Seq("lon"), fillNaN = false,
-      Seq("units" -> "degrees_east"),
-      Seq(Seq(0) -> doubleBytes(lons.toArray)))
-    if (is2d)
-      writeArray(new java.io.File(root, varName), "<f8",
-        Seq(lats.length, lons.length), Seq(lats.length, lons.length),
-        Seq("lat", "lon"), fillNaN = true, Seq.empty,
-        Seq(Seq(0, 0) -> doubleBytes(grid)))
-    else {
-      writeArray(new java.io.File(root, "time"), "<i8",
-        Seq(times.length), Seq(times.length), Seq("time"), fillNaN = false,
+    put(".zgroup", "{\"zarr_format\": 2}".getBytes(StandardCharsets.UTF_8))
+    put(".zattrs", "{}".getBytes(StandardCharsets.UTF_8))
+    writeArray(put, "lat", "<f8", Seq(g.lats.length), Seq(g.lats.length),
+      Seq("lat"), fillNaN = false, Seq("units" -> "degrees_north"),
+      Seq(Seq(0) -> doubleBytes(g.lats.toArray)))
+    writeArray(put, "lon", "<f8", Seq(g.lons.length), Seq(g.lons.length),
+      Seq("lon"), fillNaN = false, Seq("units" -> "degrees_east"),
+      Seq(Seq(0) -> doubleBytes(g.lons.toArray)))
+    if (!g.is2d)
+      writeArray(put, "time", "<i8", Seq(g.times.length), Seq(g.times.length),
+        Seq("time"), fillNaN = false,
         Seq("units" -> "microseconds since 1970-01-01"),
-        Seq(Seq(0) -> longBytes(times.toArray)))
-      writeArray(new java.io.File(root, varName), "<f8",
-        Seq(times.length, lats.length, lons.length),
-        Seq(1, lats.length, lons.length),
-        Seq("time", "lat", "lon"), fillNaN = true, Seq.empty,
-        times.indices.map(ti => Seq(ti, 0, 0) ->
-          doubleBytes(java.util.Arrays.copyOfRange(
-            grid, ti * nPlane, (ti + 1) * nPlane))))
+        Seq(Seq(0) -> longBytes(g.times.toArray)))
+    g.grids.foreach { case (v, grid) =>
+      if (g.is2d)
+        writeArray(put, v, "<f8", Seq(g.lats.length, g.lons.length),
+          Seq(g.lats.length, g.lons.length), Seq("lat", "lon"),
+          fillNaN = true, Seq.empty, Seq(Seq(0, 0) -> doubleBytes(grid)))
+      else
+        writeArray(put, v, "<f8",
+          Seq(g.times.length, g.lats.length, g.lons.length),
+          Seq(1, g.lats.length, g.lons.length), Seq("time", "lat", "lon"),
+          fillNaN = true, Seq.empty,
+          g.times.indices.map(ti => Seq(ti, 0, 0) ->
+            doubleBytes(java.util.Arrays.copyOfRange(
+              grid, ti * nPlane, (ti + 1) * nPlane))))
     }
-  }
-
-  /** bcdp's `to_zarr`-style terminal: one Zarr store per member, the
-    * per-member skeleton of the `netcdf` sink (repartition by member,
-    * one task assembles one member's dense grid — peak task memory is one
-    * member, the same bound the read side imposes). */
-  def writeGrid(df: DataFrame, destDir: String,
-                varName: String = "value"): Unit = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.functions.col
-    new java.io.File(destDir).mkdirs()
-    df.select(col("dataset"), col("time"), col("lat"), col("lon"),
-        col("value"))
-      .repartition(col("dataset"))
-      .sortWithinPartitions(col("dataset"))
-      .foreachPartition { (rows: Iterator[Row]) =>
-        var cur: String = null
-        var buf = Vector.empty[(Long, Double, Double, Double)]
-        def flush(): Unit = if (cur != null) {
-          writeMemberStore(destDir, cur, buf, varName)
-          buf = Vector.empty
-        }
-        rows.foreach { r =>
-          val ds = r.getString(0)
-          if (ds != cur) { flush(); cur = ds }
-          val t = if (r.isNullAt(1)) NetcdfSource.NoTime
-            else r.getTimestamp(1).getTime * 1000L +
-              (r.getTimestamp(1).getNanos / 1000L) % 1000L
-          buf :+= ((t, r.getDouble(2), r.getDouble(3), r.getDouble(4)))
-        }
-        flush()
-      }
   }
 }

@@ -18,7 +18,10 @@ import graft.{Session, SparkEntry}
   * naming two keys that share a memoized build (say
   * q_dedup_clusters_md5 before q_dedup_minhash_md5) splits the
   * first-touch build from the key's own work. Every streaming
-  * micro-batch prints its durationMs breakdown.
+  * micro-batch prints its durationMs breakdown. After the last pass it
+  * prints the cached storage: the in-memory size and the number of
+  * cached frames (`getRDDStorageInfo`, the sum perfbench reports as
+  * `cached_mb`).
   *
   * `--plan DIR` times nothing: it writes each key's formatted physical
   * plan, followed by the plain operator tree, to DIR/<key>.txt, so a
@@ -99,6 +102,9 @@ object Profile {
           }
           println(f"[profile] pass $pass total $total%.2f s (${keys.size} keys)")
         }
+        val cached = spark.sparkContext.getRDDStorageInfo
+        println(f"[profile] cached ${cached.map(_.memSize).sum / 1048576.0}%.4f MB " +
+          s"in ${cached.length} frames")
     }
     spark.stop()
     if (failures > 0) {

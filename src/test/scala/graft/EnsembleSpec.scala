@@ -107,8 +107,8 @@ class EnsembleSpec extends AnyFunSuite with SparkSuite {
   test("loadGrid over a glob matching an .h5 member and a .zarr store returns both members' rows") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ens_mixed").toString
     Ensemble.of(member("a", Seq(0.0, 20.0))).toNetcdf(dir, "tas", hdf5 = true)
-    graft.sources.ZarrStore.writeGrid(member("b", Seq(0.0, 20.0, 40.0)), dir,
-      varName = "tas")
+    member("b", Seq(0.0, 20.0, 40.0)).withColumn("variable", lit("tas"))
+      .write.format("netcdf").option("container", "zarr").mode("append").save(dir)
     val ens = Ensemble.loadGrid(spark, s"$dir/*", "tas")
     assert(ens.members == Seq("a.h5", "b.zarr"))
     def cells(df: org.apache.spark.sql.DataFrame) =

@@ -171,6 +171,40 @@ class NcCatalogSpec extends AnyFunSuite with SparkSuite {
     assert(NcCatalog.updateManifest(spark, s"$tmp/*", man).isEmpty)
   }
 
+  test("manifest indexes a .zarr store beside .h5/.nc members") {
+    val tmp = tmpDir("zarr")
+    writeClassic(s"$tmp/m1.nc", nt = 2, bias = 0.0)
+    writeH5(s"$tmp/m2.h5")
+    // m1's grid, shifted in value, as the Zarr store z1.zarr
+    val m1 = spark.read.format("netcdf").load(s"$tmp/m1.nc")
+    m1.withColumn("dataset", lit("z1")).withColumn("value", col("value") + 1000.0)
+      .write.format("netcdf").option("container", "zarr").mode("append").save(tmp)
+    val man = tmpDir("zman")
+    NcCatalog.buildManifest(spark, s"$tmp/*", man)
+    val cat = NcCatalog.catalog(spark, man).orderBy(col("dataset")).collect()
+    assert(cat.map(_.getAs[String]("dataset")).toSeq == Seq("m1.nc", "m2.h5", "z1.zarr"))
+    val z = cat(2)
+    assert(z.getAs[scala.collection.Seq[String]]("variables").toSeq == Seq("tas"))
+    assert(z.getAs[Double]("lat_min") == 0.0 && z.getAs[Double]("lat_max") == 10.0)
+    assert(z.getAs[Long]("time_min_us") == 0L &&
+      z.getAs[Long]("time_max_us") == 86400L * 1000000L)
+    // one member whose size is the sum of the store's files
+    val storeBytes = {
+      import scala.jdk.CollectionConverters._
+      val st = Files.walk(Paths.get(s"$tmp/z1.zarr"))
+      try st.iterator().asScala.filter(Files.isRegularFile(_)).map(Files.size).sum
+      finally st.close()
+    }
+    assert(z.getAs[Long]("bytes") == storeBytes)
+    // and the facet query reads the store through the scan
+    assert(rows(NcCatalog.select(spark, man, datasetPattern = Some("^z1"))) ==
+      rows(spark.read.format("netcdf").load(s"$tmp/z1.zarr")))
+    assert(NcCatalog.select(spark, man, variable = Some("tas"),
+      bounds = Some(NetcdfSource.GridBounds(latMin = 5.0)))
+      .select("dataset").distinct().collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("m1.nc", "z1.zarr"))
+  }
+
   test("manifest rejects a non-grid member by name") {
     val tmp = tmpDir("reject")
     // a valid container with no (time,lat,lon)/(lat,lon) data variable

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{Hdf5Classic, NetcdfClassic, NetcdfV2}
+import graft.sources.{Hdf5Classic, NetcdfClassic, NetcdfV2, ZarrStore}
 import graft.sources.NetcdfClassic.{NcAttr, NcDim}
 
 /** The DataSourceV2 `netcdf` format: every pushdown law is equality
@@ -61,7 +61,7 @@ class NetcdfV2Spec extends AnyFunSuite with SparkSuite {
   /** Strip the container extension off `dataset` (a read emits file
     * basenames; the sink writes extension-less member tags). */
   private def tagged(df: DataFrame): DataFrame = df.withColumn("dataset",
-    regexp_replace(col("dataset"), "\\.(nc|h5)$", ""))
+    regexp_replace(col("dataset"), "\\.(nc|h5|zarr)$", ""))
 
   test("multi-path load(p1, p2) unions the file lists; overlap dedups") {
     val tmp = tmpDir("multipath")
@@ -333,6 +333,29 @@ class NetcdfV2Spec extends AnyFunSuite with SparkSuite {
       .write.format("netcdf").mode("overwrite").save(tmp)
     assert(new java.io.File(tmp).listFiles().map(_.getName).toSeq ==
       Seq("m3.h5"))
+    // the same laws for Zarr stores; a same-name store is replaced
+    // WHOLE, so a smaller grid leaves no stale chunk file behind
+    val zs = tmpDir("zmodes")
+    def zarr(mode: String, rows: (String, String, java.sql.Timestamp,
+        Double, Double, Double)*): Unit =
+      longForm(rows).write.format("netcdf").option("container", "zarr")
+        .mode(mode).save(zs)
+    zarr("append", ("m1", "tas", ts(0), 0.0, 100.0, 1.0),
+      ("m1", "tas", ts(1), 0.0, 100.0, 1.5))
+    zarr("append", ("m2", "tas", ts(0), 0.0, 100.0, 2.0))
+    assert(new java.io.File(zs).listFiles().map(_.getName).sorted.toSeq ==
+      Seq("m1.zarr", "m2.zarr"))
+    assert(Files.exists(Paths.get(s"$zs/m1.zarr/tas/1.0.0")))
+    zarr("append", ("m1", "tas", ts(0), 0.0, 100.0, 7.0))
+    assert(dsv2(s"$zs/*").filter(col("dataset") === "m1.zarr")
+      .select("value").collect().map(_.getDouble(0)).toSeq == Seq(7.0))
+    assert(!Files.exists(Paths.get(s"$zs/m1.zarr/tas/1.0.0")),
+      "the replaced store kept a stale chunk file")
+    assert(dsv2(s"$zs/*").filter(col("dataset") === "m2.zarr")
+      .select("value").head.getDouble(0) == 2.0)
+    zarr("overwrite", ("m3", "tas", ts(0), 0.0, 100.0, 3.0))
+    assert(new java.io.File(zs).listFiles().map(_.getName).toSeq ==
+      Seq("m3.zarr"))
   }
 
   test("sink rejections are named: null dataset, mixed times, duplicate cells") {
@@ -402,6 +425,65 @@ class NetcdfV2Spec extends AnyFunSuite with SparkSuite {
       .mode("overwrite").save(tmp)
     assert(new java.io.File(tmp).listFiles().map(_.getName).toSeq == Seq("m1.h5"),
       "the stale classic member must not survive an overwrite")
+    longForm(Seq(("m1", "tas", ts(0), 0.0, 100.0, 3.0)))
+      .write.format("netcdf").option("container", "zarr")
+      .mode("overwrite").save(tmp)
+    assert(new java.io.File(tmp).listFiles().map(_.getName).toSeq == Seq("m1.zarr"),
+      "the stale hdf5 member must not survive an overwrite")
+    longForm(Seq(("m1", "tas", ts(0), 0.0, 100.0, 4.0)))
+      .write.format("netcdf").option("container", "classic")
+      .mode("overwrite").save(tmp)
+    assert(new java.io.File(tmp).listFiles().map(_.getName).toSeq == Seq("m1.nc"),
+      "the stale zarr store must not survive an overwrite")
+  }
+
+  test("zarr container: a two-variable member round-trips on the union axes with NaN fill") {
+    val tmp = tmpDir("zmulti")
+    // tas covers 2 times × 2 × 2 cells, pr one cell of the last time
+    val rows = (for (t <- 0 to 1; la <- Seq(0.0, 10.0); lo <- Seq(100.0, 110.0))
+      yield ("m", "tas", ts(t), la, lo, t * 4 + la / 10 * 2 + (lo - 100) / 10)) :+
+      (("m", "pr", ts(1), 10.0, 110.0, 9.0))
+    longForm(rows).write.format("netcdf").option("container", "zarr")
+      .mode("append").save(tmp)
+    assert(new java.io.File(tmp).listFiles().map(_.getName).toSeq == Seq("m.zarr"))
+    for (v <- Seq("pr", "tas")) {
+      val meta = ZarrStore.parseArrayMeta(new String(
+        Files.readAllBytes(Paths.get(s"$tmp/m.zarr/$v/.zarray"))))
+      assert(meta.dtype == "<f8" && meta.shape == Seq(2, 2, 2) &&
+        meta.fill.exists(_.isNaN), s"$v: $meta")
+    }
+    assertSame(tagged(dsv2(s"$tmp/*")), longForm(rows))
+  }
+
+  test("zarr container: a failing write leaves the destination's prior stores untouched and no staging dir") {
+    val tmp = tmpDir("zfail")
+    def zarr(mode: String, rows: (String, String, java.sql.Timestamp,
+        Double, Double, Double)*): Unit =
+      longForm(rows).write.format("netcdf").option("container", "zarr")
+        .mode(mode).save(tmp)
+    zarr("append", ("m1", "tas", ts(0), 0.0, 100.0, 1.0),
+      ("m2", "tas", ts(0), 0.0, 100.0, 2.0))
+    // every file and directory under the destination, with its bytes
+    def tree(): Map[String, Seq[Byte]] = {
+      import scala.jdk.CollectionConverters._
+      val root = Paths.get(tmp)
+      val st = Files.walk(root)
+      try st.iterator().asScala.map(p => root.relativize(p).toString ->
+        (if (Files.isDirectory(p)) Seq.empty[Byte] else Files.readAllBytes(p).toSeq))
+        .toMap
+      finally st.close()
+    }
+    val before = tree()
+    assert(before.keySet.exists(_.startsWith("m2.zarr/tas/")))
+    for (mode <- Seq("append", "overwrite")) {
+      // the second member has a duplicate cell
+      val ex = intercept[Exception](zarr(mode,
+        ("m1", "tas", ts(0), 0.0, 100.0, 5.0),
+        ("m2", "tas", ts(0), 0.0, 100.0, 6.0),
+        ("m2", "tas", ts(0), 0.0, 100.0, 7.0)))
+      assert(ex.getMessage.contains("duplicate rows"))
+      assert(tree() == before, s"a failed $mode write changed the destination")
+    }
   }
 
   test("dataset tags that collide after extension stripping reject by name") {

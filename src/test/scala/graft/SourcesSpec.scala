@@ -475,6 +475,13 @@ class SourcesSpec extends AnyFunSuite with SparkSuite {
     assert("TrieMap".r.findAllIn(tables).size == 3, "Tables declares a TrieMap besides its two maps")
   }
 
+  test("one grid writer and opener: no `foreachPartition` and no `binaryFile` under src/main/scala/graft/sources") {
+    val sources = scalaFiles("src/main/scala/graft/sources")
+    assert(sources.size > 5, "vacuous file list")
+    for (f <- sources; word <- Seq("foreachPartition", "binaryFile"))
+      assert(!read(f).contains(word), s"$f names $word")
+  }
+
   test("one session builder and one profiler: Session.local is the only builder, Profile the only probe") {
     def isComment(line: String) = Seq("*", "/*", "//").exists(line.trim.startsWith)
     val builders = scalaFiles("src/main/scala").filter { f =>

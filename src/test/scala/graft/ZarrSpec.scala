@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{NetcdfSource, ZarrStore}
@@ -19,6 +20,11 @@ class ZarrSpec extends AnyFunSuite with SparkSuite {
 
   private def ts(s: String): java.sql.Timestamp = java.sql.Timestamp.valueOf(s)
 
+  /** One store per `dataset`, through the sink's zarr container. */
+  private def writeZarr(df: DataFrame, dir: String, v: String): Unit =
+    df.withColumn("variable", lit(v)).write.format("netcdf")
+      .option("container", "zarr").mode("append").save(dir)
+
   /** A store read as one member of the `netcdf` scan. */
   private def readZarr(store: String, v: String) =
     spark.read.format("netcdf").option("vars", v).load(store)
@@ -35,7 +41,7 @@ class ZarrSpec extends AnyFunSuite with SparkSuite {
 
   test("write -> read is the identity on a sparse 3-D grid") {
     val dir = tmpDir("rt3d")
-    ZarrStore.writeGrid(sparse3d, dir, varName = "tas")
+    writeZarr(sparse3d, dir, "tas")
     val back = readZarr(s"$dir/m0.zarr", "tas")
       .select("time", "lat", "lon", "value")
       .collect().map(r => (r.getTimestamp(0), r.getDouble(1),
@@ -52,7 +58,7 @@ class ZarrSpec extends AnyFunSuite with SparkSuite {
       ("s0", null.asInstanceOf[java.sql.Timestamp], 10.0, 100.0, 7.0),
       ("s0", null.asInstanceOf[java.sql.Timestamp], 20.0, 110.0, 8.0))
       .toDF("dataset", "time", "lat", "lon", "value")
-    ZarrStore.writeGrid(df, dir, varName = "orog")
+    writeZarr(df, dir, "orog")
     val back = readZarr(s"$dir/s0.zarr", "orog")
       .select("time", "lat", "lon", "value").collect()
       .map(r => (r.isNullAt(0), r.getDouble(1), r.getDouble(2),
@@ -62,7 +68,7 @@ class ZarrSpec extends AnyFunSuite with SparkSuite {
 
   test("the store is xarray-shaped: _ARRAY_DIMENSIONS, CF time, zlib") {
     val dir = tmpDir("xr")
-    ZarrStore.writeGrid(sparse3d, dir, varName = "tas")
+    writeZarr(sparse3d, dir, "tas")
     val root = s"$dir/m0.zarr"
     assert(new String(Files.readAllBytes(Paths.get(s"$root/.zgroup")))
       .contains("\"zarr_format\": 2"))
@@ -79,7 +85,7 @@ class ZarrSpec extends AnyFunSuite with SparkSuite {
 
   test("bounds prune whole chunk files by name arithmetic") {
     val dir = tmpDir("prune")
-    ZarrStore.writeGrid(sparse3d, dir, varName = "tas")
+    writeZarr(sparse3d, dir, "tas")
     val store = s"$dir/m0.zarr"
     val meta = ZarrStore.parseArrayMeta(
       new String(Files.readAllBytes(Paths.get(s"$store/tas/.zarray"))))
@@ -100,7 +106,7 @@ class ZarrSpec extends AnyFunSuite with SparkSuite {
 
   test("a deleted chunk masks to fill (and null fill rejects by name)") {
     val dir = tmpDir("miss")
-    ZarrStore.writeGrid(sparse3d, dir, varName = "tas")
+    writeZarr(sparse3d, dir, "tas")
     val store = s"$dir/m0.zarr"
     Files.delete(Paths.get(s"$store/tas/1.0.0"))
     val back = readZarr(store, "tas")
@@ -204,7 +210,7 @@ class ZarrSpec extends AnyFunSuite with SparkSuite {
       ("m0", ts("2024-01-01 00:00:00"), 10.0, 100.0, 2.0))
       .toDF("dataset", "time", "lat", "lon", "value")
     val e1 = intercept[org.apache.spark.SparkException] {
-      ZarrStore.writeGrid(dup, dir, varName = "x")
+      writeZarr(dup, dir, "x")
     }
     assert(e1.getMessage.contains("duplicate") ||
       e1.getCause.getMessage.contains("duplicate"))
@@ -247,7 +253,7 @@ class ZarrSpec extends AnyFunSuite with SparkSuite {
       ("s0", null.asInstanceOf[java.sql.Timestamp], 10.0, 100.0, 7.0),
       ("s0", null.asInstanceOf[java.sql.Timestamp], 20.0, 110.0, 8.0))
       .toDF("dataset", "time", "lat", "lon", "value")
-    ZarrStore.writeGrid(df, dir, varName = "orog")
+    writeZarr(df, dir, "orog")
     val read = readZarr(s"$dir/s0.zarr", "orog")
     assert(read.count() == 2)
     val b = NetcdfSource.GridBounds(timeMin = Some(ts("2024-01-01 00:00:00")))
@@ -256,7 +262,7 @@ class ZarrSpec extends AnyFunSuite with SparkSuite {
 
   test("a bounded scan never opens chunk files outside the bounds") {
     val dir = tmpDir("unopened")
-    ZarrStore.writeGrid(sparse3d, dir, varName = "tas")
+    writeZarr(sparse3d, dir, "tas")
     val store = s"$dir/m0.zarr"
     // corrupt the first and last time step's chunks: only a read that
     // prunes them by name can succeed
