@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** The one memo of the library: every result that several keys of a
   * session share — files and catalog tables written once, cached
@@ -60,9 +61,12 @@ object Memo {
 
   /** Cache `df` and hold it for [[clear]] — for interior frames a
     * builder persists outside any entry's value. Like Spark's cache
-    * manager, it holds one frame per plan. */
+    * manager, it holds one frame per plan; a plan that is already
+    * cached is not cached again (Spark would only warn "Asked to cache
+    * already cached data"). */
   def track(df: DataFrame): DataFrame = {
-    tracked.putIfAbsent(plan(df), df.cache())
+    if (df.storageLevel == StorageLevel.NONE) df.cache()
+    tracked.putIfAbsent(plan(df), df)
     df
   }
 

@@ -32,50 +32,74 @@ object Tables {
     "part", "documents", "embeddings")
 
   private val dirSize = TrieMap.empty[String, Long]
-  private val sessionDefaults = TrieMap.empty[String, (String, String)]
+  private val sessionDefaults = TrieMap.empty[String, Map[String, String]]
 
   private def dirBytes(f: java.io.File): Long =
     if (f.isDirectory) Option(f.listFiles()).map(_.map(dirBytes).sum).getOrElse(0L)
     else f.length()
 
-  /** Tiny-input fast path (measured: AQE's re-optimization loop costs
-    * ~18% of total wall-clock across the query set at sf0.1 while
-    * having nothing to adapt — no skew, no partitions to coalesce at
-    * 4-32 shuffle partitions). Below 256 MB of total input, turn AQE
-    * off for the session; at production scale the gate leaves it on,
-    * where runtime re-planning (skew splits, join demotion) is worth
-    * its cost. Size, not scale-factor name, drives the decision.
-    * Set SPARK_GRAFT_NOTUNE=1 to leave AQE/partition confs untouched. */
+  /** One conf of the tiny-input regime: below `belowBytes` of total
+    * input it is set to `tiny(v)`, where `v` is the session's own value,
+    * and at or above the gate it is back at `v`. */
+  private final case class Tuned(conf: String, belowBytes: Long, tiny: String => String)
+
+  /** The tiny-input regime.
+    *  - AQE off below 256 MB: its re-optimization loop cost ~18% of
+    *    total wall-clock across the query set at sf0.1 with nothing to
+    *    adapt (no skew, no partitions to coalesce at 4-32 shuffle
+    *    partitions).
+    *  - At most 4 shuffle partitions below 256 MB: tiny shuffles are
+    *    not fanned across a big core count, so every stage is one wave
+    *    even at local[32].
+    *  - No code generation below 4 MB: whole-stage codegen off, and
+    *    every projection, predicate and ordering factory interpreted.
+    *    A pass over a tiny tier otherwise compiles 200-390 Janino
+    *    classes, and compiling and JIT-ing them costs more than the
+    *    rows they run over. Compiled code wins back its cost as input
+    *    grows and as passes repeat, so the gate sits below the size
+    *    where a cold plus a warm pass cost the same either way.
+    *    Measured over the 193 keys with `tools.Profile --passes 2` on
+    *    local[4], codegen on -> off (mean of two runs per side at
+    *    sf0.01, one at sf0.1): 1.8 MB (sf0.01) cold 101 -> 83 s, warm
+    *    36 -> 41 s; 17 MB (sf0.1) cold 146 -> 130 s, warm 54 -> 82 s;
+    *    the totals cross near 7 MB by log-size interpolation. At
+    *    134 MB (the `--scale` tier) the 20 slowest keys alone take
+    *    133 -> 178 s cold and 39 -> 76 s warm. */
+  private val tinyInput: Seq[Tuned] = Seq(
+    Tuned("spark.sql.adaptive.enabled", 256L << 20, _ => "false"),
+    Tuned("spark.sql.shuffle.partitions", 256L << 20, d => math.min(d.toInt, 4).toString),
+    Tuned("spark.sql.codegen.factoryMode", 4L << 20, _ => "NO_CODEGEN"))
+
+  /** The confs [[tuneForScale]] sets. */
+  private[graft] def regimeConfs: Seq[String] = tinyInput.map(_.conf)
+
+  /** Sets every conf of [[tinyInput]] from the total input size of
+    * `sfDir`: its tiny-input value below its gate, the session's own
+    * value (AQE on, one shuffle partition per core, whole-stage
+    * codegen) at or above it, where runtime re-planning (skew splits,
+    * join demotion) and compiled code are worth their cost. Size, not
+    * scale-factor name, drives the decision. Set SPARK_GRAFT_NOTUNE=1
+    * to leave every conf of the table untouched. */
   // synchronized: the conf writes are session-global, so two threads
   // loading dirs of different sizes concurrently would interleave the
-  // AQE/partition settings (harness is single-threaded; the lock makes
-  // the library safe for concurrent callers at negligible cost)
+  // regimes (the lock makes the library safe for concurrent callers at
+  // negligible cost)
   private def tuneForScale(spark: SparkSession, sfDir: String): Unit = synchronized {
     if (sys.env.get("SPARK_GRAFT_NOTUNE").contains("1")) return
     // size measured RECURSIVELY (Spark-written tables are directories of
     // part files — a flat sum would see ~4 KB per table and misfire the
-    // gate on production-scale data) and memoized per dir; the conf is
+    // gate on production-scale data) and memoized per dir; the confs are
     // re-applied on every call so interleaving a tiny and a large dir in
     // one session always runs each query under its own dir's regime.
     val total = dirSize.getOrElseUpdate(sfDir, {
       val root = new java.io.File(sfDir)
       if (root.exists()) dirBytes(root) else Long.MaxValue
     })
-    val defaults = sessionDefaults.getOrElseUpdate(uuid(spark), (
-      spark.conf.get("spark.sql.adaptive.enabled"),
-      spark.conf.get("spark.sql.shuffle.partitions")))
-    if (total < 256L * 1024 * 1024) {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      // don't fan tiny shuffles across a big core count: 4 partitions
-      // keep every stage 1-wave even at local[32]
-      if (defaults._2.toInt > 4)
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-    } else {
-      // large input: the session's own settings apply (AQE on, operator
-      // parallelism as configured) — and restore them if a tiny dir was
-      // loaded earlier in this session
-      spark.conf.set("spark.sql.adaptive.enabled", defaults._1)
-      spark.conf.set("spark.sql.shuffle.partitions", defaults._2)
+    val defaults = sessionDefaults.getOrElseUpdate(uuid(spark),
+      tinyInput.map(t => t.conf -> spark.conf.get(t.conf)).toMap)
+    tinyInput.foreach { t =>
+      val own = defaults(t.conf)
+      spark.conf.set(t.conf, if (total < t.belowBytes) t.tiny(own) else own)
     }
   }
 

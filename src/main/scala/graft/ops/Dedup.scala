@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.Tables
 
 /** Scale-path deduplication & ANN operators (LLM-data pipeline tier).
@@ -315,11 +316,16 @@ object Dedup {
                  localEdgeCap: Long = 1000000L): DataFrame = {
     // cache around the regime gate: the cap count and the local-path
     // collect (or the loop's symmetrization) would otherwise each
-    // replay the candidate-generation lineage — the expensive part
-    val e = edges.select(col("a"), col("b")).cache()
+    // replay the candidate-generation lineage — the expensive part.
+    // An (a, b) edge frame that is already cached (the memoized md5
+    // candidates) is read from its cache and left to its owner:
+    // unpersisting it here would drop the memo's copy.
+    val e = edges.select(col("a"), col("b"))
+    val owned = e.storageLevel == StorageLevel.NONE
+    if (owned) e.cache()
     try {
       componentsOn(e, maxIter, localEdgeCap)
-    } finally e.unpersist()
+    } finally if (owned) e.unpersist()
   }
 
   private def componentsOn(e: DataFrame, maxIter: Int,

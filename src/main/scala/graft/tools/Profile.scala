@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.execution.{FormattedMode, SimpleMode}
 import org.apache.spark.sql.streaming.StreamingQueryListener
-import graft.{Session, SparkEntry}
+import graft.{Session, SparkEntry, Tables}
 
 /** One profiler for the declared keys, on the session Bench builds.
   *
@@ -21,7 +21,9 @@ import graft.{Session, SparkEntry}
   * micro-batch prints its durationMs breakdown. After the last pass it
   * prints the cached storage: the in-memory size and the number of
   * cached frames (`getRDDStorageInfo`, the sum perfbench reports as
-  * `cached_mb`).
+  * `cached_mb`), and the regime the last key ran under: the effective
+  * AQE, shuffle-partition and codegen-factory confs, which
+  * `Tables.tuneForScale` sets from the tier's size.
   *
   * `--plan DIR` times nothing: it writes each key's formatted physical
   * plan, followed by the plain operator tree, to DIR/<key>.txt, so a
@@ -105,6 +107,8 @@ object Profile {
         val cached = spark.sparkContext.getRDDStorageInfo
         println(f"[profile] cached ${cached.map(_.memSize).sum / 1048576.0}%.4f MB " +
           s"in ${cached.length} frames")
+        println("[profile] regime " +
+          Tables.regimeConfs.map(k => s"$k=${spark.conf.get(k)}").mkString(" "))
     }
     spark.stop()
     if (failures > 0) {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
 /** The test session: `Session.local(4)`, shared by every suite in the
@@ -9,6 +9,18 @@ import org.scalatest.{BeforeAndAfterAll, Suite}
   * cache-sensitive assertion sees frames it did not create. */
 trait SparkSuite extends BeforeAndAfterAll { this: Suite =>
   lazy val spark: SparkSession = Session.local(4)
+
+  /** `df`'s executed plan as a large input plans it: with the codegen
+    * factory at Spark's default FALLBACK, where the tiny-input regime
+    * of `Tables.tuneForScale` sets NO_CODEGEN. `df` is built before the
+    * conf is set (building it runs the tuning), and the tier's regime
+    * is back when this returns. */
+  def compiledPlan(df: DataFrame): String = {
+    val k = "spark.sql.codegen.factoryMode"
+    val prior = spark.conf.get(k)
+    spark.conf.set(k, "FALLBACK")
+    try df.queryExecution.executedPlan.toString finally spark.conf.set(k, prior)
+  }
 
   override def afterAll(): Unit =
     try {

@@ -53,8 +53,7 @@ class TextExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("graded token keys run the native expression inside codegen") {
-    val p = SparkEntry.queries("q_text_tokens_est")(spark, dir)
-      .queryExecution.executedPlan.toString
+    val p = compiledPlan(SparkEntry.queries("q_text_tokens_est")(spark, dir))
     assert(p.toLowerCase.contains("bpetokencount"),
       s"tokens_est no longer runs the native expression:\n$p")
     assert(p.contains("*("), s"no codegen span:\n$p")
