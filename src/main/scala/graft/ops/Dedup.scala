@@ -114,15 +114,6 @@ object Dedup {
         (0 until numPerm).map(p => element_at(col("sig"), p + 1).as(s"h$p")): _*)
   }
 
-  /** MinHash signature via the one-pass UDAF
-    * (expressions.MinHashAgg): ARRAY<BIGINT> column `sig`, bit-identical
-    * to [[minHashSignatures]] (MinHashAggSpec) but computed in a single
-    * aggregation buffer — numPerm rehashes per input row into one
-    * `numPerm·8`-byte state instead of numPerm separate min aggregates. */
-  def minHashSignaturesAgg(docs: DataFrame, numPerm: Int): DataFrame =
-    shingleHashes(docs).groupBy(col("doc_id"))
-      .agg(graft.expressions.MinHashAgg.minhash_sig(col("h0"), numPerm).as("sig"))
-
   /** Exact-dedup pre-pass: byte-identical texts share every shingle and
     * hence every MinHash band, so N copies of one boilerplate page would
     * form one N²/2-pair bucket. Collapse each identical-text group to

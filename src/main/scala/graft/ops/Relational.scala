@@ -438,9 +438,6 @@ object Relational {
     }
   )
 
-  private val lineitemCents =
-    "CAST(ROUND(l_quantity*100) AS BIGINT)"
-
   val oracle: Map[String, String] = Map(
     "q_scan_project" ->
       """SELECT l_orderkey AS okey, CAST(l_linenumber AS BIGINT) AS lnum,

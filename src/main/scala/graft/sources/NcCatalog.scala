@@ -12,11 +12,12 @@ import org.apache.spark.sql.functions._
   *  1. [[buildManifest]] — a DISTRIBUTED sweep over a grid archive:
   *     the members are listed the way the DSv2 `netcdf` scan lists
   *     them ([[NetcdfV2.listMembers]]: every file, and every Zarr v2
-  *     store as one member sized by the sum of its files), and one
-  *     task per member opens it by path the way the scan's reader does
-  *     ([[NetcdfSource.openGrid]]) and records its envelope from the
-  *     self-describing metadata: data variables, lat/lon extents,
-  *     CF-decoded time range, byte size.
+  *     store as one member sized by the sum of its files), and tasks
+  *     (at most one per core) open them by path the way the scan's
+  *     reader does ([[NetcdfSource.openGrid]]) and record each envelope
+  *     from the self-describing metadata: data variables, lat/lon
+  *     extents, CF-decoded time range (the reader's own decode,
+  *     [[NetcdfSource.GridView.timesUs]]), byte size.
   *     The manifest is plain JSONL — the durable catalog artifact a
   *     100 TB archive maintains incrementally instead of re-listing
   *     and re-opening thousands of members per query.
@@ -69,16 +70,18 @@ object NcCatalog {
     found
   }
 
-  /** One task per member: each opens its member by path, so a classic
-    * or HDF5 file is read whole and a Zarr store only for its metadata
-    * and axes. */
+  /** Members spread over at most `defaultParallelism` tasks, so the
+    * manifest has at most that many part files: each task opens its
+    * members by path, so a classic or HDF5 file is read whole and a
+    * Zarr store only for its metadata and axes. */
   private def index(spark: SparkSession, members: Seq[(String, Long)],
                     latVar: String, lonVar: String,
                     timeVar: String): Dataset[MemberMeta] = {
     import spark.implicits._
     val conf = new NetcdfV2.HadoopConfSer(
       org.apache.spark.sql.GraftBridge.sessionHadoopConf(spark))
-    spark.sparkContext.parallelize(members, members.size)
+    val sc = spark.sparkContext
+    sc.parallelize(members, math.min(members.size, sc.defaultParallelism))
       .map { case (path, bytes) =>
         memberMeta(path, NetcdfSource.openGrid(path, conf.value), bytes,
           latVar, lonVar, timeVar)
@@ -86,38 +89,24 @@ object NcCatalog {
       .toDS()
   }
 
-  /** The envelope of ONE member, from its self-describing metadata. */
+  /** The envelope of ONE member, from its self-describing metadata:
+    * the scan's variable discovery, and a time range (when some data
+    * variable carries the time axis) decoded as the reader decodes it. */
   private def memberMeta(path: String, g: NetcdfSource.GridView, bytes: Long,
                          latVar: String, lonVar: String,
                          timeVar: String): MemberMeta = {
-    val axes = Set(latVar, lonVar, timeVar)
-    val dataVars = g.varNames.filterNot(axes).filter { v =>
-      scala.util.Try(g.dimsOf(v)).toOption.exists(d =>
-        d == Seq(timeVar, latVar, lonVar) || d == Seq(latVar, lonVar))
-    }.sorted
+    val dataVars = g.dataVars(latVar, lonVar, timeVar)
     require(dataVars.nonEmpty,
       s"$path: no (time, lat, lon) or (lat, lon) data variable — not a " +
         "grid member this catalog indexes")
     val lats = g.read(latVar)
     val lons = g.read(lonVar)
-    // time range only when SOME indexed variable carries the time axis
-    val timed = dataVars.exists(v => g.dimsOf(v).headOption.contains(timeVar))
-    val tRange: Option[(Long, Long)] =
-      if (!timed) None
-      else {
-        val units = g.unitsOf(timeVar).getOrElse(throw new
-            IllegalArgumentException(s"$path: time axis lacks CF units"))
-        val (base, step) = NetcdfSource.cfTimeBase(units)
-        val ts = g.read(timeVar).map(v => base + (v * step).toLong)
-        if (ts.isEmpty) None else Some((ts.min, ts.max))
-      }
-    val name = path.substring(path.lastIndexOf('/') + 1)
-    MemberMeta(path, name, dataVars,
-      tRange.map(_._1), tRange.map(_._2),
-      if (lats.isEmpty) Double.NaN else lats.min,
-      if (lats.isEmpty) Double.NaN else lats.max,
-      if (lons.isEmpty) Double.NaN else lons.min,
-      if (lons.isEmpty) Double.NaN else lons.max,
+    val ts = if (dataVars.exists(v => g.dimsOf(v).headOption.contains(timeVar)))
+      g.timesUs(timeVar) else Array.emptyLongArray
+    MemberMeta(path, path.substring(path.lastIndexOf('/') + 1), dataVars,
+      ts.minOption, ts.maxOption,
+      lats.minOption.getOrElse(Double.NaN), lats.maxOption.getOrElse(Double.NaN),
+      lons.minOption.getOrElse(Double.NaN), lons.maxOption.getOrElse(Double.NaN),
       bytes)
   }
 

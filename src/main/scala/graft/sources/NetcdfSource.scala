@@ -31,7 +31,10 @@ import org.apache.spark.sql.types._
   * time decoding, [[GridBounds]], the format-agnostic [[GridView]]
   * over one member and its opener [[openGrid]], the fill mask, the
   * union-axes rule [[memberGrid]] and the file encoder
-  * [[buildMemberBytesMulti]].
+  * [[buildMemberBytesMulti]]. A member is walked in one place: the
+  * view's variable discovery (`dataVars`) and time decode (`timesUs`)
+  * serve the catalog and the source's `NcSelection`, the one pruned
+  * cell loop behind both the row reader and the aggregate reader.
   */
 object NetcdfSource {
 
@@ -141,6 +144,27 @@ object NetcdfSource {
         case NetcdfClassic.NcAttr(`a`, ds: Array[Double]) if ds.nonEmpty => ds.head
         case NetcdfClassic.NcAttr(`a`, ls: Array[Long]) if ls.nonEmpty => ls.head.toDouble
       }
+    /** The member's data variables, sorted: every variable laid out
+      * (time, lat, lon) or (lat, lon) over the named axes, the axes
+      * themselves and other dimension scales excluded. The one variable
+      * discovery of the scan, the aggregate reader and the catalog. */
+    final def dataVars(lat: String, lon: String, time: String): Seq[String] = {
+      val axes = Set(lat, lon, time)
+      varNames.filterNot(axes).filter { v =>
+        scala.util.Try(dimsOf(v)).toOption.exists(d =>
+          d == Seq(time, lat, lon) || d == Seq(lat, lon))
+      }.sorted
+    }
+    /** The time axis in epoch µs: its CF `units` through [[cfTimeBase]],
+      * each value rounded to the nearest µs. Reader rows and catalog
+      * envelopes both decode through here, so a pruned envelope never
+      * disagrees with the rows it stands for. */
+    final def timesUs(time: String): Array[Long] = {
+      val units = unitsOf(time).getOrElse(throw new IllegalArgumentException(
+        s"time variable '$time' has no units attribute"))
+      val (base, step) = cfTimeBase(units)
+      read(time).map(t => base + math.round(t * step))
+    }
   }
   private final class ClassicView(nc: NetcdfClassic.NcFile) extends GridView {
     def varNames: Seq[String] = nc.vars.map(_.name)
@@ -246,8 +270,9 @@ object NetcdfSource {
     * row (a NaN fill matches NaN cells). `fill = None` means every cell
     * is present — the aggregate reader's metadata-only regime. */
   private[sources] final case class FillMask(fill: Option[Double]) {
+    private[this] val f = fill.getOrElse(Double.NaN)
     def present(raw: Double): Boolean =
-      fill.forall(f => !(raw == f || (f.isNaN && raw.isNaN)))
+      fill.isEmpty || !(raw == f || (f.isNaN && raw.isNaN))
   }
   private[sources] def fillMask(g: GridView, v: String): FillMask =
     FillMask(g.numAttr(v, "_FillValue").orElse(g.numAttr(v, "missing_value")))

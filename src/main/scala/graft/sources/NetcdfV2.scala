@@ -658,16 +658,16 @@ private case class NcAggPartition(paths: Seq[String],
                                   timeVar: String, grouped: Boolean)
     extends InputPartition
 
-/** Member files → COUNT/MIN/MAX accumulator rows, mirroring
-  * [[NcReader.rowsFor]]'s pruning exactly (same axis index sets, same
-  * Spark-exact predicate atoms, same fill masking) so the pushed
-  * aggregate equals the aggregate over the row path by construction.
-  * When the variable declares no fill, COUNT is axis arithmetic and
-  * MIN/MAX come from the coordinate axes — the data chunks are never
-  * read, let alone inflated. A multi-path partition (global complete
-  * pushdown) folds every member into the one accumulator set; a
-  * grouped partition (one path) prepends its dataset and suppresses
-  * the row when nothing survived (empty SQL group). */
+/** Member files → COUNT/MIN/MAX accumulator rows, folded over the
+  * cells of each variable's [[NcSelection]] — the walk [[NcReader]]
+  * turns into rows — so the pushed aggregate equals the aggregate over
+  * the row path by construction. When the variable declares no fill,
+  * COUNT is the product of the selection's index sets and MIN/MAX come
+  * from the coordinate axes: the data chunks are never read, let alone
+  * inflated. A multi-path partition (global complete pushdown) folds
+  * every member into the one accumulator set; a grouped partition (one
+  * path) prepends its dataset and suppresses the row when nothing
+  * survived (empty SQL group). */
 private class NcAggReader(p: NcAggPartition, pushed: NetcdfV2.NcPushed,
                           aggs: Seq[NetcdfV2.NcAgg],
                           conf: NetcdfV2.HadoopConfSer)
@@ -694,110 +694,35 @@ private class NcAggReader(p: NcAggPartition, pushed: NetcdfV2.NcPushed,
     else if (if (isMin) x < cur.longValue() else x > cur.longValue()) x
     else cur
 
-  private def seenAxes(lat: Double, lon: Double): Unit = {
-    latMin = updD(latMin, lat, isMin = true)
-    latMax = updD(latMax, lat, isMin = false)
-    lonMin = updD(lonMin, lon, isMin = true)
-    lonMax = updD(lonMax, lon, isMin = false)
+  private def seenLat(x: Double): Unit = {
+    latMin = updD(latMin, x, isMin = true); latMax = updD(latMax, x, isMin = false)
+  }
+  private def seenLon(x: Double): Unit = {
+    lonMin = updD(lonMin, x, isMin = true); lonMax = updD(lonMax, x, isMin = false)
+  }
+  private def seenTime(us: Long): Unit = {
+    tMin = updL(tMin, us, isMin = true); tMax = updL(tMax, us, isMin = false)
   }
 
-  locally {
-    p.paths.foreach { path =>
-      val g = NetcdfSource.openGrid(path, conf.value)
-      val ds = new Path(path).getName
-      if (pushed.dsOk(ds)) {
-        val vars = p.vars.getOrElse {
-          val axes = Set(p.latVar, p.lonVar, p.timeVar)
-          g.varNames.filterNot(axes).filter { v =>
-            Try(g.dimsOf(v)).toOption.exists(d =>
-              d == Seq(p.timeVar, p.latVar, p.lonVar) ||
-                d == Seq(p.latVar, p.lonVar))
-          }.sorted
+  // a static variable's cells have a NULL time: they count toward
+  // count(*), never toward count(time) or min/max(time) (SQL nulls)
+  p.paths.foreach { path =>
+    NcSelection.ofMember(path, p.vars, p.latVar, p.lonVar, p.timeVar, pushed,
+      conf.value).foreach { s =>
+      if (s.mask.fill.isEmpty) {
+        // metadata-only: every selected cell emits
+        val n = s.tIdx.length.toLong * s.laIdx.length * s.loIdx.length
+        if (n > 0) {
+          nRows += n
+          s.laIdx.foreach(i => seenLat(s.lats(i)))
+          s.loIdx.foreach(i => seenLon(s.lons(i)))
+          if (s.timed) { nTime += n; s.tIdx.foreach(i => seenTime(s.times(i))) }
         }
-        vars.filter(pushed.varOk).foreach(v => aggFor(g, v))
+      } else while (s.next()) {
+        nRows += 1
+        if (s.timed) { nTime += 1; seenTime(s.timeUs) }
+        seenLat(s.lat); seenLon(s.lon)
       }
-    }
-  }
-
-  private def aggFor(g: NetcdfSource.GridView, v: String): Unit = {
-    val dims = g.dimsOf(v)
-    val lats = g.read(p.latVar)
-    val lons = g.read(p.lonVar)
-    val mask = NetcdfSource.fillMask(g, v)
-    val laIdx = lats.indices.filter(i => pushed.latOk(lats(i)))
-    val loIdx = lons.indices.filter(i => pushed.lonOk(lons(i)))
-
-    dims match {
-      case Seq(p.timeVar, p.latVar, p.lonVar) =>
-        val units = g.unitsOf(p.timeVar).getOrElse(
-          throw new IllegalArgumentException(
-            s"time variable '${p.timeVar}' has no units attribute"))
-        val (base, step) = NetcdfSource.cfTimeBase(units)
-        val times = g.read(p.timeVar).map(t => base + math.round(t * step))
-        val tIdx = times.indices.filter(i => pushed.timeOk(times(i)))
-        if (tIdx.nonEmpty && laIdx.nonEmpty && loIdx.nonEmpty) {
-          if (mask.fill.isEmpty) {
-            // metadata-only: every selected cell emits — count the
-            // index-set product, fold the axis values
-            val n = tIdx.size.toLong * laIdx.size * loIdx.size
-            nRows += n; nTime += n
-            laIdx.foreach(i => { latMin = updD(latMin, lats(i), true)
-              latMax = updD(latMax, lats(i), false) })
-            loIdx.foreach(i => { lonMin = updD(lonMin, lons(i), true)
-              lonMax = updD(lonMax, lons(i), false) })
-            tIdx.foreach(i => { tMin = updL(tMin, times(i), true)
-              tMax = updL(tMax, times(i), false) })
-          } else {
-            val (t0, t1) = (tIdx.min, tIdx.max)
-            val (a0, a1) = (laIdx.min, laIdx.max)
-            val (o0, o1) = (loIdx.min, loIdx.max)
-            val (nLa, nLo) = (a1 - a0 + 1, o1 - o0 + 1)
-            val data = g.readSlab(v,
-              Seq(t0, a0, o0), Seq(t1 - t0 + 1, nLa, nLo),
-              Seq(times.length, lats.length, lons.length))
-            for {
-              ti <- t0 to t1 if pushed.timeOk(times(ti))
-              li <- a0 to a1 if pushed.latOk(lats(li))
-              oi <- o0 to o1 if pushed.lonOk(lons(oi))
-              if mask.present(data(((ti - t0) * nLa + (li - a0)) * nLo + (oi - o0)))
-            } {
-              nRows += 1; nTime += 1
-              tMin = updL(tMin, times(ti), true)
-              tMax = updL(tMax, times(ti), false)
-              seenAxes(lats(li), lons(oi))
-            }
-          }
-        }
-      case Seq(p.latVar, p.lonVar) =>
-        // static grid: time NULL — counts toward count(*), never toward
-        // count(time) or min/max(time) (SQL null semantics)
-        if (pushed.timeOkNull && laIdx.nonEmpty && loIdx.nonEmpty) {
-          if (mask.fill.isEmpty) {
-            nRows += laIdx.size.toLong * loIdx.size
-            laIdx.foreach(i => { latMin = updD(latMin, lats(i), true)
-              latMax = updD(latMax, lats(i), false) })
-            loIdx.foreach(i => { lonMin = updD(lonMin, lons(i), true)
-              lonMax = updD(lonMax, lons(i), false) })
-          } else {
-            val (a0, a1) = (laIdx.min, laIdx.max)
-            val (o0, o1) = (loIdx.min, loIdx.max)
-            val (nLa, nLo) = (a1 - a0 + 1, o1 - o0 + 1)
-            val data = g.readSlab(v, Seq(a0, o0), Seq(nLa, nLo),
-              Seq(lats.length, lons.length))
-            for {
-              li <- a0 to a1 if pushed.latOk(lats(li))
-              oi <- o0 to o1 if pushed.lonOk(lons(oi))
-              if mask.present(data((li - a0) * nLo + (oi - o0)))
-            } {
-              nRows += 1
-              seenAxes(lats(li), lons(oi))
-            }
-          }
-        }
-      case other => throw new IllegalArgumentException(
-        s"unsupported dim layout $other for '$v' " +
-          s"(expected (${p.timeVar}, ${p.latVar}, ${p.lonVar}) or " +
-          s"(${p.latVar}, ${p.lonVar}))")
     }
   }
 
@@ -1052,43 +977,121 @@ private class NcMicroBatchStream(pathGlobs: Seq[String],
   override def stop(): Unit = ()
 }
 
+/** One variable of one member under the pushed atoms: the walk that
+  * [[NcReader]] turns into rows and [[NcAggReader]] folds into
+  * aggregates. It holds the surviving time planes (a static (lat, lon)
+  * variable is one plane with a NULL time, kept only when
+  * `timeOkNull`), the lat and lon index sets of the Spark-exact atoms,
+  * and a cursor over the present cells. The cursor's first [[next]]
+  * reads the contiguous cover of the index sets with ONE chunk-pruned
+  * [[NetcdfSource.GridView.readSlab]]; it then walks the index sets
+  * inside the cover, so every cell passes the pushed atoms (exact on
+  * non-monotonic axes too: the cover only ever over-fetches), and skips
+  * the cells [[NetcdfSource.FillMask]] marks missing. The cursor
+  * allocates nothing per cell. */
+private final class NcSelection(val g: NetcdfSource.GridView, val v: String,
+                                latVar: String, lonVar: String, timeVar: String,
+                                pushed: NetcdfV2.NcPushed) {
+  private val dims = g.dimsOf(v)
+  val timed: Boolean =
+    if (dims == Seq(timeVar, latVar, lonVar)) true
+    else if (dims == Seq(latVar, lonVar)) false
+    else throw new IllegalArgumentException(
+      s"unsupported dim layout $dims for '$v' " +
+        s"(expected ($timeVar, $latVar, $lonVar) or ($latVar, $lonVar))")
+  val lats: Array[Double] = g.read(latVar)
+  val lons: Array[Double] = g.read(lonVar)
+  val times: Array[Long] = if (timed) g.timesUs(timeVar) else Array.emptyLongArray
+  val mask: NetcdfSource.FillMask = NetcdfSource.fillMask(g, v)
+  val tIdx: Array[Int] =
+    if (timed) times.indices.filter(i => pushed.timeOk(times(i))).toArray
+    else if (pushed.timeOkNull) Array(0) else Array.emptyIntArray
+  val laIdx: Array[Int] = lats.indices.filter(i => pushed.latOk(lats(i))).toArray
+  val loIdx: Array[Int] = lons.indices.filter(i => pushed.lonOk(lons(i))).toArray
+
+  // cursor: positions in the index sets, the slab, and the row offset
+  // of the current (plane, lat) pair inside it
+  private var it, il = 0
+  private var io = -1
+  private var data: Array[Double] = _
+  private var rowAt = 0
+  private var done = tIdx.isEmpty || laIdx.isEmpty || loIdx.isEmpty
+
+  /** The current cell's raw value, time (boxed once per plane; null on
+    * a static plane), lat and lon — valid after [[next]] returned true. */
+  var raw: Double = _
+  var time: java.lang.Long = _
+  def timeUs: Long = times(tIdx(it))
+  def lat: Double = lats(laIdx(il))
+  def lon: Double = lons(loIdx(io))
+
+  private def cover(ix: Array[Int]): Int = ix.last - ix.head + 1
+  private def seek(): Unit = {
+    if (il == 0 && timed) time = times(tIdx(it))
+    rowAt = ((tIdx(it) - tIdx.head) * cover(laIdx) + laIdx(il) - laIdx.head) *
+      cover(loIdx) - loIdx.head
+  }
+
+  /** Advances to the next present cell; false once the walk is done. */
+  def next(): Boolean = {
+    if (done) return false
+    if (data == null) {
+      val axes = Seq((tIdx, if (timed) times.length else 1), (laIdx, lats.length),
+        (loIdx, lons.length)).drop(if (timed) 0 else 1)
+      data = g.readSlab(v, axes.map(_._1.head.toLong),
+        axes.map(a => cover(a._1).toLong), axes.map(_._2.toLong))
+      seek()
+    }
+    while (true) {
+      io += 1
+      if (io == loIdx.length) {
+        io = 0; il += 1
+        if (il == laIdx.length) {
+          il = 0; it += 1
+          if (it == tIdx.length) { done = true; return false }
+        }
+        seek()
+      }
+      raw = data(rowAt + loIdx(io))
+      if (mask.present(raw)) return true
+    }
+    false
+  }
+}
+
+private object NcSelection {
+  /** The selections of one member: none when the pushed `dataset` atoms
+    * exclude it (it is then never opened), else one per variable the
+    * pushed `variable` atoms keep among the explicit `vars` option —
+    * every named variable must exist in every member (a missing one
+    * fails by name, never silently skipped) — or, absent that option,
+    * among THIS member's own [[NetcdfSource.GridView.dataVars]], so a
+    * mixed archive contributes each member's full variable set. */
+  def ofMember(path: String, vars: Option[Seq[String]], latVar: String,
+               lonVar: String, timeVar: String, pushed: NetcdfV2.NcPushed,
+               conf: Configuration): Iterator[NcSelection] =
+    if (!pushed.dsOk(new Path(path).getName)) Iterator.empty
+    else {
+      val g = NetcdfSource.openGrid(path, conf)
+      vars.getOrElse(g.dataVars(latVar, lonVar, timeVar)).iterator
+        .filter(pushed.varOk)
+        .map(v => new NcSelection(g, v, latVar, lonVar, timeVar, pushed))
+    }
+}
+
 /** One member → pruned long-form rows — the only long-form row emitter
-  * for grid files and Zarr stores. Supports (time, lat, lon) and
-  * (lat, lon) variables; CF times decode through
-  * [[NetcdfSource.cfTimeBase]]; the CF
+  * for grid files and Zarr stores. It maps the cells of each variable's
+  * [[NcSelection]] to rows of the required columns; the CF
   * mask-and-scale conventions apply (xarray's
   * `open_dataset(mask_and_scale=True)` defaults): a fill cell emits NO
-  * row ([[NetcdfSource.FillMask]]) and packed data unpacks as
-  * `raw * scale_factor + add_offset`. The pushed atoms are evaluated
-  * Spark-exactly per coordinate: in-predicate index sets per axis,
-  * their contiguous cover fetched through the chunk-pruned
-  * [[NetcdfSource.GridView.readSlab]], per-cell re-check (exact on
-  * non-monotonic axes too — the cover only ever over-fetches). */
+  * row and packed data unpacks as `raw * scale_factor + add_offset`. */
 private class NcReader(p: NcPartition, pushed: NetcdfV2.NcPushed,
                        required: Seq[String], conf: NetcdfV2.HadoopConfSer)
     extends PartitionReader[InternalRow] {
-  import NetcdfV2._
 
-  private val it: Iterator[InternalRow] = {
-    val g = NetcdfSource.openGrid(p.path, conf.value)
-    val ds = new Path(p.path).getName
-    // explicit `vars` option: every named variable must exist in every
-    // member (rowsFor throws the reader's named error otherwise — a
-    // missing variable is never silently skipped). Absent: THIS file's
-    // own data variables — (time,lat,lon)/(lat,lon) layouts, axes and
-    // dim scales excluded — so mixed archives contribute each member's
-    // full variable set.
-    val vars = p.vars.getOrElse {
-      val axes = Set(p.latVar, p.lonVar, p.timeVar)
-      g.varNames.filterNot(axes).filter { v =>
-        Try(g.dimsOf(v)).toOption.exists(d =>
-          d == Seq(p.timeVar, p.latVar, p.lonVar) ||
-            d == Seq(p.latVar, p.lonVar))
-      }.sorted
-    }
-    if (!pushed.dsOk(ds)) Iterator.empty
-    else vars.iterator.filter(pushed.varOk).flatMap(v => rowsFor(g, ds, v))
-  }
+  private val dsU = UTF8String.fromString(new Path(p.path).getName)
+  private val sels = NcSelection.ofMember(p.path, p.vars, p.latVar, p.lonVar,
+    p.timeVar, pushed, conf.value)
 
   // required-column projection: ordinal codes per output slot
   private val DS = 0; private val VR = 1; private val TM = 2
@@ -1104,98 +1107,37 @@ private class NcReader(p: NcPartition, pushed: NetcdfV2.NcPushed,
       s"netcdf source: unknown required column '$other'")
   }.toArray
 
-  private def rowsFor(g: NetcdfSource.GridView, ds: String,
-                      v: String): Iterator[InternalRow] = {
-    val dims = g.dimsOf(v)
-    val lats = g.read(p.latVar)
-    val lons = g.read(p.lonVar)
-    val scale = g.numAttr(v, "scale_factor").getOrElse(1.0)
-    val offset = g.numAttr(v, "add_offset").getOrElse(0.0)
-    val mask = NetcdfSource.fillMask(g, v)
-    val dsU = UTF8String.fromString(ds)
-    val vU = UTF8String.fromString(v)
-
-    def emit(tUs: java.lang.Long, lat: Double, lon: Double,
-             raw: Double): Option[InternalRow] =
-      if (!mask.present(raw)) None
-      else {
-        // a FRESH row per cell: Spark's row-based DSv2 path buffers
-        // reader output without copying, so a reused row would turn
-        // every earlier row into the last one (caught by the spec's
-        // very first equality law)
-        val row = new GenericInternalRow(slots.length)
-        var k = 0
-        while (k < slots.length) {
-          slots(k) match {
-            case DS => row.update(k, dsU)
-            case VR => row.update(k, vU)
-            case TM => row.update(k, tUs) // null for static grids
-            case LA => row.update(k, lat)
-            case LO => row.update(k, lon)
-            case VA => row.update(k, raw * scale + offset)
-          }
-          k += 1
-        }
-        Some(row)
-      }
-
-    val laIdx = lats.indices.filter(i => pushed.latOk(lats(i)))
-    val loIdx = lons.indices.filter(i => pushed.lonOk(lons(i)))
-
-    dims match {
-      case Seq(p.timeVar, p.latVar, p.lonVar) =>
-        val units = g.unitsOf(p.timeVar).getOrElse(
-          throw new IllegalArgumentException(
-            s"time variable '${p.timeVar}' has no units attribute"))
-        val (base, step) = NetcdfSource.cfTimeBase(units)
-        val times = g.read(p.timeVar).map(t => base + math.round(t * step))
-        val tIdx = times.indices.filter(i => pushed.timeOk(times(i)))
-        if (tIdx.isEmpty || laIdx.isEmpty || loIdx.isEmpty) Iterator.empty
-        else {
-          val (t0, t1) = (tIdx.min, tIdx.max)
-          val (a0, a1) = (laIdx.min, laIdx.max)
-          val (o0, o1) = (loIdx.min, loIdx.max)
-          val (nLa, nLo) = (a1 - a0 + 1, o1 - o0 + 1)
-          val data = g.readSlab(v,
-            Seq(t0, a0, o0), Seq(t1 - t0 + 1, nLa, nLo),
-            Seq(times.length, lats.length, lons.length))
-          for {
-            ti <- (t0 to t1).iterator if pushed.timeOk(times(ti))
-            li <- a0 to a1 if pushed.latOk(lats(li))
-            oi <- o0 to o1 if pushed.lonOk(lons(oi))
-            r <- emit(times(ti),
-              lats(li), lons(oi),
-              data(((ti - t0) * nLa + (li - a0)) * nLo + (oi - o0)))
-          } yield r
-        }
-      case Seq(p.latVar, p.lonVar) =>
-        // static grid: time is NULL — any time comparison or IsNotNull
-        // drops every row (SQL null semantics), so skip the data read
-        if (!pushed.timeOkNull || laIdx.isEmpty || loIdx.isEmpty)
-          Iterator.empty
-        else {
-          val (a0, a1) = (laIdx.min, laIdx.max)
-          val (o0, o1) = (loIdx.min, loIdx.max)
-          val (nLa, nLo) = (a1 - a0 + 1, o1 - o0 + 1)
-          val data = g.readSlab(v, Seq(a0, o0), Seq(nLa, nLo),
-            Seq(lats.length, lons.length))
-          for {
-            li <- (a0 to a1).iterator if pushed.latOk(lats(li))
-            oi <- o0 to o1 if pushed.lonOk(lons(oi))
-            r <- emit(null, lats(li), lons(oi),
-              data((li - a0) * nLo + (oi - o0)))
-          } yield r
-        }
-      case other => throw new IllegalArgumentException(
-        s"unsupported dim layout $other for '$v' " +
-          s"(expected (${p.timeVar}, ${p.latVar}, ${p.lonVar}) or " +
-          s"(${p.latVar}, ${p.lonVar}))")
-    }
-  }
-
+  private var sel: NcSelection = _
+  private var vU: UTF8String = _
+  private var scale, offset = 0.0
   private var cur: InternalRow = _
+
   override def next(): Boolean = {
-    if (it.hasNext) { cur = it.next(); true } else false
+    while (sel == null || !sel.next()) {
+      if (!sels.hasNext) return false
+      sel = sels.next()
+      vU = UTF8String.fromString(sel.v)
+      scale = sel.g.numAttr(sel.v, "scale_factor").getOrElse(1.0)
+      offset = sel.g.numAttr(sel.v, "add_offset").getOrElse(0.0)
+    }
+    // a FRESH row per cell: Spark's row-based DSv2 path buffers reader
+    // output without copying, so a reused row would turn every earlier
+    // row into the last one (caught by the spec's very first equality law)
+    val row = new GenericInternalRow(slots.length)
+    var k = 0
+    while (k < slots.length) {
+      slots(k) match {
+        case DS => row.update(k, dsU)
+        case VR => row.update(k, vU)
+        case TM => row.update(k, sel.time)
+        case LA => row.update(k, sel.lat)
+        case LO => row.update(k, sel.lon)
+        case VA => row.update(k, sel.raw * scale + offset)
+      }
+      k += 1
+    }
+    cur = row
+    true
   }
   override def get(): InternalRow = cur
   override def close(): Unit = ()

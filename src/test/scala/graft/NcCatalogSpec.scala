@@ -205,6 +205,58 @@ class NcCatalogSpec extends AnyFunSuite with SparkSuite {
       Seq("m1.nc", "z1.zarr"))
   }
 
+  test("envelope times decode as the reader's rows do: sub-µs products round, never truncate") {
+    // 1.001 s × 1e6 is 1000999.9999999999 in doubles: a truncating
+    // decode records 1 000 999 µs, the reader emits 1 001 000 µs, and a
+    // 1.001 s time bound would prune a member holding a matching row
+    val tmp = tmpDir("cftime")
+    def member(times: Array[Double]) = (
+      Seq(NcDim("time", times.length), NcDim("lat", 1), NcDim("lon", 2)),
+      Seq(
+        ("time", Seq(0), Seq(NcAttr("units", "seconds since 1970-01-01")), times),
+        ("lat", Seq(1), Nil, Array(0.0)),
+        ("lon", Seq(2), Nil, Array(100.0, 110.0)),
+        ("tas", Seq(0, 1, 2), Nil, Array.tabulate(times.length * 2)(_.toDouble))))
+    val (cd, cv) = member(Array(0.5, 1.001))
+    Files.write(Paths.get(s"$tmp/c.nc"), NetcdfClassic.write(cd, cv))
+    val (hd, hv) = member(Array(1.001, 1.003))
+    Files.write(Paths.get(s"$tmp/h.h5"), Hdf5Classic.write(hd, hv))
+    val man = tmpDir("cftime-man")
+    NcCatalog.buildManifest(spark, s"$tmp/*", man)
+    val full = spark.read.format("netcdf").load(s"$tmp/c.nc", s"$tmp/h.h5")
+    val read = full.groupBy("dataset")
+      .agg(min("time").as("tmin"), max("time").as("tmax")).collect()
+      .map(r => r.getString(0) -> (
+        org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(r.getTimestamp(1)),
+        org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(r.getTimestamp(2))))
+      .toMap
+    assert(read == Map("c.nc" -> (500000L, 1001000L), "h.h5" -> (1001000L, 1003000L)))
+    val cat = NcCatalog.catalog(spark, man).collect()
+      .map(r => r.getAs[String]("dataset") ->
+        (r.getAs[Long]("time_min_us"), r.getAs[Long]("time_max_us"))).toMap
+    assert(cat == read)
+    val b = NetcdfSource.GridBounds(timeMin = Some(new java.sql.Timestamp(1001L)))
+    val got = NcCatalog.select(spark, man, bounds = Some(b))
+    assert(rows(got) == rows(full.where(b.predicate)))
+    assert(got.select("dataset").distinct().collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("c.nc", "h.h5"))
+  }
+
+  test("manifest part files are bounded by cores, not by members") {
+    val tmp = tmpDir("parts")
+    (1 to 6).foreach(i => writeClassic(s"$tmp/m$i.nc", nt = 1, bias = i * 10.0, day0 = i))
+    val man = tmpDir("parts-man")
+    NcCatalog.buildManifest(spark, s"$tmp/*", man)
+    val parts = new java.io.File(man).listFiles().map(_.getName)
+      .filter(n => n.startsWith("part-") && n.endsWith(".json"))
+    // the suite's session is Session.local(4)
+    assert(parts.nonEmpty && parts.length <= 4, parts.toSeq)
+    val cat = NcCatalog.catalog(spark, man).orderBy("dataset").collect()
+    assert(cat.map(_.getAs[String]("dataset")).toSeq == (1 to 6).map(i => s"m$i.nc"))
+    assert(cat.map(_.getAs[Long]("time_min_us")).toSeq ==
+      (1 to 6).map(_ * 86400L * 1000000L))
+  }
+
   test("manifest rejects a non-grid member by name") {
     val tmp = tmpDir("reject")
     // a valid container with no (time,lat,lon)/(lat,lon) data variable

@@ -908,6 +908,84 @@ class NetcdfV2Spec extends AnyFunSuite with SparkSuite {
     assert(aggRow(pushed) == Seq(6L, 0L, null))
   }
 
+  test("one law for both read paths on all three containers: pushed aggregates == aggregates over rows, rows inside catalog envelopes") {
+    // seeded random sparse long forms (3-D and static members, absent
+    // cells NaN-filled by the sink), each written as hdf5, classic and
+    // zarr, read through ONE scan under random pushed lat/lon/time bounds
+    val lats = Seq(-10.0, 0.0, 5.0, 10.0, 20.0)
+    val lons = Seq(100.0, 110.0, 115.0, 125.0)
+    val aggs = Seq(count(lit(1)), count(col("time")), min("lat"), max("lat"),
+      min("lon"), max("lon"), min("time"), max("time"))
+    def agg(df: DataFrame) = df.agg(aggs.head, aggs.tail: _*)
+    def grouped(df: DataFrame) = df.groupBy("dataset").agg(aggs.head, aggs.tail: _*)
+    def pushedPlan(df: DataFrame): Unit = {
+      assert(!hasAggregate(df), df.queryExecution.optimizedPlan)
+      assert(df.queryExecution.executedPlan.toString.contains("PushedAggregates: ["))
+    }
+    for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      val rows = (1 to 2 + rnd.nextInt(2)).flatMap { m =>
+        val times: Seq[java.sql.Timestamp] =
+          if (rnd.nextInt(3) == 0) Seq(null)
+          else (0 to 4).filter(_ => rnd.nextBoolean()).map(ts) :+ ts(5)
+        val vars = if (rnd.nextBoolean()) Seq("tas") else Seq("pr", "tas")
+        val dense = for (v <- vars; t <- times; la <- lats; lo <- lons)
+          yield (s"m$m", v, t, la, lo, rnd.nextInt(1000).toDouble)
+        dense.filter(_ => rnd.nextInt(3) == 0) :+ dense.head
+      }.distinct
+      val root = tmpDir(s"law$seed")
+      for (c <- Seq("hdf5", "classic", "zarr"))
+        longForm(rows).write.format("netcdf").option("container", c)
+          .mode("append").save(s"$root/$c")
+      val glob = s"$root/*/*"
+      val all = spark.read.format("netcdf").load(glob).localCheckpoint()
+
+      // every row lies inside its member's catalog envelope
+      val man = tmpDir(s"law$seed-man")
+      graft.sources.NcCatalog.buildManifest(spark, glob, man)
+      val env = graft.sources.NcCatalog.catalog(spark, man).collect()
+        .map(e => e.getAs[String]("dataset") -> e).toMap
+      assert(env.keySet == all.select("dataset").distinct().collect()
+        .map(_.getString(0)).toSet)
+      all.collect().foreach { r =>
+        val e = env(r.getAs[String]("dataset"))
+        val (la, lo) = (r.getAs[Double]("lat"), r.getAs[Double]("lon"))
+        val t = Option(r.getAs[java.sql.Timestamp]("time")).map(
+          org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp)
+        assert(e.getAs[scala.collection.Seq[String]]("variables")
+          .contains(r.getAs[String]("variable")), s"$r outside $e")
+        assert(la >= e.getAs[Double]("lat_min") && la <= e.getAs[Double]("lat_max") &&
+          lo >= e.getAs[Double]("lon_min") && lo <= e.getAs[Double]("lon_max"),
+          s"$r outside $e")
+        assert(t.isEmpty == e.isNullAt(e.fieldIndex("time_min_us")) &&
+          t.forall(us => us >= e.getAs[Long]("time_min_us") &&
+            us <= e.getAs[Long]("time_max_us")), s"$r outside $e")
+      }
+
+      for (_ <- 1 to 3) {
+        def pick[A](xs: Seq[A], odds: Int): Option[A] =
+          if (rnd.nextInt(odds) == 0) Some(xs(rnd.nextInt(xs.length))) else None
+        val pred = Seq(
+          pick(lats, 2).map(col("lat") >= _), pick(lats, 2).map(col("lat") <= _),
+          pick(lons, 2).map(col("lon") > _), pick(lons, 2).map(col("lon") <= _),
+          pick(0 to 5, 3).map(d => col("time") >= ts(d)),
+          pick(0 to 5, 3).map(d => col("time") < ts(d))).flatten.reduceOption(_ && _)
+        val scan = spark.read.format("netcdf").load(glob)
+        val (q, ref) = pred.fold((scan, all))(p => (scan.filter(p), all.filter(p)))
+        val (g, gq) = (agg(q), grouped(q))
+        pushedPlan(g); pushedPlan(gq)
+        assert(g.collect().toSeq == agg(ref).collect().toSeq, s"seed $seed, $pred")
+        val byMember = sortedRows(gq)
+        assert(byMember == sortedRows(grouped(ref)), s"seed $seed, $pred")
+        // and the three containers of one member agree with each other
+        val byContainer = byMember.groupBy(r => r.getString(0).split('.').last)
+          .map { case (c, rs) => c -> rs.map(r => r.toSeq.updated(0,
+            r.getString(0).split('.').head)) }
+        assert(byContainer.values.toSet.size <= 1, s"seed $seed, $pred: $byContainer")
+      }
+    }
+  }
+
   test("climate pipeline over the DSv2 source: chain == in-memory twin, subset PUSHED into the scan") {
     // The q_climate_pipeline_nc law: the full chained Ensemble
     // (subset → regridBin(sum) → resample(week, sum) → anomaly) over a

@@ -60,8 +60,9 @@ class PlanAuditSpec extends AnyFunSuite with SparkSuite {
 
   test("expression pipeline stays inside whole-stage codegen") {
     val p = compiledPlan(SparkEntry.queries("q_project_expr")(spark, dir))
-    // codegen'd operators print with the "*(n)" stage prefix
-    assert(p.contains("*("), s"no codegen span:\n$p")
+    // codegen'd operators print with the "*(n)" stage prefix: the key's
+    // own Project (the one computing the CASE band) must carry it
+    assert(inCodegen(p, " AS band#"), s"the key's Project is outside codegen:\n$p")
   }
 
   test("groupBy aggregates map-side first (partial + final HashAggregate)") {

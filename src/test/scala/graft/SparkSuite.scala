@@ -22,6 +22,14 @@ trait SparkSuite extends BeforeAndAfterAll { this: Suite =>
     try df.queryExecution.executedPlan.toString finally spark.conf.set(k, prior)
   }
 
+  /** Whether every operator line of `plan` that holds `marker`
+    * (case-insensitively; at least one must) carries whole-stage
+    * codegen's `*(n)` stage prefix, i.e. runs inside a codegen span. */
+  def inCodegen(plan: String, marker: String): Boolean = {
+    val lines = plan.linesIterator.filter(_.toLowerCase.contains(marker.toLowerCase)).toSeq
+    lines.nonEmpty && lines.forall(l => """^[\s:+\-|]*\*\(\d+\) """.r.findFirstIn(l).isDefined)
+  }
+
   override def afterAll(): Unit =
     try {
       Memo.clear()
