@@ -36,9 +36,13 @@ object Vectors {
     * array → the fold is NULL): a ragged vector must surface as NULL,
     * never as a plausible truncated dot (r16 review). Inputs never
     * carry null ELEMENTS (micros-quantized vectors), the one remaining
-    * case where the two forms could differ. */
+    * case where the two forms could differ. A self-dot needs no guard:
+    * one column's two reads cannot differ in length, and a NULL input
+    * is NULL either way (the guard there is a trivially true predicate
+    * Spark warns about on every build). */
   private def dot(a: Column, b: Column): Column =
-    when(size(a) === size(b),
+    if (a == b) graft.expressions.VectorExpressions.dot_product(a, a)
+    else when(size(a) === size(b),
       graft.expressions.VectorExpressions.dot_product(a, b))
   private def norm2(a: Column): Column =
     aggregate(a, lit(0.0), (acc, x) => acc + x * x)

@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   *
   *  1. [[buildManifest]] — a DISTRIBUTED sweep over a grid archive:
   *     the members are listed the way the DSv2 `netcdf` scan lists
-  *     them ([[NetcdfV2.listMembers]]: every file, and every Zarr v2
-  *     store as one member sized by the sum of its files), and tasks
+  *     them ([[NetcdfV2.listMembers]]: every file, every Zarr v2
+  *     store as one member sized by the sum of its files, and the
+  *     members inside a sink's directory), and tasks
   *     (at most one per core) open them by path the way the scan's
   *     reader does ([[NetcdfSource.openGrid]]) and record each envelope
   *     from the self-describing metadata: data variables, lat/lon
@@ -51,10 +52,11 @@ object NcCatalog {
 
   /** Distributed manifest build: glob → per-member envelope rows →
     * JSONL under `manifestDir`. Re-running overwrites; see
-    * [[updateManifest]] for the incremental refresh. `manifestDir`
-    * must live OUTSIDE the member glob — inside it, the manifest's
-    * own JSON part files would match the glob and fail the header
-    * parse by name on the next build/update. */
+    * [[updateManifest]] for the incremental refresh. An archive
+    * directory with no members yet writes an empty manifest. A glob
+    * must not match `manifestDir`'s own JSON part files (they would
+    * fail the header parse by name on the next build/update); a
+    * directory path never does, so `dir/_manifest` is a safe place. */
   def buildManifest(spark: SparkSession, pathGlob: String,
                     manifestDir: String,
                     latVar: String = "lat", lonVar: String = "lon",
@@ -63,17 +65,15 @@ object NcCatalog {
       .write.mode("overwrite").json(manifestDir)
 
   /** The (path, bytes) members `pathGlob` matches, listed on the driver. */
-  private def members(spark: SparkSession, pathGlob: String): Seq[(String, Long)] = {
-    val found = NetcdfV2.listMembers(Seq(pathGlob),
+  private def members(spark: SparkSession, pathGlob: String): Seq[(String, Long)] =
+    NetcdfV2.listMembers(Seq(pathGlob),
       org.apache.spark.sql.GraftBridge.sessionHadoopConf(spark))
-    require(found.nonEmpty, s"catalog: no members match '$pathGlob'")
-    found
-  }
 
-  /** Members spread over at most `defaultParallelism` tasks, so the
-    * manifest has at most that many part files: each task opens its
-    * members by path, so a classic or HDF5 file is read whole and a
-    * Zarr store only for its metadata and axes. */
+  /** Members spread over at most `defaultParallelism` tasks (and at
+    * least one, which zero members leave empty), so the manifest has
+    * at most that many part files: each task opens its members by path,
+    * so a classic or HDF5 file is read whole and a Zarr store only for
+    * its metadata and axes. */
   private def index(spark: SparkSession, members: Seq[(String, Long)],
                     latVar: String, lonVar: String,
                     timeVar: String): Dataset[MemberMeta] = {
@@ -81,7 +81,7 @@ object NcCatalog {
     val conf = new NetcdfV2.HadoopConfSer(
       org.apache.spark.sql.GraftBridge.sessionHadoopConf(spark))
     val sc = spark.sparkContext
-    sc.parallelize(members, math.min(members.size, sc.defaultParallelism))
+    sc.parallelize(members, math.max(1, math.min(members.size, sc.defaultParallelism)))
       .map { case (path, bytes) =>
         memberMeta(path, NetcdfSource.openGrid(path, conf.value), bytes,
           latVar, lonVar, timeVar)

@@ -121,7 +121,7 @@ object NetcdfSource {
     * NetCDF-3 names axes via dim ids, NetCDF-4/HDF5 via DIMENSION_LIST
     * dimension scales (see [[Hdf5Classic]]), Zarr via the xarray
     * `_ARRAY_DIMENSIONS` attribute. */
-  private[sources] sealed trait GridView {
+  private[sources] trait GridView {
     /** Every dataset/variable name in the file (coordinates included) —
       * the DSv2 source's variable discovery walks this. */
     def varNames: Seq[String]

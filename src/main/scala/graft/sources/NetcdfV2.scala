@@ -7,7 +7,7 @@ import scala.collection.mutable.ArrayBuffer
 import scala.util.Try
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
@@ -62,11 +62,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * A member is a file, or a Zarr store: a directory holding `.zgroup`
   * that the glob matches, read through [[NetcdfSource.openGrid]]'s
-  * Zarr view. Parallelism is one partition per member (per-file
-  * granularity is what the container formats force; a multi-TB
-  * archive is thousands of members, like dask's per-file chunks in the
-  * reference), each partition parsing its member with the format
-  * auto-detected from the magic bytes. `estimateStatistics` reports
+  * Zarr view. Any other directory reads as the members the sink writes
+  * into it ([[NetcdfV2.listMembers]]), so `load(dir)` of an archive
+  * with no members yet is an empty frame. Parallelism is one partition
+  * per member (per-file granularity is what the container formats
+  * force; a multi-TB archive is thousands of members, like dask's
+  * per-file chunks in the reference), each partition parsing its member
+  * with the format auto-detected from the magic bytes.
+  * `estimateStatistics` reports
   * the pruned byte total (a store counts the sum of its files) so AQE
   * and join planning see the post-pushdown size.
   *
@@ -242,20 +245,39 @@ object NetcdfV2 {
   /** A member name's container extension, as the sink writes it. */
   private[sources] val MemberExt: scala.util.matching.Regex = """\.(nc|h5|zarr)$""".r
 
-  /** The members `globs` match, as (path, on-disk bytes): every file,
-    * and every Zarr v2 store (a directory holding `.zgroup`) as ONE
-    * member sized by the sum of its files. */
+  /** The members `globs` match, as (path, on-disk bytes) — the one
+    * listing of the scan and the catalog. What a glob matches reads as:
+    *  - a file: one member;
+    *  - a Zarr v2 store (a directory holding `.zgroup`): one member
+    *    sized by the sum of its files;
+    *  - any other directory: its children named like a member
+    *    ([[MemberExt]], the names the sink writes and truncates), so a
+    *    sink's destination reads as its members and never as its
+    *    `.graft-staging-*` directories or a `_manifest` beside them. A
+    *    directory holding no members lists none: an empty archive.
+    * Globs that match nothing at all fail here, by name — the one such
+    * rejection of the scan and the catalog. */
   private[graft] def listMembers(globs: Seq[String],
-                                 conf: Configuration): Seq[(String, Long)] =
-    globs.flatMap { glob =>
+                                 conf: Configuration): Seq[(String, Long)] = {
+    val matched = globs.flatMap { glob =>
       val p = new Path(glob)
       val fs = p.getFileSystem(conf)
-      Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil).collect {
-        case st if st.isFile => (st.getPath.toString, st.getLen)
-        case st if fs.exists(new Path(st.getPath, ".zgroup")) =>
-          (st.getPath.toString, fs.getContentSummary(st.getPath).getLength)
-      }
+      Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil).map(fs -> _)
+    }
+    require(matched.nonEmpty,
+      s"netcdf source: no files match '${globs.mkString(", ")}'")
+    def member(fs: FileSystem, st: FileStatus): Option[(String, Long)] =
+      if (st.isFile) Some((st.getPath.toString, st.getLen))
+      else if (fs.exists(new Path(st.getPath, ".zgroup")))
+        Some((st.getPath.toString, fs.getContentSummary(st.getPath).getLength))
+      else None
+    matched.flatMap { case (fs, st) =>
+      member(fs, st).map(Seq(_)).getOrElse(
+        fs.listStatus(st.getPath).toSeq
+          .filter(c => MemberExt.findFirstIn(c.getPath.getName).isDefined)
+          .flatMap(member(fs, _)))
     }.distinct
+  }
 
   /** Whole-file fetch (per-member granularity is what the container
     * formats force — parallelism comes from the file count). */
@@ -439,7 +461,10 @@ private class NcScanBuilder(options: CaseInsensitiveStringMap)
     *    members' chunk-metadata answers inside one reader task
     *    (metadata-only per member — KBs of header bytes — so a
     *    bounded sequential merge beats a shuffle; above the cap the
-    *    parallel partial-merge form wins and we fall back to it);
+    *    parallel partial-merge form wins and we fall back to it).
+    *    Zero members are answered complete too: the merged partition
+    *    emits (count 0, NULL extrema), where a partial form would
+    *    leave Spark's merge of zero partial COUNTs NULL;
     *  - GROUP BY dataset — one row per group: dataset is file
     *    identity, so per-file readers ARE per-group finals, at any
     *    archive size — unless two surviving members collide on
@@ -459,7 +484,7 @@ private class NcScanBuilder(options: CaseInsensitiveStringMap)
       if (grouped) {
         val names = paths.map(p => new Path(p).getName)
         names.distinct.length == names.length
-      } else paths.nonEmpty && paths.length <= completeAggMaxFiles
+      } else paths.length <= completeAggMaxFiles
   }
 
   override def supportCompletePushDown(agg: Aggregation): Boolean =
@@ -502,10 +527,9 @@ private class NcScanBuilder(options: CaseInsensitiveStringMap)
         grouped = grouped,
         // recompute the same deterministic predicate Spark saw in
         // supportCompletePushDown: when the GLOBAL aggregate was
-        // granted complete over >1 members, the scan must emit ONE
-        // merged row, so all members ride a single partition
-        mergeAll = !grouped && completeFor(grouped = false) &&
-          survivingPaths.exists(_.length > 1))
+        // granted complete, the scan must emit ONE merged row, so all
+        // members (possibly none) ride a single partition
+        mergeAll = !grouped && completeFor(grouped = false))
       case None => new NcScan(paths, varsOpt, latV, lonV, timeV,
         acc, required, accepted.map(_.toString).toSeq, conf, maxFiles, slackMs)
     }
@@ -524,29 +548,35 @@ private class NcScan(pathGlobs: Seq[String], varsOpt: Option[Seq[String]],
   /** Driver-side member listing, `dataset` pushdown applied: an
     * out-of-set member is pruned HERE and never opened. Sorted for
     * deterministic partition numbering. */
-  private lazy val files: Seq[(String, Long)] = {
-    val all = NetcdfV2.listMembers(pathGlobs, conf.value)
-    require(all.nonEmpty,
-      s"netcdf source: no files match '${pathGlobs.mkString(", ")}'")
-    all.filter { case (path, _) => pushed.dsOk(new Path(path).getName) }
+  private lazy val files: Seq[(String, Long)] =
+    NetcdfV2.listMembers(pathGlobs, conf.value)
+      .filter { case (path, _) => pushed.dsOk(new Path(path).getName) }
       .sortBy(_._1)
-  }
 
   /** The explicit `vars` option with `variable` pushdown applied; None
     * = PER-FILE discovery in each reader (a mixed archive where
     * members carry different variable sets reads every one of them —
     * driver-side first-file discovery would silently drop variables
     * the first member happens to lack). */
-  private lazy val vars: Option[Seq[String]] =
+  protected lazy val vars: Option[Seq[String]] =
     varsOpt.map(_.filter(pushed.varOk))
+
+  // a micro-batch reads what its stream admits, not this scan's listing
+  @volatile private var streamed = false
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
+    streamed = true
     new NcMicroBatchStream(pathGlobs, vars, latVar, lonVar, timeVar, pushed,
       required, conf, streamMaxFiles, streamSlackMs)
+  }
+  /** The load paths, the members a batch scan reads (a directory path
+    * alone does not show them), the pushed filters and the read schema. */
   override def description(): String =
     s"netcdf ${pathGlobs.mkString(",")}, " +
+      (if (streamed) "" else "Members: " + org.apache.spark.sql.catalyst.util
+        .truncatedString(files.map(f => new Path(f._1).getName), "[", ", ", "]", 25) + ", ") +
       s"PushedFilters: [${pushedDesc.mkString(", ")}], " +
       s"ReadSchema: ${required.simpleString}"
 
@@ -613,18 +643,12 @@ private class NcAggScan(pathGlobs: Seq[String], varsOpt: Option[Seq[String]],
 
   override def planInputPartitions(): Array[InputPartition] = {
     val base = super.planInputPartitions().map(_.asInstanceOf[NcPartition])
-    if (mergeAll) {
-      // granted from the builder's listing (>1 surviving members); if
-      // the scan's own listing now disagrees (members deleted between
-      // planning and execution), fail by NAME — an empty partition set
-      // here would return ZERO rows for a complete global aggregate
-      // that must emit one (r16 review)
-      require(base.nonEmpty,
-        "netcdf aggregate pushdown: the surviving-member listing became " +
-          "empty between planning and execution (archive mutated?)")
-      Array(NcAggPartition(base.map(_.path).toSeq, base.head.vars,
-        latVar, lonVar, timeVar, grouped = false))
-    } else base.map(p => NcAggPartition(Seq(p.path), p.vars,
+    // a complete global aggregate is ONE partition even over zero
+    // members: it must emit its one row (an empty partition set would
+    // return none)
+    if (mergeAll) Array(NcAggPartition(base.map(_.path).toSeq, vars,
+      latVar, lonVar, timeVar, grouped = false))
+    else base.map(p => NcAggPartition(Seq(p.path), p.vars,
       latVar, lonVar, timeVar, grouped): InputPartition)
   }
 
@@ -990,24 +1014,23 @@ private class NcMicroBatchStream(pathGlobs: Seq[String],
   * the cells [[NetcdfSource.FillMask]] marks missing. The cursor
   * allocates nothing per cell. */
 private final class NcSelection(val g: NetcdfSource.GridView, val v: String,
-                                latVar: String, lonVar: String, timeVar: String,
-                                pushed: NetcdfV2.NcPushed) {
+                                ax: NcAxes, pushed: NetcdfV2.NcPushed) {
   private val dims = g.dimsOf(v)
   val timed: Boolean =
-    if (dims == Seq(timeVar, latVar, lonVar)) true
-    else if (dims == Seq(latVar, lonVar)) false
+    if (dims == Seq(ax.timeVar, ax.latVar, ax.lonVar)) true
+    else if (dims == Seq(ax.latVar, ax.lonVar)) false
     else throw new IllegalArgumentException(
-      s"unsupported dim layout $dims for '$v' " +
-        s"(expected ($timeVar, $latVar, $lonVar) or ($latVar, $lonVar))")
-  val lats: Array[Double] = g.read(latVar)
-  val lons: Array[Double] = g.read(lonVar)
-  val times: Array[Long] = if (timed) g.timesUs(timeVar) else Array.emptyLongArray
+      s"unsupported dim layout $dims for '$v' (expected " +
+        s"(${ax.timeVar}, ${ax.latVar}, ${ax.lonVar}) or (${ax.latVar}, ${ax.lonVar}))")
+  val lats: Array[Double] = ax.lats
+  val lons: Array[Double] = ax.lons
+  val times: Array[Long] = if (timed) ax.times else Array.emptyLongArray
   val mask: NetcdfSource.FillMask = NetcdfSource.fillMask(g, v)
   val tIdx: Array[Int] =
-    if (timed) times.indices.filter(i => pushed.timeOk(times(i))).toArray
+    if (timed) ax.tIdx
     else if (pushed.timeOkNull) Array(0) else Array.emptyIntArray
-  val laIdx: Array[Int] = lats.indices.filter(i => pushed.latOk(lats(i))).toArray
-  val loIdx: Array[Int] = lons.indices.filter(i => pushed.lonOk(lons(i))).toArray
+  val laIdx: Array[Int] = ax.laIdx
+  val loIdx: Array[Int] = ax.loIdx
 
   // cursor: positions in the index sets, the slab, and the row offset
   // of the current (plane, lat) pair inside it
@@ -1071,12 +1094,34 @@ private object NcSelection {
                lonVar: String, timeVar: String, pushed: NetcdfV2.NcPushed,
                conf: Configuration): Iterator[NcSelection] =
     if (!pushed.dsOk(new Path(path).getName)) Iterator.empty
-    else {
-      val g = NetcdfSource.openGrid(path, conf)
-      vars.getOrElse(g.dataVars(latVar, lonVar, timeVar)).iterator
-        .filter(pushed.varOk)
-        .map(v => new NcSelection(g, v, latVar, lonVar, timeVar, pushed))
-    }
+    else of(NetcdfSource.openGrid(path, conf), vars, latVar, lonVar, timeVar, pushed)
+
+  /** The selections of one opened member. They share one [[NcAxes]],
+    * built with the first selection, so the member's axes decode once. */
+  def of(g: NetcdfSource.GridView, vars: Option[Seq[String]], latVar: String,
+         lonVar: String, timeVar: String,
+         pushed: NetcdfV2.NcPushed): Iterator[NcSelection] = {
+    lazy val ax = new NcAxes(g, latVar, lonVar, timeVar, pushed)
+    vars.getOrElse(g.dataVars(latVar, lonVar, timeVar)).iterator
+      .filter(pushed.varOk)
+      .map(v => new NcSelection(g, v, ax, pushed))
+  }
+}
+
+/** The coordinate axes of one member under the pushed atoms, decoded
+  * once and shared by its [[NcSelection]]s: lat and lon with the index
+  * sets of their atoms, and the CF-decoded time axis with its surviving
+  * planes, decoded only when some selection is timed. */
+private final class NcAxes(g: NetcdfSource.GridView, val latVar: String,
+                           val lonVar: String, val timeVar: String,
+                           pushed: NetcdfV2.NcPushed) {
+  val lats: Array[Double] = g.read(latVar)
+  val lons: Array[Double] = g.read(lonVar)
+  val laIdx: Array[Int] = lats.indices.filter(i => pushed.latOk(lats(i))).toArray
+  val loIdx: Array[Int] = lons.indices.filter(i => pushed.lonOk(lons(i))).toArray
+  lazy val times: Array[Long] = g.timesUs(timeVar)
+  lazy val tIdx: Array[Int] =
+    times.indices.filter(i => pushed.timeOk(times(i))).toArray
 }
 
 /** One member → pruned long-form rows — the only long-form row emitter

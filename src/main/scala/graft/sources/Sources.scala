@@ -1,8 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Source/sink utilities beyond the graded parquet path (SURVEY §2.2):
   * schema-carrying CSV and JSON(L) loaders/writers with the options a
@@ -360,17 +360,11 @@ object Sources {
     // q_source_grid_subset — equality holds iff manifest-build →
     // facet-prune → DSv2 load → pushdown yields exactly the bounded rows.
     "q_source_catalog" -> { (s, dir) =>
-      val tier = tierTag(dir)
-      sharedGridMember(s, dir, "h5") match {
-        case None => emptyGridFingerprint(s)
-        case Some(gridFile) =>
-          val man = s"$roundtripRoot/catalog_$tier"
-          NcCatalog.buildManifest(s, gridFile, man)
-          gridFingerprint(NcCatalog.select(s, man,
-            variable = Some("events"),
-            bounds = Some(NetcdfSource.GridBounds(latMin = 5.0,
-              lonMax = 125.0))))
-      }
+      val man = s"$roundtripRoot/catalog_${tierTag(dir)}"
+      NcCatalog.buildManifest(s, sharedGridMember(s, dir, "h5"), man)
+      gridFingerprint(NcCatalog.select(s, man,
+        variable = Some("events"),
+        bounds = Some(NetcdfSource.GridBounds(latMin = 5.0, lonMax = 125.0))))
     },
     // r15 (VERDICT r14 #6): the reference's real user journey —
     // ARCHIVE FILES IN, ANOMALY OUT — hash-graded through the actual
@@ -392,26 +386,22 @@ object Sources {
     // outside the region are never inflated (law-pinned in
     // NetcdfV2Spec "climate pipeline over the DSv2 source").
     "q_climate_pipeline_nc" -> { (s, dir) =>
-      sharedGridMember(s, dir, "h5") match {
-        case None => emptyPipelineNcResult(s)
-        case Some(gridFile) =>
-          val loaded = s.read.format("netcdf").option("vars", "events")
-            .load(gridFile)
-            .select(col("dataset"), col("time"), col("lat"), col("lon"),
-              col("value"))
-          graft.Ensemble.of(loaded)
-            .subset(5, 25, 90, 135,
-              "2024-01-03 00:00:00", "2024-01-28 00:00:00")
-            .regridBin(20.0, 20.0, agg = "sum")
-            .resample("week", agg = "sum")
-            .anomaly()
-            .select(col("dataset"),
-              date_format(col("time"), "yyyy-MM-dd HH:mm:ss").as("time"),
-              col("lat"), col("lon"),
-              col("value").cast("long").as("value_ct"),
-              col("anomaly"))
-            .orderBy(col("dataset"), col("time"), col("lat"), col("lon"))
-      }
+      val loaded = s.read.format("netcdf").option("vars", "events")
+        .load(sharedGridMember(s, dir, "h5"))
+        .select(col("dataset"), col("time"), col("lat"), col("lon"),
+          col("value"))
+      graft.Ensemble.of(loaded)
+        .subset(5, 25, 90, 135,
+          "2024-01-03 00:00:00", "2024-01-28 00:00:00")
+        .regridBin(20.0, 20.0, agg = "sum")
+        .resample("week", agg = "sum")
+        .anomaly()
+        .select(col("dataset"),
+          date_format(col("time"), "yyyy-MM-dd HH:mm:ss").as("time"),
+          col("lat"), col("lon"),
+          col("value").cast("long").as("value_ct"),
+          col("anomaly"))
+        .orderBy(col("dataset"), col("time"), col("lat"), col("lon"))
     },
     // r15 cont.: the AGGREGATE-PUSHDOWN surface (r14 verdict #3,
     // law-pinned in NetcdfV2Spec) hash-graded end-to-end — a bounded
@@ -423,19 +413,17 @@ object Sources {
     // scan). The oracle recomputes every number from the base events
     // table's observed axes, with each extremum NULLed when the
     // bounded cell set is empty (Spark's min/max over zero rows), a
-    // degeneracy the --one fuzz tier exercises. */
+    // degeneracy the --one fuzz tier exercises; on the --empty tier the
+    // archive has no member, and the scan answers (0, NULL, ...) itself.
     "q_source_dsv2_agg" -> { (s, dir) =>
-      sharedGridMember(s, dir, "h5") match {
-        case None => emptyDsv2AggResult(s)
-        case Some(gridFile) =>
-          s.read.format("netcdf").option("vars", "events").load(gridFile)
-            .filter(col("lat") >= 5.0 && col("lon") <= 125.0)
-            .agg(count(lit(1)).cast("long").as("n_cells"),
-              min(col("lat")).as("lat_min"),
-              max(col("lon")).as("lon_max"),
-              date_format(min(col("time")), "yyyy-MM-dd HH:mm:ss").as("t_min"),
-              date_format(max(col("time")), "yyyy-MM-dd HH:mm:ss").as("t_max"))
-      }
+      s.read.format("netcdf").option("vars", "events")
+        .load(sharedGridMember(s, dir, "h5"))
+        .filter(col("lat") >= 5.0 && col("lon") <= 125.0)
+        .agg(count(lit(1)).cast("long").as("n_cells"),
+          min(col("lat")).as("lat_min"),
+          max(col("lon")).as("lon_max"),
+          date_format(min(col("time")), "yyyy-MM-dd HH:mm:ss").as("t_min"),
+          date_format(max(col("time")), "yyyy-MM-dd HH:mm:ss").as("t_max"))
     },
     // r16 (VERDICT r15 #8): the catalog → MULTI-member ensemble →
     // alignMembers journey hash-graded end-to-end. A 2-member sparse
@@ -451,19 +439,16 @@ object Sources {
     // tier) must align EVERYTHING away — the declaredMembers
     // data-loss-surfacing semantics, graded.
     "q_source_catalog_ensemble" -> { (s, dir) =>
-      sharedEnsembleArchive(s, dir) match {
-        case None => emptyCatalogEnsembleResult(s)
-        case Some(arch) =>
-          val man = s"$arch/_manifest"
-          NcCatalog.buildManifest(s, s"$arch/*.h5", man)
-          graft.Ensemble.fromCatalog(s, man, variable = "events",
-              bounds = Some(NetcdfSource.GridBounds(latMin = 10.0)))
-            .alignMembers(declaredMembers = 2)
-            .df
-            .select(col("dataset"), graft.Det.tstr(col("time")).as("time"),
-              col("lat"), col("lon"), col("value"))
-            .orderBy(col("dataset"), col("time"), col("lat"), col("lon"))
-      }
+      val arch = sharedEnsembleArchive(s, dir)
+      val man = s"$arch/_manifest"
+      NcCatalog.buildManifest(s, arch, man)
+      graft.Ensemble.fromCatalog(s, man, variable = "events",
+          bounds = Some(NetcdfSource.GridBounds(latMin = 10.0)))
+        .alignMembers(declaredMembers = 2)
+        .df
+        .select(col("dataset"), graft.Det.tstr(col("time")).as("time"),
+          col("lat"), col("lon"), col("value"))
+        .orderBy(col("dataset"), col("time"), col("lat"), col("lon"))
     },
     // r16 (VERDICT r15 #3): GROUP BY aggregate pushdown hash-graded —
     // the SAME dense grid split into a 3-member archive (dataset =
@@ -476,19 +461,16 @@ object Sources {
     // row, exactly like SQL. The oracle recomputes every group from
     // the base events table's observed axes.
     "q_source_dsv2_agg_grouped" -> { (s, dir) =>
-      sharedSplitArchive(s, dir) match {
-        case None => emptyDsv2AggGroupedResult(s)
-        case Some(arch) =>
-          s.read.format("netcdf").option("vars", "events").load(s"$arch/*.h5")
-            .filter(col("lat") >= 10.0)
-            .groupBy(col("dataset"))
-            .agg(count(lit(1)).cast("long").as("n_cells"),
-              min(col("lat")).as("lat_min"),
-              max(col("lon")).as("lon_max"),
-              date_format(min(col("time")), "yyyy-MM-dd HH:mm:ss").as("t_min"),
-              date_format(max(col("time")), "yyyy-MM-dd HH:mm:ss").as("t_max"))
-            .orderBy(col("dataset"))
-      }
+      s.read.format("netcdf").option("vars", "events")
+        .load(sharedSplitArchive(s, dir))
+        .filter(col("lat") >= 10.0)
+        .groupBy(col("dataset"))
+        .agg(count(lit(1)).cast("long").as("n_cells"),
+          min(col("lat")).as("lat_min"),
+          max(col("lon")).as("lon_max"),
+          date_format(min(col("time")), "yyyy-MM-dd HH:mm:ss").as("t_min"),
+          date_format(max(col("time")), "yyyy-MM-dd HH:mm:ss").as("t_max"))
+        .orderBy(col("dataset"))
     },
 
     // BUCKETED layout graded end-to-end (r17): both fact tables
@@ -512,45 +494,39 @@ object Sources {
     })
 
   /** The dense grid, written ONCE per (session, tier) as every file
-    * artifact the grid keys read: one [[denseGrid]] evaluation, cached
-    * for the four writes, writes
-    *  - the single-member HDF5 file `grid_h5_<tier>/grid.h5`;
-    *  - its classic-netCDF twin `grid_nc_<tier>/grid.nc`;
-    *  - its Zarr twin, the store `grid_zarr_<tier>/grid.zarr`;
+    * artifact the grid keys read: one [[denseGrid]] evaluation writes
+    *  - the single-member HDF5 archive `grid_h5_<tier>/` (`grid.h5`);
+    *  - its classic-netCDF twin `grid_nc_<tier>/` (`grid.nc`);
+    *  - its Zarr twin `grid_zarr_<tier>/`, holding the store `grid.zarr`;
     *  - the split archive `gridsplit_<tier>`: members m0/m1/m2 by day
     *    mod 3 (tiers with < 3 distinct days yield fewer).
     * Every write goes through the DSv2 sink in overwrite mode, which
-    * truncates every prior member of the destination, so a member an
-    * earlier build at the same path (a regenerated tier) left behind is
-    * never read.
-    * Returns false (nothing written) for an empty-events tier. The
-    * paths embed the tier, so a multi-tier session (specs run sf0.001
-    * and sf0.01 back to back) never reads another tier's files; a
-    * re-run at the same tier overwrites with identical content (the
+    * creates the directory and truncates every prior member in it, so
+    * a member an earlier build at the same path (a regenerated tier)
+    * left behind is never read. An empty-events tier writes each
+    * directory with no member: the keys read it as an empty archive.
+    * The paths embed the tier, so a multi-tier session (specs run
+    * sf0.001 and sf0.01 back to back) never reads another tier's files;
+    * a re-run at the same tier overwrites with identical content (the
     * standing staleness rule above). The graded DSv2 WRITE key does
     * NOT share — writing through the sink under test is the thing it
     * grades. */
-  private def grid(s: SparkSession, dir: String): Boolean =
+  private def grid(s: SparkSession, dir: String): Unit =
     graft.Memo.artifact(s, dir, "grid") {
-      denseGrid(s, dir) match {
-        case None => false
-        case Some((cells, plan)) =>
-          // four writes read the dense grid: cache it, so its three
-          // distinct-axis jobs and the left join run once, not per write
-          val dense = plan.cache()
-          try {
-            val member = gridMembers(dense, lit("grid"))
-            for ((ext, container) <- Seq("h5" -> "hdf5", "nc" -> "classic",
-                "zarr" -> "zarr"))
-              member.write.format("netcdf").option("container", container)
-                .mode("overwrite").save(gridPath(dir, s"grid_$ext"))
-            gridMembers(dense, concat(lit("m"),
-                pmod(datediff(col("day"), lit("1970-01-01")), lit(3)).cast("string")))
-              .write.format("netcdf").option("container", "hdf5")
-              .mode("overwrite").save(gridPath(dir, "gridsplit"))
-            true
-          } finally { dense.unpersist(); cells.unpersist() }
-      }
+      // each of the four writes densifies the cached cells (a small
+      // bounded aggregate); the events scan behind them runs once
+      val (cells, dense) = denseGrid(s, dir)
+      try {
+        val member = gridMembers(dense, lit("grid"))
+        for ((ext, container) <- Seq("h5" -> "hdf5", "nc" -> "classic",
+            "zarr" -> "zarr"))
+          member.write.format("netcdf").option("container", container)
+            .mode("overwrite").save(gridPath(dir, s"grid_$ext"))
+        gridMembers(dense, concat(lit("m"),
+            pmod(datediff(col("day"), lit("1970-01-01")), lit(3)).cast("string")))
+          .write.format("netcdf").option("container", "hdf5")
+          .mode("overwrite").save(gridPath(dir, "gridsplit"))
+      } finally cells.unpersist()
     }
 
   /** The dense grid as the `netcdf` sink's long form: variable
@@ -562,24 +538,28 @@ object Sources {
   private def gridPath(dir: String, name: String): String =
     s"$roundtripRoot/${name}_${tierTag(dir)}"
 
-  /** The shared grid member in one format: `h5`, `nc` or `zarr`. */
-  private def sharedGridMember(s: SparkSession, dir: String,
-                               ext: String): Option[String] =
-    if (grid(s, dir)) Some(s"${gridPath(dir, s"grid_$ext")}/grid.$ext") else None
+  /** The directory of the shared grid member in one format: `h5`, `nc`
+    * or `zarr`. */
+  private def sharedGridMember(s: SparkSession, dir: String, ext: String): String = {
+    grid(s, dir)
+    gridPath(dir, s"grid_$ext")
+  }
 
-  private def sharedSplitArchive(s: SparkSession, dir: String): Option[String] =
-    if (grid(s, dir)) Some(gridPath(dir, "gridsplit")) else None
+  private def sharedSplitArchive(s: SparkSession, dir: String): String = {
+    grid(s, dir)
+    gridPath(dir, "gridsplit")
+  }
 
   /** One SHARED 2-member parity archive per (session, tier) for the
     * catalog-ensemble key: members e0/e1 carry the SPARSE per-parity
     * (day, lat-band, lon-band) counts, written through the DSv2 sink
     * (NaN-fill + declared _FillValue restores exactly the sparse cells
     * on read). A tier with only one parity writes one member — the
-    * align-away case the key grades. */
-  private def sharedEnsembleArchive(s: SparkSession, dir: String): Option[String] = {
+    * align-away case the key grades — and an empty-events tier none. */
+  private def sharedEnsembleArchive(s: SparkSession, dir: String): String = {
     val out = gridPath(dir, "catens")
-    val wrote = graft.Memo.artifact(s, dir, "catalog_ensemble") {
-      val cells = graft.Tables.events(s, dir)
+    graft.Memo.artifact(s, dir, "catalog_ensemble") {
+      graft.Tables.events(s, dir)
         .groupBy(
           concat(lit("e"), (col("event_id") % 2).cast("string")).as("dataset"),
           date_trunc("day", col("ts")).as("time"),
@@ -590,14 +570,10 @@ object Sources {
             .when(col("event_type") === "signup", 3)
             .otherwise(4) * 10).cast("double").as("lon"))
         .agg(count(lit(1)).cast("double").as("value"))
-      if (cells.isEmpty) false
-      else {
-        cells.withColumn("variable", lit("events"))
-          .write.format("netcdf").mode("overwrite").save(out)
-        true
-      }
+        .withColumn("variable", lit("events"))
+        .write.format("netcdf").mode("overwrite").save(out)
     }
-    if (wrote) Some(out) else None
+    out
   }
 
   /** One SHARED pair of BUCKETED catalog tables per (session, tier):
@@ -637,34 +613,14 @@ object Sources {
       .join(s.table(liT), col("o_orderkey") === col("l_orderkey"))
   }
 
-  /** Empty-events tier result for q_source_catalog_ensemble: no
-    * archive, no members, zero aligned cells. */
-  private def emptyCatalogEnsembleResult(s: SparkSession): DataFrame = {
-    s.createDataFrame(s.sparkContext.emptyRDD[Row], StructType(Seq(
-      StructField("dataset", StringType), StructField("time", StringType),
-      StructField("lat", DoubleType), StructField("lon", DoubleType),
-      StructField("value", DoubleType))))
-  }
-
-  /** Empty-events tier result for q_source_dsv2_agg_grouped: GROUP BY
-    * over zero rows emits ZERO rows (no groups — unlike the global
-    * aggregate's single all-NULL row). */
-  private def emptyDsv2AggGroupedResult(s: SparkSession): DataFrame = {
-    s.createDataFrame(s.sparkContext.emptyRDD[Row], StructType(Seq(
-      StructField("dataset", StringType),
-      StructField("n_cells", LongType, nullable = false),
-      StructField("lat_min", DoubleType), StructField("lon_max", DoubleType),
-      StructField("t_min", StringType), StructField("t_max", StringType))))
-  }
-
   /** The dense (day, lat-bucket, lon-bucket) COUNT grid from the
     * tier's events table — DISTRIBUTED (distinct-axis cross join +
-    * left join, no driver collect). Returns None for an empty-events
-    * tier; otherwise the cached cells handle (the CALLER unpersists
-    * after its write actions run) and the dense long-form frame with
-    * the `day` split key still attached. */
+    * left join, no driver collect). Returns the cached cells handle
+    * (the CALLER unpersists after its write actions run) and the dense
+    * long-form frame with the `day` split key still attached; an
+    * empty-events tier gives an empty grid. */
   private[graft] def denseGrid(s: SparkSession, dir: String)
-      : Option[(DataFrame, DataFrame)] = {
+      : (DataFrame, DataFrame) = {
     val cells = graft.Tables.events(s, dir)
       .select(to_date(col("ts")).as("day"),
         (col("user_id") % 3).cast("int").as("latb"),
@@ -675,74 +631,59 @@ object Sources {
           .otherwise(4).as("lonb"))
       .groupBy("day", "latb", "lonb")
       .agg(count(lit(1)).cast("double").as("v"))
-      // read 5× below (isEmpty, three distinct-axis scans, the left
-      // join): cache the one bounded aggregate instead of re-running
-      // the full events scan each time (r12 review find); unpersisted
-      // by the caller — the readback frame reads the FILE, not this
+      // read 4× per densify (three distinct-axis scans, the left join):
+      // cache the one bounded aggregate instead of re-running the full
+      // events scan each time (r12 review find); unpersisted by the
+      // caller — the readback frame reads the FILE, not this
       .cache()
-    if (cells.isEmpty) {
-      // empty-events tier: no grid to write; the oracle's GROUP BY
-      // over zero cells is empty too (a stale file from a previous
-      // tier is never read — the readback is skipped entirely)
-      cells.unpersist()
-      None
-    } else {
-      // densify over the OBSERVED axes (zero-filled): broadcast-sized
-      // distinct-axis frames cross-joined then left-joined back — the
-      // 100 TB shape, no collect
-      val dense = cells.select("day").distinct()
-        .crossJoin(cells.select("latb").distinct())
-        .crossJoin(cells.select("lonb").distinct())
-        .join(cells, Seq("day", "latb", "lonb"), "left")
-        .select(col("day"),
-          col("day").cast("timestamp").as("time"),
-          (col("latb") * 10.0).as("lat"),
-          (lit(100.0) + col("lonb") * 10.0).as("lon"),
-          coalesce(col("v"), lit(0.0)).as("value"))
-      Some((cells, dense))
-    }
+    // densify over the OBSERVED axes (zero-filled): broadcast-sized
+    // distinct-axis frames cross-joined then left-joined back — the
+    // 100 TB shape, no collect
+    val dense = cells.select("day").distinct()
+      .crossJoin(cells.select("latb").distinct())
+      .crossJoin(cells.select("lonb").distinct())
+      .join(cells, Seq("day", "latb", "lonb"), "left")
+      .select(col("day"),
+        col("day").cast("timestamp").as("time"),
+        (col("latb") * 10.0).as("lat"),
+        (lit(100.0) + col("lonb") * 10.0).as("lon"),
+        coalesce(col("v"), lit(0.0)).as("value"))
+    (cells, dense)
   }
 
   /** Write the dense grid as ONE member through the DSv2 `netcdf`
     * format's staging + driver-commit sink, on every call: the write is
     * what q_source_dsv2_write grades, so it never shares [[grid]].
     * Overwrite truncates a previous tier's member so staleness cannot
-    * pass. Returns false (nothing written) for an empty-events tier. */
-  private def writeDenseGrid(s: SparkSession, dir: String, out: String): Boolean =
-    denseGrid(s, dir) match {
-      case None => false
-      case Some((cells, dense)) =>
-        try gridMembers(dense, lit("grid"))
-          .write.format("netcdf").mode("overwrite").save(out)
-        finally cells.unpersist()
-        true
-    }
+    * pass; an empty-events tier leaves `out` with no member. */
+  private def writeDenseGrid(s: SparkSession, dir: String, out: String): Unit = {
+    val (cells, dense) = denseGrid(s, dir)
+    try gridMembers(dense, lit("grid"))
+      .write.format("netcdf").mode("overwrite").save(out)
+    finally cells.unpersist()
+  }
 
   /** Fingerprint of the dense grid read back through `format("netcdf")`
-    * from the shared member in format `ext` (or, for `dsv2Write`, a
-    * fresh sink write),
-    * filtered by `filter` when set — the scan takes its lat/lon/time
-    * atoms as pushed filters. */
+    * from the shared member's directory in format `ext` (or, for
+    * `dsv2Write`, a fresh sink write), filtered by `filter` when set —
+    * the scan takes its lat/lon/time atoms as pushed filters. */
   private def gridRoundtrip(s: SparkSession, dir: String, ext: String,
                             filter: Option[Column] = None,
                             dsv2Write: Boolean = false)
       : DataFrame = {
-    val member: Option[String] =
+    val archive =
       if (dsv2Write) {
         // the write key keeps its own artifact dir: the WRITE is what
         // it grades, so sharing would grade nothing
         val out = s"$roundtripRoot/dsv2w"
-        if (writeDenseGrid(s, dir, out)) Some(s"$out/grid.h5") else None
+        writeDenseGrid(s, dir, out)
+        out
       } else sharedGridMember(s, dir, ext)
-    member match {
-      case None => emptyGridFingerprint(s)
-      case Some(gridFile) =>
-        // Catalyst drives the pruning: the filter is accepted by
-        // SupportsPushDownFilters (Spark-exact, fully handled — no
-        // residual Filter in the plan) and becomes the hyperslab cover
-        val read = s.read.format("netcdf").option("vars", "events").load(gridFile)
-        gridFingerprint(filter.fold(read)(read.where))
-    }
+    // Catalyst drives the pruning: the filter is accepted by
+    // SupportsPushDownFilters (Spark-exact, fully handled — no
+    // residual Filter in the plan) and becomes the hyperslab cover
+    val read = s.read.format("netcdf").option("vars", "events").load(archive)
+    gridFingerprint(filter.fold(read)(read.where))
   }
 
   /** The STREAMING read surface graded as a TRUE multi-batch replay
@@ -771,72 +712,69 @@ object Sources {
     val stage = new java.io.File(root, "stage")
     val land = new java.io.File(root, "land")
     val ckpt = new java.io.File(root, "ckpt")
+    // the sink exists up front: a replay of zero members reads it empty
     val sink = new java.io.File(root, "sink")
-    land.mkdirs()
-    sharedSplitArchive(s, dir) match {
-      case None => emptyGridFingerprint(s)
-      case Some(arch) =>
-        stage.mkdirs()
-        val members = Option(new java.io.File(arch).listFiles()).getOrElse(Array.empty)
-          .filter(m => m.getName.startsWith("m") && m.getName.endsWith(".h5"))
-          .sortBy(_.getName)
-          .map { m =>
-            val staged = new java.io.File(stage, m.getName)
-            java.nio.file.Files.copy(m.toPath, staged.toPath)
-            staged
-          }
-        // rate-limited drain (r16): one file admitted per micro-batch
-        // (SupportsAdmissionControl), AvailableNow loops batches until
-        // the landed backlog is gone — so landing N files at once
-        // still commits N distinct checkpointed batches
-        def runDrain(): Unit = {
-          val q = s.readStream.format("netcdf").option("vars", "events")
-            .option("maxFilesPerTrigger", "1")
-            .load(s"$land/*.h5")
-            .writeStream.format("parquet").option("path", sink.toString)
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
-        members.headOption.foreach { m =>
-          // member 0 lands alone: one batch, then a crash in the
-          // exactly-once window (commit log entry lost after the sink
-          // wrote) and a restart that must WAL-replay it
-          java.nio.file.Files.move(m.toPath,
-            new java.io.File(land, m.getName).toPath)
-          runDrain()
-          val c0 = new java.io.File(ckpt, "commits/0")
-          require(c0.isFile,
-            "netcdf stream replay: batch 0 never committed")
-          require(c0.delete(),
-            "netcdf stream replay: could not remove commits/0")
-          // the local ChecksumFs shadows every log file with a .crc
-          // sibling; a leftover one makes the replay's commit rename
-          // fail as a phantom "concurrent query" — a real crash
-          // loses both, so the simulation must too
-          new java.io.File(ckpt, "commits/.0.crc").delete()
-          runDrain() // restart: WAL replays batch 0, sink log dedups
-          require(new java.io.File(ckpt, "commits/0").isFile,
-            "netcdf stream replay: the restart did not recommit batch 0")
-        }
-        // the remaining members land ALL AT ONCE; admission control
-        // must still split them one-per-batch inside a single run
-        members.drop(1).foreach { m =>
-          java.nio.file.Files.move(m.toPath,
-            new java.io.File(land, m.getName).toPath)
-        }
-        if (members.length > 1) runDrain()
-        // the run provably crossed one committed batch per member —
-        // a silent skip or a phantom extra batch fails by name here
-        val committed = Option(new java.io.File(ckpt, "commits").list())
-          .getOrElse(Array.empty[String])
-          .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).sorted
-        require(committed.toSeq == (0L until members.length.toLong),
-          s"netcdf stream replay: committed batches ${committed.mkString(",")} " +
-            s"for ${members.length} members")
-        gridFingerprint(s.read.schema(org.apache.spark.sql.Encoders
-          .product[NetcdfSource.GridRow].schema).parquet(sink.toString))
+    Seq(stage, land, sink).foreach(_.mkdirs())
+    val members = Option(new java.io.File(sharedSplitArchive(s, dir)).listFiles())
+      .getOrElse(Array.empty)
+      .filter(m => m.getName.startsWith("m") && m.getName.endsWith(".h5"))
+      .sortBy(_.getName)
+      .map { m =>
+        val staged = new java.io.File(stage, m.getName)
+        java.nio.file.Files.copy(m.toPath, staged.toPath)
+        staged
+      }
+    // rate-limited drain (r16): one file admitted per micro-batch
+    // (SupportsAdmissionControl), AvailableNow loops batches until
+    // the landed backlog is gone — so landing N files at once
+    // still commits N distinct checkpointed batches
+    def runDrain(): Unit = {
+      val q = s.readStream.format("netcdf").option("vars", "events")
+        .option("maxFilesPerTrigger", "1")
+        .load(s"$land/*.h5")
+        .writeStream.format("parquet").option("path", sink.toString)
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
     }
+    members.headOption.foreach { m =>
+      // member 0 lands alone: one batch, then a crash in the
+      // exactly-once window (commit log entry lost after the sink
+      // wrote) and a restart that must WAL-replay it
+      java.nio.file.Files.move(m.toPath,
+        new java.io.File(land, m.getName).toPath)
+      runDrain()
+      val c0 = new java.io.File(ckpt, "commits/0")
+      require(c0.isFile,
+        "netcdf stream replay: batch 0 never committed")
+      require(c0.delete(),
+        "netcdf stream replay: could not remove commits/0")
+      // the local ChecksumFs shadows every log file with a .crc
+      // sibling; a leftover one makes the replay's commit rename
+      // fail as a phantom "concurrent query" — a real crash
+      // loses both, so the simulation must too
+      new java.io.File(ckpt, "commits/.0.crc").delete()
+      runDrain() // restart: WAL replays batch 0, sink log dedups
+      require(new java.io.File(ckpt, "commits/0").isFile,
+        "netcdf stream replay: the restart did not recommit batch 0")
+    }
+    // the remaining members land ALL AT ONCE; admission control
+    // must still split them one-per-batch inside a single run
+    members.drop(1).foreach { m =>
+      java.nio.file.Files.move(m.toPath,
+        new java.io.File(land, m.getName).toPath)
+    }
+    if (members.length > 1) runDrain()
+    // the run provably crossed one committed batch per member —
+    // a silent skip or a phantom extra batch fails by name here
+    val committed = Option(new java.io.File(ckpt, "commits").list())
+      .getOrElse(Array.empty[String])
+      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).sorted
+    require(committed.toSeq == (0L until members.length.toLong),
+      s"netcdf stream replay: committed batches ${committed.mkString(",")} " +
+        s"for ${members.length} members")
+    gridFingerprint(s.read.schema(org.apache.spark.sql.Encoders
+      .product[NetcdfSource.GridRow].schema).parquet(sink.toString))
   }
 
   /** Per-latitude fingerprint every grid key grades through. */
@@ -849,35 +787,6 @@ object Sources {
           datediff(to_date(col("time")), lit("1970-01-01")))
           .cast("long").as("t_sig"))
       .orderBy(col("lat"))
-
-  private def emptyGridFingerprint(s: SparkSession): DataFrame = {
-    s.createDataFrame(s.sparkContext.emptyRDD[Row], StructType(Seq(
-      StructField("lat", DoubleType), StructField("n_cells", LongType),
-      StructField("sum_val", LongType), StructField("t_sig", LongType))))
-  }
-
-  /** Empty-events tier result for q_source_dsv2_agg: a global
-    * aggregate always yields ONE row — count 0, every extremum NULL —
-    * exactly what the oracle's aggregate over zero cells emits. */
-  private def emptyDsv2AggResult(s: SparkSession): DataFrame = {
-    s.createDataFrame(
-      java.util.Collections.singletonList(Row(0L, null, null, null, null)),
-      StructType(Seq(
-        StructField("n_cells", LongType, nullable = false),
-        StructField("lat_min", DoubleType), StructField("lon_max", DoubleType),
-        StructField("t_min", StringType), StructField("t_max", StringType))))
-  }
-
-  /** Empty-events tier result for q_climate_pipeline_nc: no grid file
-    * is written, and the oracle's CTE chain over zero cells is empty
-    * too — schema must still match for the driver's column-sorted
-    * compare. */
-  private def emptyPipelineNcResult(s: SparkSession): DataFrame = {
-    s.createDataFrame(s.sparkContext.emptyRDD[Row], StructType(Seq(
-      StructField("dataset", StringType), StructField("time", StringType),
-      StructField("lat", DoubleType), StructField("lon", DoubleType),
-      StructField("value_ct", LongType), StructField("anomaly", DoubleType))))
-  }
 
   val oracle: Map[String, String] = Map(
     // the bucketed-rewrite join vs the same join from the BASE tables

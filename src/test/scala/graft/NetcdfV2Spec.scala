@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{Hdf5Classic, NetcdfClassic, NetcdfV2, ZarrStore}
+import graft.sources.{Hdf5Classic, NcCatalog, NetcdfClassic, NetcdfV2, ZarrStore}
 import graft.sources.NetcdfClassic.{NcAttr, NcDim}
 
 /** The DataSourceV2 `netcdf` format: every pushdown law is equality
@@ -266,6 +266,36 @@ class NetcdfV2Spec extends AnyFunSuite with SparkSuite {
     writeClassic(s"$tmp/m1.nc", nt = 1, bias = 0.0)
     assert(dsv2(s"$tmp/*.nc", Some("tas"))
       .filter(col("dataset") === "absent.nc").count() == 0)
+  }
+
+  test("load(dir) reads a sink directory's members; an emptied one is an empty archive") {
+    val tmp = tmpDir("listing")
+    val rows = longForm(Seq(("x", "tas", ts(0), 0.0, 100.0, 1.0),
+      ("x", "tas", ts(1), 10.0, 110.0, 2.0)))
+    for ((tag, container) <- Seq("h" -> "hdf5", "c" -> "classic", "z" -> "zarr"))
+      rows.withColumn("dataset", lit(tag))
+        .write.format("netcdf").option("container", container)
+        .mode("append").save(tmp)
+    // beside the members: a sink's staging dir (holding a member-named
+    // garbage file) and a catalog manifest — neither is a member
+    val staging = new java.io.File(tmp, ".graft-staging-x"); staging.mkdirs()
+    Files.write(Paths.get(staging.getPath, "g.h5"), Array[Byte](1, 2, 3))
+    val manifest = new java.io.File(tmp, "_manifest"); manifest.mkdirs()
+    Files.write(Paths.get(manifest.getPath, "part-0.json"), "{}".getBytes("UTF-8"))
+    val byPath = spark.read.format("netcdf")
+      .load(s"$tmp/h.h5", s"$tmp/c.nc", s"$tmp/z.zarr")
+    assert(byPath.count() == 6)
+    assertSame(dsv2(tmp), byPath)
+    // an overwrite with no rows truncates every member: zero members
+    rows.limit(0).write.format("netcdf").mode("overwrite").save(tmp)
+    assert(dsv2(tmp).count() == 0)
+    val n = dsv2(tmp).agg(count(lit(1)).as("n"))
+    assert(!hasAggregate(n), "zero members must push completely:\n" +
+      n.queryExecution.optimizedPlan)
+    assert(aggRow(n) == Seq(0L))
+    assert(dsv2(tmp).groupBy("dataset").agg(count(lit(1))).collect().isEmpty)
+    NcCatalog.buildManifest(spark, tmp, manifest.getPath)
+    assert(NcCatalog.catalog(spark, manifest.getPath).count() == 0)
   }
 
   // ---- write side -----------------------------------------------------

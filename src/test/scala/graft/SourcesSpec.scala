@@ -413,7 +413,6 @@ class SourcesSpec extends AnyFunSuite with SparkSuite {
     // the reference encodes each day-mod-3 member straight from the
     // dense cells with the member encoder, outside every Spark sink
     val (cells, dense) = Sources.denseGrid(spark, dir)
-      .getOrElse(fail(s"$dir has no events"))
     val byMember = try dense.select(
         concat(lit("m"), pmod(datediff(col("day"), lit("1970-01-01")),
           lit(3)).cast("string")).as("dataset"),
@@ -480,6 +479,12 @@ class SourcesSpec extends AnyFunSuite with SparkSuite {
     assert(sources.size > 5, "vacuous file list")
     for (f <- sources; word <- Seq("foreachPartition", "binaryFile"))
       assert(!read(f).contains(word), s"$f names $word")
+    // one path for the empty tier: the grid keys build no frame by hand,
+    // and one listing raises "no files match"
+    val grid = read(java.nio.file.Paths.get("src/main/scala/graft/sources/Sources.scala"))
+    for (word <- Seq("emptyRDD", "createDataFrame("))
+      assert(!grid.contains(word), s"Sources.scala names $word")
+    assert(sources.map(f => "no files match".r.findAllIn(read(f)).size).sum == 1)
   }
 
   test("one session builder and one profiler: Session.local is the only builder, Profile the only probe") {

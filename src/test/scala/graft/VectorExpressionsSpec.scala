@@ -66,4 +66,38 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkSuite {
         |FROM emb_t LIMIT 5""".stripMargin).collect()
     assert(r.forall(row => math.abs(row.getDouble(0) - 1.0) < 1e-9))
   }
+
+  test("the k-means, PQ and IVF keys build no trivially true equals predicate") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val warned = new java.util.concurrent.atomic.AtomicInteger()
+    val capture = new AbstractAppender("trivial-eq-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("trivially true equals predicate"))
+          warned.incrementAndGet()
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, Level.WARN, null)
+    ctx.updateLoggers()
+    try {
+      // the capture sees the warning Spark logs for a self-equality
+      col("x") === col("x")
+      assert(warned.get() == 1)
+      warned.set(0)
+      // a fresh session: the memo would otherwise skip the fits' builds
+      val s = spark.newSession()
+      for (k <- Seq("q_vec_kmeans", "q_vec_pq", "q_vec_ann_pq", "q_vec_ann_ivf_det"))
+        SparkEntry.queries(k)(s, dir).collect()
+      assert(warned.get() == 0)
+    } finally {
+      root.removeAppender(capture.getName)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+  }
 }
